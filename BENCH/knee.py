@@ -7,9 +7,10 @@ local[32] on the 32-core host:
           materialized through the Arrow channel and counted by Spark
           (what BENCH/scaling.py measures);
   env   — channel ablation: the same Python-side extraction (words are
-          still computed per document) but only the per-url envelope
-          RecordBatch is yielded, so the words table never crosses the
-          Arrow channel and the JVM never materializes its rows;
+          still computed per document and built into the stage batch)
+          but only the envelope columns of that batch are yielded, so
+          the words never cross the Arrow channel and the JVM never
+          materializes them;
   pool  — JVM ablation: a plain multiprocessing pool running the same
           extract_document over the same payloads, count-only — no
           Spark, no JVM, no Arrow; the host's pure-Python compute
@@ -67,13 +68,8 @@ def run_full(cpus: int, replicate: int) -> dict:
 
 
 def run_env(cpus: int, replicate: int) -> dict:
-    import pyarrow as pa
-
-    from fusus_spark.extraction.pipeline import (
-        _ARROW_STAGE_SCHEMA,
-        _extract_batches_arrow,
-    )
-    from fusus_spark.schema import EXTRACTION_STAGE_SCHEMA
+    from fusus_spark.extraction.pipeline import _extract_batches_arrow
+    from fusus_spark.schema import EXTRACTED_SCHEMA
     from fusus_spark.session import get_spark
 
     spark = get_spark("knee-env", master=f"local[{cpus}]", shuffle_partitions=cpus)
@@ -88,17 +84,16 @@ def run_env(cpus: int, replicate: int) -> dict:
             urls = rb.column(cols["url"]).to_pylist()
             htmls = rb.column(cols["html"]).to_pylist()
             langs = rb.column(cols["lang"]).to_pylist()
-            _words_rb, env_rb, _rem_rb = _extract_batches_arrow(
-                urls, htmls, langs, 4 * 1024 * 1024
-            )
-            yield env_rb  # identical Python work; words never cross Arrow
+            stage_rb = _extract_batches_arrow(urls, htmls, langs, 4 * 1024 * 1024)
+            # identical Python work; words never cross Arrow
+            yield stage_rb.select(EXTRACTED_SCHEMA.fieldNames())
 
     pruned = docs.select("url", "html", "lang")
-    pruned.limit(256).mapInArrow(run, schema=EXTRACTION_STAGE_SCHEMA).count()
+    pruned.limit(256).mapInArrow(run, schema=EXTRACTED_SCHEMA).count()
     wall = float("inf")
     for _ in range(2):
         t0 = time.time()
-        pruned.mapInArrow(run, schema=EXTRACTION_STAGE_SCHEMA).count()
+        pruned.mapInArrow(run, schema=EXTRACTED_SCHEMA).count()
         wall = min(wall, time.time() - t0)
     spark.stop()
     return {"wall_s": round(wall, 3), "n_docs": n}

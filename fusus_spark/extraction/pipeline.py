@@ -10,12 +10,16 @@ Physical design (SURVEY.md §2.10, §4.3):
   RecordBatches and leave as pyarrow arrays built in bulk (input_hint
   compliance; the pandas block-manager round-trip of ``mapInPandas``
   costs ~20% of stage wall at full width, so the stage is Arrow-native);
+* one stage row per document (EXTRACTION_STAGE_SCHEMA): the envelope
+  plus nested ``words``/``removals`` arrays, so a child row never
+  repeats its url; the words and removals tables are a JVM ``inline``
+  of those arrays;
 * skew defense is explicit: ``repartition_salted`` hashes url+salt so
-  one host's pages spread over all tasks; oversized payloads can be
+  one host's pages spread over all tasks; oversized payloads are
   routed to a dedicated pass (``size_route``);
-* empty/error/capped urls still emit exactly one accounting row
-  (word_seq = -1), unlike the reference which writes nothing for empty
-  pages (fusus/page.py:640-647) — at 10^12 documents silent drops are
+* empty/error/capped urls still get their stage row (with empty
+  arrays), unlike the reference which writes nothing for empty pages
+  (fusus/page.py:640-647) — at 10^12 documents silent drops are
   unacceptable.
 """
 
@@ -26,216 +30,85 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from fusus_spark.extraction.extract import (
     DEFAULT_MAX_HTML_BYTES,
     STATUS_EXTRACTED,
     extract_document,
 )
-from fusus_spark.schema import (
-    EXTRACTION_STAGE_SCHEMA,
-    REMOVALS_SCHEMA,
-)
+from fusus_spark.schema import EXTRACTED_SCHEMA, EXTRACTION_STAGE_SCHEMA
 
-_STAGE_COLS = [f.name for f in EXTRACTION_STAGE_SCHEMA.fields]
+_ARROW_STAGE = to_arrow_schema(EXTRACTION_STAGE_SCHEMA)
+*_ENV_FIELDS, _WORDS_FIELD, _REMOVALS_FIELD = _ARROW_STAGE
+# envelope columns taken from the extract_document result (url and lang
+# come from the input batch)
+_RESULT_COLS = [
+    n for n in EXTRACTED_SCHEMA.fieldNames() if n not in ("url", "lang")
+]
 
 
-# Arrow schema mirroring EXTRACTION_STAGE_SCHEMA (IntegerType = int32).
-_ARROW_STAGE_SCHEMA = pa.schema(
-    [
-        ("url", pa.string()),
-        ("lang", pa.string()),
-        ("status", pa.string()),
-        ("block_id", pa.int32()),
-        ("line_id", pa.int32()),
-        ("word_seq", pa.int32()),
-        ("word", pa.string()),
-        ("punc", pa.string()),
-        ("char_start", pa.int32()),
-        ("char_end", pa.int32()),
-        ("n_blocks", pa.int32()),
-        ("n_lines", pa.int32()),
-        ("n_words", pa.int32()),
-        ("n_removed", pa.int32()),
-        ("extracted_text", pa.string()),
-        ("error", pa.string()),
-        ("rule_id", pa.string()),
-        ("node_path", pa.string()),
-        ("kept", pa.bool_()),
-        ("score", pa.float64()),
-        ("guard_ratio", pa.float64()),
-    ]
-)
-
-_I32 = pa.int32()
-_STR = pa.string()
-_F64 = pa.float64()
+def _nested(field: pa.Field, offsets: list[int], columns: list[list]) -> pa.Array:
+    """Flat per-batch element columns + per-document offsets ->
+    one ``list<struct>`` array of ``field``'s type."""
+    struct = field.type.value_type
+    values = pa.StructArray.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, struct)], fields=list(struct)
+    )
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()), values, type=field.type
+    )
 
 
 def _extract_batches_arrow(
     urls: list, htmls: list, langs: list, max_html_bytes: int,
     emit_words: bool = True, charsets: list | None = None,
-) -> tuple[pa.RecordBatch, pa.RecordBatch, pa.RecordBatch]:
-    """One input batch of documents -> (word, envelope, removal rows).
+) -> pa.RecordBatch:
+    """One input batch of documents -> one stage RecordBatch, a row per
+    document.
 
-    Layout: every url emits exactly ONE envelope row (word_seq = -1,
-    carrying status/counts/extracted_text), one row per word
-    (word_seq >= 0, envelope columns null), and one row per
-    boilerplate-removal record (word_seq = -2, REMOVALS columns) — all
-    from a SINGLE ``extract_document`` call, so a job consuming words +
-    stats + removals parses the corpus once, not three times.
-    ``emit_words=False`` skips building the word rows entirely (the
-    dominant accumulator + Arrow payload of the stage) for consumers
-    that only want envelopes/removals; counts on the envelope are
-    unaffected. Arrays
-    are built directly with pyarrow (``pa.array`` on python lists +
-    ``pa.nulls`` for the all-null stretches): at 10^12 scale the
-    words-table materialization dominates this stage, and skipping the
-    pandas block-manager round-trip roughly halves its cost vs
-    ``mapInPandas``.
+    Each row carries the envelope (status/counts/extracted_text) plus
+    the document's words and boilerplate-removal records as nested
+    arrays — all from a SINGLE ``extract_document`` call, so a job
+    consuming words + stats + removals parses the corpus once, not
+    three times. The element columns are filled flat over the whole
+    batch with one offsets list per array, and the arrays are built in
+    bulk (no pandas block-manager round-trip, ~half the cost of
+    ``mapInPandas`` for the words payload that dominates this stage).
+    ``emit_words=False`` leaves ``words`` empty (the dominant
+    accumulator + Arrow payload) for consumers that only want
+    envelopes/removals; counts on the envelope are unaffected.
     """
-    # word-row accumulators
-    w_url: list[str] = []
-    w_block: list[int] = []
-    w_line: list[int] = []
-    w_seq: list[int] = []
-    w_word: list[str] = []
-    w_punc: list[str] = []
-    w_cs: list[int] = []
-    w_ce: list[int] = []
-    # envelope-row accumulators (one per url)
-    e_status: list[str] = []
-    e_blocks: list[int] = []
-    e_lines: list[int] = []
-    e_words: list[int] = []
-    e_removed: list[int] = []
-    e_text: list[str | None] = []
-    e_err: list[str | None] = []
-    # removal-row accumulators (one per markData record)
-    r_url: list[str] = []
-    r_rule: list[str] = []
-    r_path: list[str] = []
-    r_kept: list[bool] = []
-    r_score: list[float] = []
-    r_guard: list[float] = []
+    env: dict[str, list] = {name: [] for name in _RESULT_COLS}
+    words: list[list] = [[] for _ in _WORDS_FIELD.type.value_type]
+    removals: list[list] = [[] for _ in _REMOVALS_FIELD.type.value_type]
+    w_off, r_off = [0], [0]
 
-    for url, html, lang, cs in zip(
-        urls, htmls, langs, charsets or [None] * len(urls)
-    ):
+    for html, lang, cs in zip(htmls, langs, charsets or [None] * len(urls)):
         res = extract_document(
             html, lang=lang, charset=cs, max_html_bytes=max_html_bytes
         )
-        for rule_id, node_path, kept, score, guard in res["removals"]:
-            r_url.append(url)
-            r_rule.append(rule_id)
-            r_path.append(node_path)
-            r_kept.append(kept)
-            r_score.append(score)
-            r_guard.append(guard)
-        rows = res["words"]
-        if rows and emit_words:
-            bl, ln, sq, wd, pc, cs, ce = zip(*rows)
-            n = len(rows)
-            w_url.extend([url] * n)
-            w_block.extend(bl)
-            w_line.extend(ln)
-            w_seq.extend(sq)
-            w_word.extend(wd)
-            w_punc.extend(pc)
-            w_cs.extend(cs)
-            w_ce.extend(ce)
-        e_status.append(res["status"])
-        e_blocks.append(res["n_blocks"])
-        e_lines.append(res["n_lines"])
-        e_words.append(res["n_words"])
-        e_removed.append(res["n_removed"])
-        e_text.append(res["extracted_text"] if rows else None)
-        e_err.append(res["error"])
+        if not res["words"]:  # empty/error pages carry a null text
+            res["extracted_text"] = None
+        for name, col in env.items():
+            col.append(res[name])
+        for rows, cols, off in (
+            (res["words"] if emit_words else [], words, w_off),
+            (res["removals"], removals, r_off),
+        ):
+            for col, vals in zip(cols, zip(*rows)):
+                col.extend(vals)
+            off.append(off[-1] + len(rows))
 
-    nw, ne, nr = len(w_url), len(urls), len(r_url)
-    # lang/status live on the envelope row only: repeating them per word
-    # would cost 2 string cells x rows in the Arrow channel; the removal
-    # columns are pa.nulls on word/envelope rows (a validity bitmap, not
-    # data — widening the schema costs ~nothing in the Arrow channel).
-    words_rb = pa.RecordBatch.from_arrays(
-        [
-            pa.array(w_url, _STR),
-            pa.nulls(nw, _STR),          # lang
-            pa.nulls(nw, _STR),          # status
-            pa.array(w_block, _I32),
-            pa.array(w_line, _I32),
-            pa.array(w_seq, _I32),
-            pa.array(w_word, _STR),
-            pa.array(w_punc, _STR),
-            pa.array(w_cs, _I32),
-            pa.array(w_ce, _I32),
-            pa.nulls(nw, _I32),          # n_blocks
-            pa.nulls(nw, _I32),          # n_lines
-            pa.nulls(nw, _I32),          # n_words
-            pa.nulls(nw, _I32),          # n_removed
-            pa.nulls(nw, _STR),          # extracted_text
-            pa.nulls(nw, _STR),          # error
-            pa.nulls(nw, _STR),          # rule_id
-            pa.nulls(nw, _STR),          # node_path
-            pa.nulls(nw, pa.bool_()),    # kept
-            pa.nulls(nw, _F64),          # score
-            pa.nulls(nw, _F64),          # guard_ratio
+    cols = {"url": urls, "lang": langs, **env}
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[f.name], f.type) for f in _ENV_FIELDS]
+        + [
+            _nested(_WORDS_FIELD, w_off, words),
+            _nested(_REMOVALS_FIELD, r_off, removals),
         ],
-        schema=_ARROW_STAGE_SCHEMA,
+        schema=_ARROW_STAGE,
     )
-    env_rb = pa.RecordBatch.from_arrays(
-        [
-            pa.array(urls, _STR),
-            pa.array(langs, _STR),
-            pa.array(e_status, _STR),
-            pa.nulls(ne, _I32),          # block_id
-            pa.nulls(ne, _I32),          # line_id
-            pa.array([-1] * ne, _I32),   # word_seq marks the envelope
-            pa.nulls(ne, _STR),          # word
-            pa.nulls(ne, _STR),          # punc
-            pa.nulls(ne, _I32),          # char_start
-            pa.nulls(ne, _I32),          # char_end
-            pa.array(e_blocks, _I32),
-            pa.array(e_lines, _I32),
-            pa.array(e_words, _I32),
-            pa.array(e_removed, _I32),
-            pa.array(e_text, _STR),
-            pa.array(e_err, _STR),
-            pa.nulls(ne, _STR),          # rule_id
-            pa.nulls(ne, _STR),          # node_path
-            pa.nulls(ne, pa.bool_()),    # kept
-            pa.nulls(ne, _F64),          # score
-            pa.nulls(ne, _F64),          # guard_ratio
-        ],
-        schema=_ARROW_STAGE_SCHEMA,
-    )
-    rem_rb = pa.RecordBatch.from_arrays(
-        [
-            pa.array(r_url, _STR),
-            pa.nulls(nr, _STR),          # lang
-            pa.nulls(nr, _STR),          # status
-            pa.nulls(nr, _I32),          # block_id
-            pa.nulls(nr, _I32),          # line_id
-            pa.array([-2] * nr, _I32),   # word_seq marks removal rows
-            pa.nulls(nr, _STR),          # word
-            pa.nulls(nr, _STR),          # punc
-            pa.nulls(nr, _I32),          # char_start
-            pa.nulls(nr, _I32),          # char_end
-            pa.nulls(nr, _I32),          # n_blocks
-            pa.nulls(nr, _I32),          # n_lines
-            pa.nulls(nr, _I32),          # n_words
-            pa.nulls(nr, _I32),          # n_removed
-            pa.nulls(nr, _STR),          # extracted_text
-            pa.nulls(nr, _STR),          # error
-            pa.array(r_rule, _STR),
-            pa.array(r_path, _STR),
-            pa.array(r_kept, pa.bool_()),
-            pa.array(r_score, _F64),
-            pa.array(r_guard, _F64),
-        ],
-        schema=_ARROW_STAGE_SCHEMA,
-    )
-    return words_rb, env_rb, rem_rb
 
 
 def extract_stage(
@@ -250,11 +123,11 @@ def extract_stage(
     carries it (the transport-layer decode hint the WARC envelope
     retains; consulted only when strict UTF-8 fails) — column pruning
     keeps warc_ts/text out of the Arrow channel (the reference's
-    minimal=True page handle analog, fusus/page.py:98-99). ``emit_words=False`` drops the word
-    row kind at the source for envelope/removals-only consumers: the
-    words table dominates the stage's accumulator + Arrow cost, and a
-    removals query that builds it only to filter it out would pay the
-    whole bill at 100 TB.
+    minimal=True page handle analog, fusus/page.py:98-99).
+    ``emit_words=False`` leaves every ``words`` array empty for
+    envelope/removals-only consumers: the words dominate the stage's
+    accumulator + Arrow cost, and a removals query that built them only
+    to drop them would pay the whole bill at 100 TB.
     """
     has_charset = "charset" in docs.columns
     pruned = docs.select(
@@ -272,57 +145,33 @@ def extract_stage(
             charsets = (
                 rb.column(cols["charset"]).to_pylist() if has_charset else None
             )
-            words_rb, env_rb, rem_rb = _extract_batches_arrow(
+            yield _extract_batches_arrow(
                 urls, htmls, langs, max_html_bytes, emit_words, charsets
             )
-            if words_rb.num_rows:
-                yield words_rb
-            yield env_rb
-            if rem_rb.num_rows:
-                yield rem_rb
 
     return pruned.mapInArrow(run, schema=EXTRACTION_STAGE_SCHEMA)
 
 
 def words_from_stage(stage: DataFrame) -> DataFrame:
     """Stage rows -> the words table (one row per word, WORDS_SCHEMA)."""
-    return stage.where(F.col("word_seq") >= 0).select(
-        "url", "block_id", "line_id", "word_seq", "word", "punc",
-        "char_start", "char_end",
-    )
+    return stage.select("url", F.inline("words"))
 
 
 def extracted_from_stage(stage: DataFrame) -> DataFrame:
-    """Stage rows -> per-url envelope (EXTRACTED_SCHEMA order).
-
-    Exactly one row per url (the word_seq = -1 envelope row), including
-    empty/error/capped urls.
-    """
-    env = stage.where(F.col("word_seq") == -1)
-    return env.select(
-        "url",
-        "status",
-        "lang",
-        F.coalesce("n_blocks", F.lit(0)).alias("n_blocks"),
-        F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
-        F.coalesce("n_words", F.lit(0)).alias("n_words"),
-        F.coalesce("n_removed", F.lit(0)).alias("n_removed"),
-        "extracted_text",
-        "error",
-    )
+    """Stage rows -> per-url envelope (EXTRACTED_SCHEMA): exactly one
+    row per url, including empty/error/capped urls."""
+    return stage.select(*EXTRACTED_SCHEMA.fieldNames())
 
 
 def removals_from_stage(stage: DataFrame) -> DataFrame:
     """Stage rows -> removal diagnostics (markData analog,
-    REMOVALS_SCHEMA): the word_seq = -2 rows of the fused pass."""
-    return stage.where(F.col("word_seq") == -2).select(
-        *[f.name for f in REMOVALS_SCHEMA.fields]
-    )
+    REMOVALS_SCHEMA), one row per record of the fused pass."""
+    return stage.select("url", F.inline("removals"))
 
 
 def extract_removals(docs: DataFrame, *, max_html_bytes: int = DEFAULT_MAX_HTML_BYTES) -> DataFrame:
     """documents -> removal diagnostics via the SAME fused ``mapInArrow``
-    pass that produces words and envelopes — a job wanting words + stats
+    stage that produces words and envelopes — a job wanting words + stats
     + removals parses each document exactly once (the reference writes
     markData inside the same per-page pass, fusus/page.py:927-1017;
     round-2's standalone re-parse doubled the 100-TB scan).
@@ -382,42 +231,30 @@ def extract_all(
     *,
     num_partitions: int | None = None,
     max_html_bytes: int = DEFAULT_MAX_HTML_BYTES,
-    route_oversize: bool = True,
-    big_bytes: int = 1 * 1024 * 1024,
 ) -> DataFrame:
     """End-to-end: documents -> extraction stage.
 
-    Default path (the one entry()/extract_words run): size_route — the
-    oversize lane keeps giants out of the common lane's Arrow batches,
-    each lane salted-repartitioned. Cost note for the 100-TB plan: the
-    two lanes each filter the source, so a columnar store scans the
-    html column twice; that is the deliberate trade against a giant
-    serializing a whole common-lane task (parse cost dominates scan
-    cost ~10:1 for web HTML). route_oversize=False restores the
-    single-scan salted repartition for inputs known to be size-capped
-    upstream.
+    With ``num_partitions`` (the path entry()/extract_words run):
+    size_route — the 1 MiB oversize lane keeps giants out of the common
+    lane's Arrow batches, each lane salted-repartitioned. Cost note for
+    the 100-TB plan: the two lanes each filter the source, so a
+    columnar store scans the html column twice; that is the deliberate
+    trade against a giant serializing a whole common-lane task (parse
+    cost dominates scan cost ~10:1 for web HTML).
     """
     if num_partitions:
-        if route_oversize:
-            return size_route(
-                docs,
-                big_bytes=big_bytes,
-                big_partitions=max(num_partitions // 8, 1),
-                small_partitions=num_partitions,
-                max_html_bytes=max_html_bytes,
-            )
-        docs = repartition_salted(docs, num_partitions)
+        return size_route(
+            docs,
+            big_partitions=max(num_partitions // 8, 1),
+            small_partitions=num_partitions,
+            max_html_bytes=max_html_bytes,
+        )
     return extract_stage(docs, max_html_bytes=max_html_bytes)
 
 
 def count_extracted(stage: DataFrame) -> dict[str, int]:
     """Driver-side accounting (A4/A5 metrics analog): status counts."""
-    rows = (
-        stage.where(F.col("word_seq") == -1)
-        .groupBy("status")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
+    rows = stage.groupBy("status").agg(F.count("*").alias("n")).collect()
     out = {r["status"]: r["n"] for r in rows}
     out.setdefault(STATUS_EXTRACTED, 0)
     return out

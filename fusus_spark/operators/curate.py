@@ -847,20 +847,23 @@ def corpus_report(
     lang_col: str = "lang",
     url_col: str | None = None,
 ) -> DataFrame:
-    """The dataset-card rollup: per-language corpus accounting plus an
-    ALL total, in one pass — (scope, n_docs, n_empty, n_hosts,
+    """The dataset-card rollup: per-language corpus accounting plus a
+    total, in one pass — (scope, is_total, n_docs, n_empty, n_hosts,
     tokens_total, chars_total, bytes_total, avg_tokens_e4).
 
-    ``scope`` is the language tag ('unknown' for null), with one
-    'ALL' row from the same aggregation via ``rollup`` (GROUPING
-    SETS — partial+final agg, no second scan). ``n_hosts`` counts
+    ``scope`` is the raw language tag (null for null lang); the total
+    row comes from the same aggregation via ``rollup`` (GROUPING SETS —
+    partial+final agg, no second scan) and is marked structurally by
+    ``is_total`` (``grouping(lang)``, scope null), so no language value
+    — not even a literal 'ALL' or 'unknown' tag — can collide with it
+    or with the null-lang row. ``n_hosts`` counts
     distinct registrable hosts when ``url_col`` is given (the
     provenance-diversity number a dataset card reports; EXACT
     count_distinct — the HLL sketch answer is engine-specific and
     would break the oracle), else null. ``avg_tokens_e4`` is the
     house scaled-bigint spelling (round(tokens/docs * 10^4)).
-    'ALL' sorts first, then languages by n_docs desc with a scope
-    tie-break — deterministic.
+    The total sorts first, then languages by n_docs desc with a scope
+    tie-break (null last) — deterministic.
 
     One rollup aggregation = one shuffle (count_distinct adds the
     Expand, the standard two-phase distinct agg — still bounded by
@@ -875,14 +878,14 @@ def corpus_report(
     txt = F.col(text_col)
     toks = token_count(text_col)
     # a corpus without the language column still gets its card — every
-    # doc lands in the 'unknown' scope (review finding: the job-level
-    # report tier must not die after all the expensive tiers ran)
+    # doc lands in the null scope (review finding: the job-level report
+    # tier must not die after all the expensive tiers ran)
     lang = (
         F.col(lang_col) if lang_col in docs.columns
         else F.lit(None).cast("string")
     )
     grouped = docs.select(
-        F.coalesce(lang, F.lit("unknown")).alias("_lang"),
+        lang.alias("_lang"),
         # norm_ws-empty, not trim-empty: Spark/DuckDB trim strip only
         # 0x20, so a tabs-and-newlines doc would slip past a bare trim
         F.when(txt.isNull() | (F.length(norm_ws(text_col)) == 0), 1)
@@ -901,6 +904,7 @@ def corpus_report(
         ),
     ).rollup("_lang")
     aggs = [
+        (F.grouping("_lang") == 1).alias("is_total"),
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("_empty").cast("bigint").alias("n_empty"),
         (
@@ -913,9 +917,8 @@ def corpus_report(
         F.sum("_bytes").cast("bigint").alias("bytes_total"),
     ]
     out = grouped.agg(*aggs).select(
-        F.when(F.col("_lang").isNull(), "ALL").otherwise(F.col("_lang")).alias(
-            "scope"
-        ),
+        F.col("_lang").alias("scope"),
+        "is_total",
         "n_docs",
         "n_empty",
         "n_hosts",
@@ -927,7 +930,5 @@ def corpus_report(
         .alias("avg_tokens_e4"),
     )
     return out.orderBy(
-        F.when(F.col("scope") == "ALL", 0).otherwise(1),
-        F.col("n_docs").desc(),
-        "scope",
+        F.col("is_total").desc(), F.col("n_docs").desc(), F.col("scope").asc_nulls_last()
     )

@@ -58,40 +58,6 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-# Combined wide stage emitted by the fused extraction UDF: one row per
-# word plus the per-url envelope columns (status/extracted_text repeated
-# per word; empty/error urls emit exactly one row with word_seq = -1 so
-# accounting never loses a url) plus one row per boilerplate-removal
-# record (word_seq = -2 carrying the REMOVALS columns) — all three row
-# kinds come out of ONE parse, mirroring the reference writing markData
-# inside the same per-page pass (fusus/page.py:927-1017). Downstream
-# splits into WORDS / EXTRACTED / REMOVALS.
-EXTRACTION_STAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("lang", T.StringType(), True),  # envelope rows only
-        T.StructField("status", T.StringType(), True),  # envelope rows only
-        T.StructField("block_id", T.IntegerType(), True),
-        T.StructField("line_id", T.IntegerType(), True),
-        T.StructField("word_seq", T.IntegerType(), True),
-        T.StructField("word", T.StringType(), True),
-        T.StructField("punc", T.StringType(), True),
-        T.StructField("char_start", T.IntegerType(), True),
-        T.StructField("char_end", T.IntegerType(), True),
-        T.StructField("n_blocks", T.IntegerType(), True),
-        T.StructField("n_lines", T.IntegerType(), True),
-        T.StructField("n_words", T.IntegerType(), True),
-        T.StructField("n_removed", T.IntegerType(), True),
-        T.StructField("extracted_text", T.StringType(), True),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("rule_id", T.StringType(), True),  # removal rows only
-        T.StructField("node_path", T.StringType(), True),
-        T.StructField("kept", T.BooleanType(), True),
-        T.StructField("score", T.DoubleType(), True),
-        T.StructField("guard_ratio", T.DoubleType(), True),
-    ]
-)
-
 # Diagnostics: boilerplate removal records (markData analog,
 # fusus/page.py:37-49, 927-983): every removed or kept-candidate node.
 REMOVALS_SCHEMA = T.StructType(
@@ -102,6 +68,28 @@ REMOVALS_SCHEMA = T.StructType(
         T.StructField("kept", T.BooleanType(), False),
         T.StructField("score", T.DoubleType(), False),
         T.StructField("guard_ratio", T.DoubleType(), False),
+    ]
+)
+
+
+def _without_url(schema: T.StructType) -> T.StructType:
+    return T.StructType([f for f in schema.fields if f.name != "url"])
+
+
+# The fused extraction stage: ONE row per input document — the
+# EXTRACTED envelope (empty/error/capped urls included, so accounting
+# never loses a url) plus that document's words and boilerplate-removal
+# records as nested arrays, all out of one parse, mirroring the
+# reference writing markData inside the same per-page pass
+# (fusus/page.py:927-1017). The element structs are WORDS / REMOVALS
+# minus the parent url; the split into the three tables is a JVM
+# ``inline`` (pipeline.py). Arrays and elements are non-nullable so the
+# inlined columns keep the WORDS / REMOVALS nullability.
+EXTRACTION_STAGE_SCHEMA = T.StructType(
+    EXTRACTED_SCHEMA.fields
+    + [
+        T.StructField("words", T.ArrayType(_without_url(WORDS_SCHEMA), False), False),
+        T.StructField("removals", T.ArrayType(_without_url(REMOVALS_SCHEMA), False), False),
     ]
 )
 

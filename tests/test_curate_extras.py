@@ -404,6 +404,8 @@ def _report_corpus() -> list[tuple[str, str, str]]:
         ("http://c.com/3", "fr", "  \n\t "),   # whitespace-only = empty
         ("http://c.com/4", "en", "héllo bytes"),  # bytes > chars
         ("not a url", "en", "malformed url"),     # no phantom host
+        ("http://d.com/1", "ALL", "literal all tag"),          # not a total
+        ("http://d.com/2", "unknown", "literal unknown tag"),  # not null lang
     ]
     return rows
 
@@ -415,26 +417,34 @@ def test_corpus_report_hand_cases(spark):
         _report_corpus(), "url string, lang string, text string"
     )
     got = corpus_report(df, url_col="url").collect()
-    assert got[0]["scope"] == "ALL"              # total row sorts first
-    al = got[0]
-    assert al["n_docs"] == 9 and al["n_empty"] == 2
-    assert al["n_hosts"] == 3                    # '' host never counted
-    assert al["tokens_total"] == 3 + 2 + 3 + 2 + 3 + 0 + 0 + 2 + 2
+    al = got[0]                                  # total row sorts first
+    assert al["is_total"] and al["scope"] is None
+    assert [r["is_total"] for r in got[1:]] == [False] * 6  # one total only
+    assert al["n_docs"] == 11 and al["n_empty"] == 2
+    assert al["n_hosts"] == 4                    # '' host never counted
+    assert al["tokens_total"] == 3 + 2 + 3 + 2 + 3 + 0 + 0 + 2 + 2 + 3 + 3
     by = {r["scope"]: r for r in got[1:]}
-    assert set(by) == {"en", "de", "fr", "unknown"}
+    assert set(by) == {"en", "de", "fr", "ALL", "unknown", None}
     assert by["en"]["n_docs"] == 5 and by["en"]["n_hosts"] == 3
     assert by["en"]["tokens_total"] == 12
     assert by["en"]["avg_tokens_e4"] == 24_000   # 12/5 * 1e4
     assert by["de"]["n_docs"] == 2 and by["de"]["n_empty"] == 1
     assert by["fr"]["n_empty"] == 1 and by["fr"]["tokens_total"] == 0
-    assert by["unknown"]["n_docs"] == 1
-    # ordering after ALL: n_docs desc, scope asc tie-break
-    assert [r["scope"] for r in got] == ["ALL", "en", "de", "fr", "unknown"]
+    # literal tags are plain languages: 'ALL' is no second total and
+    # 'unknown' does not merge with the null-lang row
+    assert by["ALL"]["n_docs"] == 1 and by["ALL"]["tokens_total"] == 3
+    assert by["unknown"]["n_docs"] == 1 and by[None]["n_docs"] == 1
+    # ordering after the total: n_docs desc, scope asc (null last) tie-break
+    assert [r["scope"] for r in got] == [
+        None, "en", "de", "ALL", "fr", "unknown", None
+    ]
 
     # without url_col: n_hosts null, everything else identical
     no_host = corpus_report(df).collect()
     assert all(r["n_hosts"] is None for r in no_host)
-    assert [r["scope"] for r in no_host] == [r["scope"] for r in got]
+    assert [(r["is_total"], r["scope"]) for r in no_host] == [
+        (r["is_total"], r["scope"]) for r in got
+    ]
 
 
 def test_corpus_report_matches_duckdb_oracle(spark):
@@ -455,7 +465,7 @@ def test_corpus_report_matches_duckdb_oracle(spark):
     norm = "trim(regexp_replace(text, '\\s+', ' ', 'g'))"
     orc = con.sql(f"""
 WITH base AS (
-  SELECT coalesce(lang, 'unknown') AS _lang,
+  SELECT lang AS _lang,
     CASE WHEN text IS NULL OR length(trim(regexp_replace(text, '\\s+', ' ', 'g'))) = 0 THEN 1 ELSE 0 END AS _empty,
     CASE WHEN length({norm}) = 0 THEN 0
          ELSE len(string_split({norm}, ' ')) END AS _toks,
@@ -465,7 +475,8 @@ WITH base AS (
   FROM docs
 ),
 g AS (
-  SELECT CASE WHEN GROUPING(_lang) = 1 THEN 'ALL' ELSE _lang END AS scope,
+  SELECT _lang AS scope,
+    GROUPING(_lang) = 1 AS is_total,
     count(*) AS n_docs,
     sum(_empty)::BIGINT AS n_empty,
     count(DISTINCT _host)::BIGINT AS n_hosts,
@@ -476,7 +487,7 @@ g AS (
 )
 SELECT *, round(tokens_total * 10000 / n_docs)::BIGINT AS avg_tokens_e4
 FROM g
-ORDER BY CASE WHEN scope = 'ALL' THEN 0 ELSE 1 END, n_docs DESC, scope
+ORDER BY is_total DESC, n_docs DESC, scope NULLS LAST
 """)
     orows = [tuple(r) for r in orc.fetchall()]
     assert len(srows) == len(orows) > 0

@@ -366,9 +366,16 @@ def test_curate_job_canonical_tier(spark, tmp_path):
                 canonical_scope="domain")
 
 
+def _read_report(spark, path: str):
+    """report parquet -> (the total row, {scope: language row})."""
+    rows = spark.read.parquet(path).collect()
+    (total,) = [r for r in rows if r["is_total"]]
+    return total, {r["scope"]: r for r in rows if not r["is_total"]}
+
+
 def test_curate_job_report_tier(spark, tmp_path):
     """Opt-in tier 9: the dataset-card rollup lands beside the corpus
-    with the ALL row agreeing with n_final and the per-language docs
+    with the total row agreeing with n_final and the per-language docs
     summing to it."""
     inp = str(tmp_path / "docs9")
     out = str(tmp_path / "out9")
@@ -382,17 +389,17 @@ def test_curate_job_report_tier(spark, tmp_path):
     ).write.parquet(inp)
 
     summary = run_job(spark, input_path=inp, output_path=out, write_report=True)
-    assert summary["n_report_scopes"] == 3          # ALL + en + de
-    rep = {r["scope"]: r for r in spark.read.parquet(f"{out}/report").collect()}
-    assert rep["ALL"]["n_docs"] == summary["n_final"]
-    assert rep["en"]["n_docs"] + rep["de"]["n_docs"] == rep["ALL"]["n_docs"]
-    assert rep["ALL"]["n_hosts"] is None            # no url column
-    assert rep["ALL"]["tokens_total"] == rep["en"]["tokens_total"] + rep["de"]["tokens_total"]
+    assert summary["n_report_scopes"] == 3          # total + en + de
+    total, rep = _read_report(spark, f"{out}/report")
+    assert total["n_docs"] == summary["n_final"]
+    assert rep["en"]["n_docs"] + rep["de"]["n_docs"] == total["n_docs"]
+    assert total["n_hosts"] is None                 # no url column
+    assert total["tokens_total"] == rep["en"]["tokens_total"] + rep["de"]["tokens_total"]
 
 
 def test_curate_job_report_without_lang_and_with_mixture(spark, tmp_path):
     """The report tier tolerates a (doc_id, text)-only corpus (every
-    doc in the 'unknown' scope) and, when the mixture tier ran,
+    doc in the null scope) and, when the mixture tier ran,
     describes the SHIPPED sample rather than the full corpus."""
     inp = str(tmp_path / "docs9b")
     out = str(tmp_path / "out9b")
@@ -400,9 +407,9 @@ def test_curate_job_report_without_lang_and_with_mixture(spark, tmp_path):
             for i in range(12)]
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(inp)
     summary = run_job(spark, input_path=inp, output_path=out, write_report=True)
-    rep = {r["scope"]: r for r in spark.read.parquet(f"{out}/report").collect()}
-    assert set(rep) == {"ALL", "unknown"}
-    assert rep["ALL"]["n_docs"] == summary["n_final"] == 12
+    total, rep = _read_report(spark, f"{out}/report")
+    assert set(rep) == {None}
+    assert total["n_docs"] == rep[None]["n_docs"] == summary["n_final"] == 12
 
     inp2 = str(tmp_path / "docs9c")
     out2 = str(tmp_path / "out9c")
@@ -415,6 +422,6 @@ def test_curate_job_report_without_lang_and_with_mixture(spark, tmp_path):
         spark, input_path=inp2, output_path=out2,
         mixture_budget=10, write_report=True,
     )
-    rep2 = {r["scope"]: r for r in spark.read.parquet(f"{out2}/report").collect()}
-    assert rep2["ALL"]["n_docs"] == summary2["n_sampled"]  # the shipped data
-    assert rep2["ALL"]["n_docs"] < summary2["n_final"]
+    total2, _ = _read_report(spark, f"{out2}/report")
+    assert total2["n_docs"] == summary2["n_sampled"]  # the shipped data
+    assert total2["n_docs"] < summary2["n_final"]

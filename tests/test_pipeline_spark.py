@@ -94,16 +94,17 @@ def test_removals_diagnostics(spark):
 
 
 def test_emit_words_false_keeps_envelope_counts(spark):
-    """extract_stage(emit_words=False): no word rows cross the Arrow
-    channel, but envelopes (incl. n_words) and removals are identical
-    to the full stage — the removals-only fast path contract."""
+    """extract_stage(emit_words=False): every words array is empty, so
+    no word crosses the Arrow channel, but envelopes (incl. n_words)
+    and removals are identical to the full stage — the removals-only
+    fast path contract."""
     from fusus_spark.extraction.pipeline import extract_stage, removals_from_stage
 
     docs = _docs_df(spark)
     full = extract_stage(docs, max_html_bytes=CAP)
     slim = extract_stage(docs, max_html_bytes=CAP, emit_words=False)
-    assert slim.where(F.col("word_seq") >= 0).count() == 0
-    assert full.where(F.col("word_seq") >= 0).count() > 0
+    assert slim.where(F.size("words") > 0).count() == 0
+    assert full.where(F.size("words") > 0).count() > 0
     env_cols = ["url", "status", "n_blocks", "n_lines", "n_words", "n_removed"]
     a = extracted_from_stage(full).select(env_cols)
     b = extracted_from_stage(slim).select(env_cols)
@@ -111,6 +112,47 @@ def test_emit_words_false_keeps_envelope_counts(spark):
     ra = removals_from_stage(full)
     rb = removals_from_stage(slim)
     assert ra.exceptAll(rb).count() == 0 and rb.exceptAll(ra).count() == 0
+
+
+def test_stage_one_row_per_document(spark):
+    """The stage carries ONE row per input url — empty, error and
+    capped documents included — with the document's words and removal
+    records nested in it, and the split frames keep the table schemas
+    (names, types, nullability) exactly."""
+    from fusus_spark.extraction.extract import extract_document
+    from fusus_spark.extraction.pipeline import extract_stage, removals_from_stage
+    from fusus_spark.schema import EXTRACTED_SCHEMA, REMOVALS_SCHEMA, WORDS_SCHEMA
+
+    rows = [(d["url"], d["html"], d["lang"], None) for d in fixture_documents()]
+    # a NUL charset hint on non-UTF-8 bytes makes the decode raise
+    rows.append(("https://ex.com/error", b"<p>\xff\xfe broken</p>", "en", "\x00"))
+    docs = spark.createDataFrame(
+        rows, "url string, html binary, lang string, charset string"
+    )
+    stage = extract_stage(docs, max_html_bytes=CAP).cache()
+    got = {
+        r["url"]: r
+        for r in stage.select(
+            "url", "status", "n_words",
+            F.size("words").alias("size_words"),
+            F.size("removals").alias("size_removals"),
+        ).collect()
+    }
+    assert stage.count() == len(got) == len(rows)
+    for url, html, lang, charset in rows:
+        want = extract_document(html, lang=lang, charset=charset, max_html_bytes=CAP)
+        row = got[url]
+        assert row["status"] == want["status"], url
+        assert row["size_words"] == row["n_words"] == len(want["words"]), url
+        assert row["size_removals"] == len(want["removals"]), url
+    assert {"extracted", "empty", "error", "capped"} <= {
+        r["status"] for r in got.values()
+    }
+
+    assert words_from_stage(stage).schema == WORDS_SCHEMA
+    assert extracted_from_stage(stage).schema == EXTRACTED_SCHEMA
+    assert removals_from_stage(stage).schema == REMOVALS_SCHEMA
+    stage.unpersist()
 
 
 def test_size_route_matches_single_lane(spark):

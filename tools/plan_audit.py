@@ -19,11 +19,13 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CHECKS = {
-    "extract_words": [("MapInArrow", True), ("Exchange", None)],
+    # the words/removals tables are a JVM inline (Generate) of the
+    # stage's nested arrays, not a second python pass or a row filter
+    "extract_words": [("MapInArrow", True), ("Generate", True), ("Exchange", None)],
     # removals come from the SAME fused pass as words/envelopes: exactly
     # one MapInArrow node, and no second python stage (int = exact count
     # of plan-detail nodes '(n) <op>')
-    "extract_removals": [("MapInArrow", 1), ("MapInPandas", False)],
+    "extract_removals": [("MapInArrow", 1), ("Generate", True), ("MapInPandas", False)],
     "top_orders": [("BroadcastHashJoin", True)],
     "nation_revenue": [("BroadcastHashJoin", True), ("HashAggregate", True)],
     "pricing_summary": [("HashAggregate", True), ("PushedFilters", None)],
