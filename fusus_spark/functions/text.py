@@ -1,8 +1,11 @@
 """Text column helpers built ONLY from pyspark.sql.functions built-ins.
 
-Everything here stays inside whole-stage codegen (no Python). These are
-the relational halves of the reference's string handling (SURVEY.md
-§2.8) plus the training-data-pipeline text ops.
+Everything here is JVM-side (no Python UDF). The scalar helpers codegen;
+the array helpers (``shingles``, ``top_run_share``, ``cosine``,
+``stopword_hits``) are higher-order functions, which Spark evaluates
+interpreted inside the enclosing whole-stage codegen span. These are the
+relational halves of the reference's string handling (SURVEY.md §2.8)
+plus the training-data-pipeline text ops.
 """
 
 from __future__ import annotations
@@ -29,14 +32,23 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def shingles(tok_col: Column, n: int = 3) -> Column:
+def shingles(tok_col: str, n: int = 3) -> Column:
     """Word n-gram shingles (array<string>), [] when fewer than n tokens.
+
+    Column contract: ``tok_col`` is the NAME of a token array already
+    projected on the frame (``select(..., tokens(text).alias("t"))``
+    first), never an expression. The array is read inside the
+    ``transform`` lambda, and Catalyst does not hoist lambda-invariant
+    subexpressions: a tokenizer expression there would re-run over the
+    whole text once per n-gram, O(n_grams * |text|) per document.
+    Reading a projected column keeps it O(n_grams * n).
 
     JVM-side: transform over an index sequence + slice + concat — no UDF.
     """
-    k = F.size(tok_col)
+    t = F.col(tok_col)
+    k = F.size(t)
     idx = F.sequence(F.lit(1), k - F.lit(n - 1))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tok_col, i, n)))
+    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i, n)))
     return F.when(k < n, F.array().cast("array<string>")).otherwise(grams)
 
 

@@ -10,8 +10,8 @@ deterministic), because at 10^12 docs the FILTER AUDIT (how many docs
 each rule killed, alone or together) matters as much as the surviving
 corpus; ``keep`` is simply ``reasons == []``.
 
-Plan shape: every signal is computed from the single token array in
-one map-side projection (no joins between signal operators, no
+Plan shape: the token array is projected once per document and every
+signal reads that column (no joins between signal operators, no
 shuffle); downstream aggregation of reasons is the caller's choice.
 """
 
@@ -52,7 +52,12 @@ def curation_gate(
     is oracle-exact.
     """
     r = {**DEFAULT_RULES, **(rules or {})}
-    t = tokens(text_col)
+    # the token array, then the bigram array, are each projected ONCE;
+    # every signal below reads those columns, never the tokenizer
+    base = docs.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("t")).select(
+        "doc_id", "t", shingles("t", 2).alias("big")
+    )
+    t = F.col("t")
     n = F.size(t)
     mean_len_e6 = F.when(
         n > 0,
@@ -63,8 +68,7 @@ def curation_gate(
     stop_e6 = F.when(
         n > 0, F.round(stopword_hits(t, stop_lang) / n * 1000000)
     ).otherwise(F.lit(0)).cast("bigint")
-    big = F.when(n >= 2, shingles(t, 2)).otherwise(F.array().cast("array<string>"))
-    bigram_e6 = F.round(top_run_share(big) * 1000000).cast("bigint")
+    bigram_e6 = F.round(top_run_share(F.col("big")) * 1000000).cast("bigint")
 
     checks = [
         ("too_few_tokens", n < F.lit(r["min_tokens"])),
@@ -82,8 +86,8 @@ def curation_gate(
             lambda x: x.isNotNull(),
         )
     )
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
+    return base.select(
+        "doc_id",
         n.cast("int").alias("n_tokens"),
         (F.size(reasons) == 0).alias("keep"),
         reasons.alias("reasons"),
@@ -116,18 +120,33 @@ def decontaminate(
     tiny). ``n_ngrams`` rides the explode as a group key — no second
     join back to the source. md5 keeps hashes bit-identical in the
     DuckDB oracle.
-    """
-    def gram_hashes(text):
-        t = tokens(F.lower(text))
-        return F.array_distinct(F.transform(shingles(t, n), lambda g: F.md5(g)))
 
-    eval_grams = eval_docs.select(
-        F.explode(gram_hashes(F.col(eval_text_col))).alias("gh")
-    ).distinct()
-    doc_grams = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(gram_hashes(F.col(text_col))).alias("n_ngrams"),
-        F.explode(gram_hashes(F.col(text_col))).alias("gh"),
+    Linear per document: the case-folded token array, then the distinct
+    gram-hash array, are each projected once, and ``n_ngrams`` is taken
+    BEFORE the explode (a size over the exploded rows would rebuild the
+    array once per row). The explode is ``explode_outer`` + a null
+    filter: a plain explode of a column makes Catalyst infer a
+    ``size(...) > 0`` filter and push it through the projections onto
+    the scan, re-inlining the whole tokenizer+lambda there.
+    """
+    def gram_hashes(frame, text_col, *keep):
+        # ``keep`` columns + ghs, the distinct case-folded n-gram md5s
+        return frame.select(*keep, tokens(F.lower(text_col)).alias("t")).select(
+            *keep,
+            F.array_distinct(F.transform(shingles("t", n), lambda g: F.md5(g))).alias("ghs"),
+        )
+
+    eval_grams = (
+        gram_hashes(eval_docs, eval_text_col)
+        .select(F.explode_outer("ghs").alias("gh"))
+        .where(F.col("gh").isNotNull())
+        .distinct()
+    )
+    doc_grams = (
+        gram_hashes(docs.select(F.col(id_col).alias("doc_id"), text_col), text_col, "doc_id")
+        .select("doc_id", "ghs", F.size("ghs").alias("n_ngrams"))
+        .select("doc_id", "n_ngrams", F.explode_outer("ghs").alias("gh"))
+        .where(F.col("gh").isNotNull())
     )
     return (
         doc_grams.join(F.broadcast(eval_grams), "gh")
@@ -277,11 +296,9 @@ def dedup_passages(
     base = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("__orig__")
     )
-    wins = base.select(
+    wins = base.select("doc_id", tokens("__orig__").alias("t")).select(
         "doc_id",  # __orig__ pruned: the index never carries raw text
-        F.posexplode(
-            F.transform(shingles(tokens("__orig__"), n), lambda g: F.md5(g))
-        ).alias("pos", "h"),
+        F.posexplode(F.transform(shingles("t", n), lambda g: F.md5(g))).alias("pos", "h"),
     )
     dups = (
         wins.groupBy("h")

@@ -51,11 +51,8 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 
 def doc_shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Distinct word n-gram shingles per doc: (doc_id, shingle)."""
-    return (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.array_distinct(shingles(tokens(text_col), n))).alias("shingle"),
-        )
+    return docs.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("t")).select(
+        "doc_id", F.explode(F.array_distinct(shingles("t", n))).alias("shingle")
     )
 
 
@@ -70,7 +67,9 @@ def ngram_jaccard_pairs(
     """Candidate pairs with n-gram Jaccard >= threshold.
 
     Plan: inverted index join on shingle (only co-occurring docs meet),
-    one agg for intersection size, broadcast-joined per-doc set sizes.
+    one agg for intersection size, equi-joined per-doc set sizes (no
+    broadcast hint: the sizes tables are corpus-sized, so the join
+    strategy is left to Spark's size estimate).
     Returns (doc_a, doc_b, inter, size_a, size_b, jaccard), doc_a < doc_b.
 
     ``df_cap`` is the standard inverted-index stop-shingle prefilter:
@@ -113,8 +112,8 @@ def ngram_jaccard_pairs(
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("set_size").alias("size_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("set_size").alias("size_b"))
     out = (
-        inter.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
+        inter.join(sa, "doc_a")
+        .join(sb, "doc_b")
         .withColumn(
             "jaccard",
             F.round(
@@ -144,9 +143,8 @@ def minhash_signatures(
     document. The md5 string-min is a valid min-hash family member per
     band and is exactly reproducible in the DuckDB oracle.
     """
-    pruned = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(shingles(tokens(text_col), n)).alias("sh"),
+    pruned = docs.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("t")).select(
+        "doc_id", F.array_distinct(shingles("t", n)).alias("sh")
     )
     def _band_min(band: int):
         # NB: must be a ONE-argument lambda — a second (defaulted) python

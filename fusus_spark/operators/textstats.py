@@ -262,16 +262,15 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     array would be quadratic on long docs). Emits e6-scaled integers
     for oracle-stable comparison.
     """
-    t = tokens(text_col)
-    big = F.when(
-        F.size(t) >= 2,
-        shingles(t, 2),
-    ).otherwise(F.array().cast("array<string>"))
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(t).alias("n_tokens"),
-        F.round(top_run_share(t) * 1000000).cast("bigint").alias("top_word_share_e6"),
-        F.round(top_run_share(big) * 1000000).cast("bigint").alias("top_bigram_share_e6"),
+    # tokens, then bigrams, each projected once (shingles' column contract)
+    base = docs.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("t")).select(
+        "doc_id", "t", shingles("t", 2).alias("big")
+    )
+    return base.select(
+        "doc_id",
+        F.size("t").alias("n_tokens"),
+        F.round(top_run_share(F.col("t")) * 1000000).cast("bigint").alias("top_word_share_e6"),
+        F.round(top_run_share(F.col("big")) * 1000000).cast("bigint").alias("top_bigram_share_e6"),
     )
 
 

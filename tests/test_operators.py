@@ -429,6 +429,20 @@ def test_exact_dedup_finds_dupes(spark):
     assert got[2]["group_size"] == 1
 
 
+def test_ngram_jaccard_sizes_join_has_no_broadcast_hint(spark):
+    """The per-doc set-size tables are corpus-sized: no broadcast hint
+    forces them; Spark picks the join strategy from its size estimate."""
+    from fusus_spark.operators.dedup import ngram_jaccard_pairs
+
+    rows = [(0, "a b c d e f g"), (1, "a b c d e f g h"), (2, "x y z w v")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = ngram_jaccard_pairs(df, n=3, threshold=0.8)
+    analyzed = pairs._jdf.queryExecution().analyzed().toString()
+    assert "ResolvedHint (strategy=broadcast)" not in analyzed
+    got = [tuple(r) for r in pairs.collect()]
+    assert got == [(0, 1, 5, 5, 6, round(5 / 6, 6))]
+
+
 def test_winnow_guarantee_shared_substring(spark):
     """The winnowing guarantee (Schleimer et al.): two documents sharing
     a substring of length >= k + window - 1 share at least one

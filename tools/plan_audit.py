@@ -64,11 +64,16 @@ CHECKS = {
     # merged sink: cogrouped aligner + forward-fill window
     "align_merged": [("FlatMapCoGroupsInPandas", True), ("Window", True)],
     # decontamination: the gram join must be broadcast (eval side is
-    # config-sized), never a shuffle or all-pairs join
+    # config-sized), never a shuffle or all-pairs join. n-gram tiers:
+    # ``slice`` must read a projected token column — a tokenizer
+    # expression (CASE WHEN length(trim(regexp_replace ...))) inside the
+    # shingles lambda, or re-inlined into an inferred scan filter,
+    # re-tokenizes the text once per n-gram
     "decontaminate": [
         ("BroadcastHashJoin", True),
         ("SortMergeJoin", False),
         ("CartesianProduct", False),
+        ("slice(CASE WHEN", False),
     ],
     # line dedup: bounded-key equi-joins only
     "dedup_lines": [
@@ -85,6 +90,7 @@ CHECKS = {
         ("HashAggregate", True),
         ("BroadcastNestedLoopJoin", False),
         ("CartesianProduct", False),
+        ("slice(CASE WHEN", False),
     ],
     # packing must window PER SHARD — a global cumsum would show as an
     # Exchange SinglePartition feeding the Window
@@ -106,13 +112,13 @@ CHECKS = {
     "extract_links": [("Exchange", 1), ("Generate", True)],
     # host graph: distinct edge agg + degree aggs, never all-pairs
     "host_link_stats": [("HashAggregate", True), ("CartesianProduct", False)],
-    # quality gate is ONE map-side projection (no shuffle beyond the
-    # testdata-load repartition), fully codegen'd
-    "curation_gate": [("Exchange", 1), ("codegen id", True)],
+    # quality gate is map-side projections only (no shuffle beyond the
+    # testdata-load repartition), fully codegen'd; tokens projected once
+    "curation_gate": [("Exchange", 1), ("codegen id", True), ("slice(CASE WHEN", False)],
     # per-host rollup: one partial+final agg, never all-pairs
     "host_stats": [("HashAggregate", True), ("CartesianProduct", False)],
     # Gopher repetition signals: map-side array folds, zero shuffle
-    "repetition_stats": [("Exchange", 1), ("codegen id", True)],
+    "repetition_stats": [("Exchange", 1), ("codegen id", True), ("slice(CASE WHEN", False)],
     # zlib ratio: exactly one Arrow-batched python stage, zero shuffle
     "compression_ratio": [("MapInPandas", 1), ("Exchange", 1)],
     # pagerank (checkpoint_dir mode): every round-trip input is a
