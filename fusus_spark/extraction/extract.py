@@ -25,7 +25,8 @@ from fusus_spark.extraction.segment import assemble, segment_blocks
 # Payload size cap (maxHits-guard analog, fusus/parameters.py:337-345 +
 # page.py:878-886: pathological inputs are bounded, and the bound is
 # RECORDED, never silent). Oversized payloads are truncated before parse
-# and flagged status='capped'.
+# and flagged status='capped'. Every layer below runs in time linear in
+# its input (tests/test_cost.py), so the cap bounds cost as well as bytes.
 DEFAULT_MAX_HTML_BYTES = 4 * 1024 * 1024
 
 STATUS_EXTRACTED = "extracted"

@@ -46,7 +46,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from fusus_spark.extraction.pipeline import extract_stage, words_from_stage
 
@@ -444,10 +444,14 @@ def run_extraction_job(
                 from fusus_spark.operators.robots import apply_robots_optout
 
                 docs = apply_robots_optout(docs)
-            stats = docs.agg(
-                F.count("*").alias("rows_in"),
+            # rows_in/bytes_in ride the bucket's first write (no extra
+            # scan or job); read only after every write has succeeded
+            stats = Observation()
+            docs = docs.observe(
+                stats,
+                F.count(F.lit(1)).alias("rows_in"),
                 F.coalesce(F.sum(F.octet_length("html")), F.lit(0)).alias("bytes_in"),
-            ).first()
+            )
             stage = None
             persisted = False
             if stage_kinds:
@@ -500,6 +504,7 @@ def run_extraction_job(
             finally:
                 if persisted:
                     stage.unpersist()  # a failed write must not leak the cache
+            observed = stats.get  # filled by the first write above
             if fail_before_commit is not None and done_now >= fail_before_commit:
                 raise RuntimeError(
                     f"injected failure between write and rename on bucket {bucket}"
@@ -509,9 +514,9 @@ def run_extraction_job(
             primary = per_kind.get("words") or per_kind[emit[0]]
             ledger.mark_done(
                 bucket,
-                rows_in=stats["rows_in"],
+                rows_in=observed["rows_in"],
                 rows_out=primary["rows"],
-                bytes_in=stats["bytes_in"],
+                bytes_in=observed["bytes_in"],
                 bytes_out=primary["bytes"],
                 input_snapshot_id=lineage,
                 wall_ms=int((time.time() - t0) * 1000),

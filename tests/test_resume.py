@@ -513,3 +513,97 @@ def test_emit_set_is_part_of_the_resume_key(spark, tmp_path):
     # identical emit resumes as before
     s3 = run_extraction_job(spark, inp, out, led, 2, emit=("words", "jsonld"))
     assert s3["skipped"] == 2 and s3["processed"] == 0
+
+
+def _spark_jobs(spark, run) -> int:
+    """Spark jobs started by ``run()``, counted through statusTracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _input_stats(frame, n_buckets: int) -> dict[str, tuple[int, int]]:
+    """{partition_id: (rows, html bytes)} by a plain agg, every bucket
+    of ``range(n_buckets)`` present (0/0 when it holds no row)."""
+    got = {
+        r["bucket"]: (r["n"], r["b"])
+        for r in frame.groupBy("bucket")
+        .agg(
+            F.count("*").alias("n"),
+            F.coalesce(F.sum(F.octet_length("html")), F.lit(0)).alias("b"),
+        )
+        .collect()
+    }
+    return {f"bucket={b}": got.get(b, (0, 0)) for b in range(n_buckets)}
+
+
+def _ledger_stats(ledger_path: str) -> dict[str, tuple[int, int]]:
+    return {
+        r["partition_id"]: (r["rows_in"], r["bytes_in"])
+        for r in Ledger(ledger_path).rows()
+    }
+
+
+def test_ledger_stats_ride_the_first_write(spark, bucketed_input, tmp_path):
+    """rows_in/bytes_in come from the bucket's first write, not from a
+    separate aggregate: three stage tables cost at most 4 Spark jobs per
+    bucket, and the ledger still equals an independent agg of the input."""
+    out = str(tmp_path / "out")
+    ledger_path = str(tmp_path / "ledger")
+    emit = ("words", "extracted", "removals")
+    jobs = _spark_jobs(
+        spark,
+        lambda: run_extraction_job(
+            spark, bucketed_input, out, ledger_path, N_BUCKETS, emit=emit
+        ),
+    )
+    assert jobs <= 4 * N_BUCKETS, f"{jobs} Spark jobs for {N_BUCKETS} buckets"
+    want = _input_stats(spark.read.parquet(bucketed_input), N_BUCKETS)
+    assert all(rows > 0 for rows, _ in want.values())
+    assert _ledger_stats(ledger_path) == want
+
+
+def test_ledger_stats_empty_bucket_and_doc_level_emit(spark, bucketed_input, tmp_path):
+    """Buckets past the populated range record 0/0; a doc-level-only
+    emit (no parse stage) records the same stats as a stage emit."""
+    n = N_BUCKETS + 2  # buckets N_BUCKETS.. have no input rows
+    want = _input_stats(spark.read.parquet(bucketed_input), n)
+    assert want[f"bucket={N_BUCKETS}"] == (0, 0)
+    for emit in (("words", "extracted"), ("pagemeta",)):
+        ledger_path = str(tmp_path / ("ledger-" + "-".join(emit)))
+        run_extraction_job(
+            spark, bucketed_input, str(tmp_path / ("out-" + "-".join(emit))),
+            ledger_path, n, emit=emit,
+        )
+        assert _ledger_stats(ledger_path) == want, emit
+
+
+def test_ledger_stats_count_robots_filtered_rows(spark, tmp_path):
+    """With respect_robots the stats cover the rows left after the
+    consent filter, equal to that filter's own agg."""
+    from fusus_spark.operators.robots import apply_robots_optout
+
+    rows = []
+    for i, d in enumerate(fixture_documents()[:12]):
+        html = d["html"]
+        if i % 3 == 0:
+            html = b'<meta name="robots" content="noindex">' + html
+        rows.append((d["url"], d["warc_ts"], html, d["text"], d["lang"]))
+    inp = str(tmp_path / "in")
+    write_bucketed_input(spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA), inp, 2)
+    ledger_path = str(tmp_path / "ledger")
+    run_extraction_job(
+        spark, inp, str(tmp_path / "out"), ledger_path, 2,
+        emit=("words", "removals"), respect_robots=True,
+    )
+    want = _input_stats(apply_robots_optout(spark.read.parquet(inp)), 2)
+    assert sum(r for r, _ in want.values()) == 8
+    assert _ledger_stats(ledger_path) == want
