@@ -43,12 +43,16 @@ tier's input (the CCNet / RefinedWeb macro shape):
                                   corpus -> corpus_sampled; the full
                                   corpus stays on disk for audit)
 
-Every tier writes an AUDIT table under ``<output>/audit/`` and the
-summary is derived from those written tables — the job never re-runs a
-tier's lineage just to count it. The rewritten-text intermediate after
-line dedup is materialized to ``<output>/stage/deduped`` and read back,
-truncating lineage so the gate/decontam/PII tiers re-plan from columnar
-parquet instead of re-executing three shuffles per downstream action.
+Every tier writes an AUDIT table under ``<output>/audit/`` and its
+summary counts are observed on that write (``jobs.write_tier``), so no
+statistic costs a Spark action. Two driver actions remain: the
+``n_input`` parquet count (no tier writes the input) and the
+``n_canonical_groups`` distinct count (no observation can express one).
+Text rewritten by line dedup is materialized to ``<output>/stage/``
+and read back, truncating lineage so the gate/decontam/PII tiers
+re-plan from columnar parquet instead of re-executing three shuffles
+per downstream action; tiers 0b, 1a, 1b and 1c stage their survivors
+the same way.
 
 Scale notes: the keep-set joins (url, doc_id) are large-with-large and
 shuffle by design; on a real deployment both sides come from the same
@@ -97,6 +101,7 @@ def run_job(
     Returns the summary dict (also printed by main as one JSON line).
     """
     from fusus_spark.functions.url import dedup_by_canonical_url
+    from fusus_spark.jobs import write_tier
     from fusus_spark.operators.curate import (
         curation_gate,
         decontaminate,
@@ -110,37 +115,35 @@ def run_job(
     docs = spark.read.parquet(input_path)
     summary: dict = {"n_input": docs.count()}
 
+    def write(df, table: str, **aggs):
+        # write_tier under <output>; its observed stats join the summary
+        frame, seen = write_tier(df, f"{out}/{table}", **aggs)
+        summary.update(seen)
+        return frame
+
     # 0. optional robots opt-out (needs html): publisher consent before
     # any other spend — a noindex page must not even pay for dedup.
     # The signals table is the audit; the filter itself is map-side.
     if respect_robots and "html" in docs.columns:
         from fusus_spark.operators.robots import apply_robots_optout, robots_signals
 
-        robots_signals(docs).write.mode("overwrite").parquet(f"{out}/audit/robots")
+        write(robots_signals(docs), "audit/robots",
+              n_after_robots=F.count_if(~F.col("noindex")))
         docs = apply_robots_optout(docs)
-        # count from the WRITTEN audit (survivors = not-noindex rows),
-        # per the job invariant: never re-run a tier's lineage to count
-        summary["n_after_robots"] = (
-            spark.read.parquet(f"{out}/audit/robots").where(~F.col("noindex")).count()
-        )
 
     # 0b. optional robots.txt rules — the FILE half of the consent
     # protocol (RFC 9309), fed from a (host, robots_txt) parquet the
     # fetch layer produced. The parsed rules table is the audit; the
-    # filtered docs are materialized like tier 1b so the count reads
-    # written parquet and downstream tiers re-plan from columnar files.
+    # filtered docs are materialized like tier 1b.
     if robots_txt_path is not None and "url" in docs.columns:
         from fusus_spark.operators.robots import apply_robots_txt, robots_txt_rules
 
-        robots_txt_rules(
-            spark.read.parquet(robots_txt_path), agent=robots_agent
-        ).write.mode("overwrite").parquet(f"{out}/audit/robots_txt_rules")
-        rules = spark.read.parquet(f"{out}/audit/robots_txt_rules")
-        apply_robots_txt(docs, rules).write.mode("overwrite").parquet(
-            f"{out}/stage/robots_txt"
+        rules = write(
+            robots_txt_rules(spark.read.parquet(robots_txt_path), agent=robots_agent),
+            "audit/robots_txt_rules",
         )
-        docs = spark.read.parquet(f"{out}/stage/robots_txt")
-        summary["n_after_robots_txt"] = docs.count()
+        docs = write(apply_robots_txt(docs, rules), "stage/robots_txt",
+                     n_after_robots_txt=F.count("*"))
 
     # 1a. optional declared-canonical collapse (RFC 6596): pages that
     # DECLARE their duplicate-ness via rel=canonical fold into the
@@ -150,7 +153,7 @@ def run_job(
     # consent tiers), never reused from the tier-0 audit: a
     # representative tier 0 dropped must not take its whole cluster
     # down through the semi-join. The mapping table is the audit;
-    # survivors = one representative per declared group.
+    # survivors (one representative per declared group) are staged.
     if canonical_scope is not None:
         if "url" not in docs.columns or "html" not in docs.columns:
             raise ValueError(
@@ -166,32 +169,27 @@ def run_job(
             robots_signals(docs).select("url", "canonical_href"),
             scope=canonical_scope,
         )
-        mapped.write.mode("overwrite").parquet(f"{out}/audit/canonical")
-        mapped = spark.read.parquet(f"{out}/audit/canonical")
-        docs = apply_canonical_collapse(docs, mapped)
+        mapped = write(mapped, "audit/canonical")
         # n_after_* keys are SURVIVING ROW counts everywhere in this
         # summary (input urls need not be unique — a representative url
         # present at two snapshots keeps both rows); the declared-group
-        # count is its own key
-        summary["n_after_canonical"] = docs.count()
+        # count is its own key, a distinct count: one driver action
+        docs = write(apply_canonical_collapse(docs, mapped), "stage/canonical",
+                     n_after_canonical=F.count("*"))
         summary["n_canonical_groups"] = (
             mapped.select("canonical_target").distinct().count()
         )
 
     # 1. canonical-URL dedup (cheapest tier; only if a url column exists)
     if "url" in docs.columns:
-        url_audit = dedup_by_canonical_url(docs)
-        url_audit.write.mode("overwrite").parquet(f"{out}/audit/url_dedup")
-        url_audit = spark.read.parquet(f"{out}/audit/url_dedup")
-        keep_urls = url_audit.where(F.col("url") == F.col("rep_url")).select("url")
-        docs = docs.join(keep_urls, "url")
-        summary["n_after_url_dedup"] = keep_urls.count()
+        is_rep = F.col("url") == F.col("rep_url")
+        url_audit = write(dedup_by_canonical_url(docs), "audit/url_dedup",
+                          n_after_url_dedup=F.count_if(is_rep))
+        docs = docs.join(url_audit.where(is_rep).select("url"), "url")
 
     # 1b. optional host policy (needs urls); host_stats written as the
     # audit table so the cap/block decisions are inspectable. The policy
-    # result is MATERIALIZED like tier 3's: the count comes from written
-    # parquet and downstream tiers re-plan from columnar files instead
-    # of re-executing the policy joins per action (`is not None` guard:
+    # result is MATERIALIZED like tier 3's (`is not None` guard:
     # cap_per_host=0 is a legal, maximally aggressive cap).
     if (
         block_domains_path is not None or cap_per_host is not None
@@ -202,11 +200,10 @@ def run_job(
         block = (
             spark.read.parquet(block_domains_path) if block_domains_path else None
         )
-        apply_host_policy(
-            docs, block_domains=block, cap_per_host=cap_per_host
-        ).write.mode("overwrite").parquet(f"{out}/stage/host_policy")
-        docs = spark.read.parquet(f"{out}/stage/host_policy")
-        summary["n_after_host_policy"] = docs.count()
+        docs = write(
+            apply_host_policy(docs, block_domains=block, cap_per_host=cap_per_host),
+            "stage/host_policy", n_after_host_policy=F.count("*"),
+        )
 
     # 1c. optional webgraph host prior (RefinedWeb-style): the crawl's
     # own link structure as a host-quality gate. Ranks come from a
@@ -231,8 +228,7 @@ def run_job(
             raise ValueError(
                 "host prior needs --pagerank or an html column to build the graph"
             )
-        ranks.write.mode("overwrite").parquet(f"{out}/audit/host_pagerank")
-        ranks = spark.read.parquet(f"{out}/audit/host_pagerank")
+        ranks = write(ranks, "audit/host_pagerank")
         if "html" in docs.columns:
             host_anchor_texts(docs).write.mode("overwrite").parquet(
                 f"{out}/audit/host_anchors"
@@ -240,36 +236,32 @@ def run_job(
         low = ranks.where(F.col("rank_e9") < host_prior_min_rank_e9).select(
             F.col("host").alias("__low_host__")
         )
-        docs.join(
-            low, url_host(F.col("url")) == F.col("__low_host__"), "left_anti"
-        ).write.mode("overwrite").parquet(f"{out}/stage/host_prior")
-        docs = spark.read.parquet(f"{out}/stage/host_prior")
-        summary["n_after_host_prior"] = docs.count()
+        docs = write(
+            docs.join(
+                low, url_host(F.col("url")) == F.col("__low_host__"), "left_anti"
+            ),
+            "stage/host_prior", n_after_host_prior=F.count("*"),
+        )
 
     # 2. exact content dedup (keep the min-id representative)
-    ex_audit = exact_duplicates(docs)
-    ex_audit.write.mode("overwrite").parquet(f"{out}/audit/exact_dedup")
-    ex_audit = spark.read.parquet(f"{out}/audit/exact_dedup")
-    docs = docs.join(
-        ex_audit.where(F.col("doc_id") == F.col("rep_id")).select("doc_id"), "doc_id"
-    )
-    summary["n_after_exact_dedup"] = ex_audit.where(
-        F.col("doc_id") == F.col("rep_id")
-    ).count()
+    is_rep = F.col("doc_id") == F.col("rep_id")
+    ex_audit = write(exact_duplicates(docs), "audit/exact_dedup",
+                     n_after_exact_dedup=F.count_if(is_rep))
+    docs = docs.join(ex_audit.where(is_rep).select("doc_id"), "doc_id")
 
     # 3. corpus-level line dedup -> rewritten text, materialized
     ld = dedup_lines(docs, min_dup_docs=min_dup_docs)
     passthrough = [c for c in docs.columns if c != "text"]
-    docs.select(*passthrough).join(
-        ld.select(
-            "doc_id", "n_lines", "n_kept", F.col("text_dedup").alias("text")
+    staged = write(
+        docs.select(*passthrough).join(
+            ld.select(
+                "doc_id", "n_lines", "n_kept", F.col("text_dedup").alias("text")
+            ),
+            "doc_id",
         ),
-        "doc_id",
-    ).write.mode("overwrite").parquet(f"{out}/stage/deduped")
-    staged = spark.read.parquet(f"{out}/stage/deduped")
-    summary["n_dup_lines_removed"] = staged.agg(
-        F.sum(F.col("n_lines") - F.col("n_kept"))
-    ).collect()[0][0] or 0
+        "stage/deduped",
+        n_dup_lines_removed=F.coalesce(F.sum(F.expr("n_lines - n_kept")), F.lit(0)),
+    )
 
     # 3b. optional passage dedup on the line-deduped text (off by
     # default: the window-hash index costs a corpus-tokens-sized shuffle,
@@ -277,57 +269,48 @@ def run_job(
     if passage_n is not None:
         pdup = dedup_passages(staged, n=passage_n)
         passthrough = [c for c in staged.columns if c != "text"]
-        staged.select(*passthrough).join(
-            pdup.select(
+        staged = write(
+            staged.select(*passthrough).join(
+                pdup.select("doc_id", F.col("n_removed").alias("n_passage_removed"),
+                            F.col("text_dedup").alias("text")),
                 "doc_id",
-                F.col("n_removed").alias("n_passage_removed"),
-                F.col("text_dedup").alias("text"),
             ),
-            "doc_id",
-        ).write.mode("overwrite").parquet(f"{out}/stage/passage_deduped")
-        staged = spark.read.parquet(f"{out}/stage/passage_deduped")
-        summary["n_passage_tokens_removed"] = int(
-            staged.agg(F.sum("n_passage_removed")).collect()[0][0] or 0
+            "stage/passage_deduped",
+            n_passage_tokens_removed=F.coalesce(F.sum("n_passage_removed"), F.lit(0)),
         )
 
     # 4. quality gate on the deduped text
-    gate = curation_gate(staged, stop_lang=stop_lang)
-    gate.write.mode("overwrite").parquet(f"{out}/audit/gate")
-    gate = spark.read.parquet(f"{out}/audit/gate")
+    gate = write(curation_gate(staged, stop_lang=stop_lang), "audit/gate",
+                 n_after_gate=F.count_if("keep"))
     kept = staged.join(gate.where("keep").select("doc_id"), "doc_id")
-    summary["n_after_gate"] = gate.where("keep").count()
 
     # 5. eval-set decontamination (optional)
     summary["n_contaminated"] = 0
     if eval_path is not None:
         ev = spark.read.parquet(eval_path)
-        report = decontaminate(kept, ev, n=decontam_n)
-        report.write.mode("overwrite").parquet(f"{out}/audit/contamination")
-        report = spark.read.parquet(f"{out}/audit/contamination")
+        report = write(decontaminate(kept, ev, n=decontam_n), "audit/contamination",
+                       n_contaminated=F.count("*"))
         kept = kept.join(
             F.broadcast(report.select("doc_id")), "doc_id", "left_anti"
         )
-        summary["n_contaminated"] = report.count()
 
     # 6. PII redaction -> final corpus
     red = redact_pii(kept)
     final_cols = [c for c in kept.columns if c != "text"]
-    kept.select(*final_cols).join(
-        red.select(
-            "doc_id", "n_email", "n_ipv4", "n_phone",
-            F.col("text_redacted").alias("text"),
+    corpus = write(
+        kept.select(*final_cols).join(
+            red.select(
+                "doc_id", "n_email", "n_ipv4", "n_phone",
+                F.col("text_redacted").alias("text"),
+            ),
+            "doc_id",
         ),
-        "doc_id",
-    ).write.mode("overwrite").parquet(f"{out}/corpus")
-    corpus = spark.read.parquet(f"{out}/corpus")
-    agg = corpus.agg(
-        F.count("*").alias("n"),
-        F.sum("n_email").alias("e"),
-        F.sum("n_ipv4").alias("i"),
-        F.sum("n_phone").alias("p"),
-    ).collect()[0]
-    summary["n_final"] = agg["n"]
-    summary["n_pii_redacted"] = int((agg["e"] or 0) + (agg["i"] or 0) + (agg["p"] or 0))
+        "corpus",
+        n_final=F.count("*"),
+        n_pii_redacted=sum(
+            F.coalesce(F.sum(c), F.lit(0)) for c in ("n_email", "n_ipv4", "n_phone")
+        ),
+    )
 
     # 7. optional packing plan over the final corpus (the curated docs'
     # training-sequence assignment — written beside the corpus so a
@@ -337,16 +320,15 @@ def run_job(
             raise ValueError("pack_target must be a positive token count")
         from fusus_spark.operators.curate import pack_sequences
 
-        pack_sequences(corpus, target_tokens=pack_target).write.mode(
-            "overwrite"
-        ).parquet(f"{out}/packing")
-        packing = spark.read.parquet(f"{out}/packing")
-        summary["n_sequences"] = packing.select("shard", "seq_id").distinct().count()
+        # one seq_pos = 1 row per (shard, seq_id) sequence
+        write(pack_sequences(corpus, target_tokens=pack_target), "packing",
+              n_sequences=F.count_if(F.col("seq_pos") == 1))
 
     # 8. optional temperature mixture sampling over the final corpus:
     # the n^alpha flattened per-stratum rates are written as the audit
     # (the rate table IS the mixture decision), the sampled ids join
     # back map-side, and the full corpus stays on disk above it.
+    shipped = corpus
     if mixture_budget is not None:
         if mixture_budget <= 0:
             raise ValueError("mixture_budget must be a positive doc count")
@@ -359,15 +341,12 @@ def run_job(
             corpus, budget_docs=mixture_budget,
             alpha_e6=mixture_alpha_e6, strata_col=mixture_strata,
         )
-        rates.write.mode("overwrite").parquet(f"{out}/audit/mixture_ppm")
-        rates = spark.read.parquet(f"{out}/audit/mixture_ppm")
+        rates = write(rates, "audit/mixture_ppm")
         picked = stratified_sample_by_table(
             corpus, rates, strata_col=mixture_strata
         ).select("doc_id")
-        corpus.join(picked, "doc_id").write.mode("overwrite").parquet(
-            f"{out}/corpus_sampled"
-        )
-        summary["n_sampled"] = spark.read.parquet(f"{out}/corpus_sampled").count()
+        shipped = write(corpus.join(picked, "doc_id"), "corpus_sampled",
+                        n_sampled=F.count("*"))
 
     # 9. optional dataset-card report: the per-language rollup a
     # release ships next to the data — computed over the corpus that
@@ -379,15 +358,10 @@ def run_job(
     if write_report:
         from fusus_spark.operators.curate import corpus_report
 
-        shipped = (
-            spark.read.parquet(f"{out}/corpus_sampled")
-            if mixture_budget is not None
-            else corpus
+        write(
+            corpus_report(shipped, url_col="url" if "url" in shipped.columns else None),
+            "report", n_report_scopes=F.count("*"),
         )
-        corpus_report(
-            shipped, url_col="url" if "url" in shipped.columns else None
-        ).write.mode("overwrite").parquet(f"{out}/report")
-        summary["n_report_scopes"] = spark.read.parquet(f"{out}/report").count()
     return summary
 
 

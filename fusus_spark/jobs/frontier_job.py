@@ -39,8 +39,9 @@ Stage order mirrors the loop the operators define:
                                list; --robots harvests Crawl-delays
                                into per-host budget overrides)
 
-The summary is derived from the WRITTEN schedule table (the curate_job
-invariant: never re-run a tier's lineage just to count it). Output is
+Summary counts are observed on the stage writes (``jobs.write_tier``);
+the one driver action is the ``by_source`` group-by over the written
+schedule (data-valued keys: no fixed observation can hold it). Output is
 an idempotent overwrite per cycle directory — the restart unit is the
 cycle, matching the operators' own "recompute one queue build" story;
 the snapshot STORE itself is only ever appended to by the caller from
@@ -97,6 +98,7 @@ def run_job(
     ``as_of_date`` — the cycle observes "now"). Returns the summary
     dict (also printed by main as one JSON line).
     """
+    from fusus_spark.jobs import write_tier
     from fusus_spark.operators.frontier import (
         extend_snapshots,
         fetch_queue,
@@ -113,16 +115,17 @@ def run_job(
     # BEFORE scoring; persist the delta so the caller can append it to
     # the store (the job never mutates the store in place).
     if fetch_results_path is not None:
-        delta = extend_snapshots(
-            snaps,
-            spark.read.parquet(fetch_results_path),
-            crawl_date=crawl_date or as_of_date,
-            hash_col=hash_col,
+        delta, seen = write_tier(
+            extend_snapshots(
+                snaps,
+                spark.read.parquet(fetch_results_path),
+                crawl_date=crawl_date or as_of_date,
+                hash_col=hash_col,
+            ),
+            f"{out}/snapshots_delta", n_folded=F.count("*"),
         )
-        delta.write.mode("overwrite").parquet(f"{out}/snapshots_delta")
-        delta = spark.read.parquet(f"{out}/snapshots_delta")
+        summary.update(seen)
         snaps = snaps.select(delta.columns).unionByName(delta)
-        summary["n_folded"] = delta.count()
 
     # 1. churn evidence; the host rollup is the cycle's audit table.
     # Snapshot the stats HERE: the audit write and fetch_queue both
@@ -155,9 +158,7 @@ def run_job(
                     "http_status",
                 )
             )
-        failures = url_failure_stats(log)
-        failures.write.mode("overwrite").parquet(f"{out}/audit/url_failures")
-        failures = spark.read.parquet(f"{out}/audit/url_failures")
+        failures, _ = write_tier(url_failure_stats(log), f"{out}/audit/url_failures")
     sitemaps = (
         spark.read.parquet(sitemaps_path)
         if sitemaps_path is not None
@@ -174,10 +175,11 @@ def run_job(
             parse_feed_entries,
         )
 
-        entries = parse_feed_entries(spark.read.parquet(feeds_path))
-        entries.write.mode("overwrite").parquet(f"{out}/audit/feed_entries")
-        entries = spark.read.parquet(f"{out}/audit/feed_entries")
-        summary["n_feed_entries"] = entries.count()
+        entries, seen = write_tier(
+            parse_feed_entries(spark.read.parquet(feeds_path)),
+            f"{out}/audit/feed_entries", n_feed_entries=F.count("*"),
+        )
+        summary.update(seen)
         sitemaps = sitemaps.select(_SITEMAP_COLS).unionByName(
             feed_entries_as_announcements(entries).select(_SITEMAP_COLS)
         )
@@ -215,18 +217,17 @@ def run_job(
             cycle_seconds=cycle_seconds,
             k_per_host=k_per_host,
         )
-    schedule_fetches(
-        queue, k_per_host=k_per_host, host_budgets=budgets
-    ).write.mode("overwrite").parquet(f"{out}/schedule")
-
-    sched = spark.read.parquet(f"{out}/schedule")
-    summary["n_scheduled"] = sched.count()
-    summary["n_hosts"] = sched.select("host").distinct().count()
+    # ranked per host, so each scheduled host has one rank_in_host = 1 row
+    sched, seen = write_tier(
+        schedule_fetches(queue, k_per_host=k_per_host, host_budgets=budgets),
+        f"{out}/schedule",
+        n_scheduled=F.count("*"),
+        n_hosts=F.count_if(F.col("rank_in_host") == 1),
+    )
+    summary.update(seen)
     summary["by_source"] = {
         r["source"]: r["n"]
-        for r in sched.groupBy("source")
-        .agg(F.count("*").alias("n"))
-        .collect()
+        for r in sched.groupBy("source").agg(F.count("*").alias("n")).collect()
     }
     return summary
 

@@ -345,6 +345,9 @@ def read_warc(
 # "conversion" format, so standard WET tooling can consume this
 # engine's text directly.
 
+_WET_END = "\r\n\r\n"  # the closing double-CRLF of every WET record
+
+
 def wet_records(
     df: DataFrame,
     url_col: str = "url",
@@ -438,7 +441,7 @@ def wet_records(
     )
     return df.where(txt.isNotNull() & (txt != "")).select(
         url.alias("url"),
-        F.concat(header, F.lit("\r\n\r\n"), txt, F.lit("\r\n\r\n")).alias(
+        F.concat(header, F.lit("\r\n\r\n"), txt, F.lit(_WET_END)).alias(
             "record"
         ),
     )
@@ -447,12 +450,15 @@ def wet_records(
 def write_wet(df: DataFrame, path: str, **wet_kwargs) -> None:
     """Write ``wet_records(df)`` as gzipped text parts (one task per
     partition — the same file-level parallelism read_warc consumes).
-    Records are self-delimiting (WARC/1.0 + Content-Length), so the
-    text sink's newline framing is benign."""
+    The sink's line separator is each record's closing double-CRLF, so
+    the parts hold exactly the record bytes, back to back."""
+    from pyspark.sql import functions as F
+
     (
         wet_records(df, **wet_kwargs)
-        .select("record")
+        .select(F.expr(f"left(record, length(record) - {len(_WET_END)})"))
         .write.mode("overwrite")
         .option("compression", "gzip")
+        .option("lineSep", _WET_END)
         .text(path)
     )

@@ -679,11 +679,13 @@ FROM s
 def test_write_wet_roundtrip(spark, tmp_path):
     """A standard WET-reader walk (gunzip, split on the WARC/1.0
     version line, parse Content-Length, take that many octets) must
-    recover every record byte-identically from the written files."""
+    recover every record byte-identically from the written files, and
+    the files must hold exactly the record bytes back to back (ISO
+    28500 framing: one closing double-CRLF, nothing between records)."""
     import glob
     import gzip as gz
 
-    from fusus_spark.sources.warc import write_wet
+    from fusus_spark.sources.warc import wet_records, write_wet
 
     out = str(tmp_path / "wet")
     write_wet(_wet_df(spark), out)
@@ -691,6 +693,9 @@ def test_write_wet_roundtrip(spark, tmp_path):
     blobs = b"".join(
         gz.open(p, "rb").read()
         for p in sorted(glob.glob(out + "/part-*.txt.gz"))
+    )
+    assert blobs == b"".join(
+        r["record"].encode("utf-8") for r in wet_records(_wet_df(spark)).collect()
     )
     recs = [b"WARC/1.0" + c for c in blobs.split(b"WARC/1.0") if c]
     texts = {}
