@@ -23,7 +23,7 @@ def entry(spark: SparkSession) -> DataFrame:
     Wraps each document's text in deterministic boilerplate-laden HTML
     chrome (in-plan, JVM-side), then runs decode -> DOM parse ->
     boilerplate strip -> block/line/word segmentation inside one fused
-    Arrow mapInPandas stage and returns the word-level table.
+    mapInArrow stage and returns the word-level table.
     """
     from fusus_spark.plans.web_queries import q_extract_words
 

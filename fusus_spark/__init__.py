@@ -10,8 +10,9 @@ Common-Crawl-style web pages:
     block/line/word TSV <=>  word TSV with boxes     (fusus/page.py:51-79)
 
 Everything runs as a declarative DataFrame plan; the only Python surface
-is Arrow-vectorized ``mapInPandas`` / ``applyInPandas`` stages (never
-per-row ``F.udf``), per BASELINE.json input_hint.
+is Arrow-batched stages — ``mapInArrow`` for extraction, ``mapInPandas``
+/ ``applyInPandas`` elsewhere (never per-row ``F.udf``), per
+BASELINE.json input_hint.
 """
 
 __version__ = "0.1.0"

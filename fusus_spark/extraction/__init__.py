@@ -1,7 +1,7 @@
 """Per-document extraction core.
 
-Pure-Python/pandas stage functions (unit-testable without Spark), fused
-into one Arrow ``mapInPandas`` pass by :mod:`fusus_spark.extraction.pipeline`.
+Pure-Python stage functions (unit-testable without Spark), fused into
+one ``mapInArrow`` pass by :mod:`fusus_spark.extraction.pipeline`.
 
 Stage contract (shared by any payload front-end, mirroring the reference's
 two front-ends converging on one TSV shape — SURVEY.md §3.2):

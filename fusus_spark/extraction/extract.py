@@ -7,7 +7,7 @@ ocr), re-expressed for HTML:
     decode -> parse DOM -> strip boilerplate -> blocks -> lines -> words
 
 Returns a plain dict so both the pytest golden tests and the Spark
-``mapInPandas`` stage share one implementation.
+``mapInArrow`` stage share one implementation.
 """
 
 from __future__ import annotations

@@ -15,8 +15,10 @@ Physical design (SURVEY.md §2.10, §4.3):
   repeats its url; the words and removals tables are a JVM ``inline``
   of those arrays;
 * skew defense is explicit: ``repartition_salted`` hashes url+salt so
-  one host's pages spread over all tasks; oversized payloads are
-  routed to a dedicated pass (``size_route``);
+  one host's pages spread over all tasks; giant pages share the one
+  lane because the session's Arrow byte cap
+  (``spark.sql.execution.arrow.maxBytesPerBatch``, set in
+  ``session.get_spark``) bounds the memory of any batch;
 * empty/error/capped urls still get their stage row (with empty
   arrays), unlike the reference which writes nothing for empty pages
   (fusus/page.py:640-647) — at 10^12 documents silent drops are
@@ -32,11 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from fusus_spark.extraction.extract import (
-    DEFAULT_MAX_HTML_BYTES,
-    STATUS_EXTRACTED,
-    extract_document,
-)
+from fusus_spark.extraction.extract import DEFAULT_MAX_HTML_BYTES, extract_document
 from fusus_spark.schema import EXTRACTED_SCHEMA, EXTRACTION_STAGE_SCHEMA
 
 _ARROW_STAGE = to_arrow_schema(EXTRACTION_STAGE_SCHEMA)
@@ -201,60 +199,3 @@ def repartition_salted(docs: DataFrame, num_partitions: int, salt: int = 42) -> 
     values collide birthday-style, leaving partitions empty/doubled.
     """
     return docs.repartition(num_partitions, F.xxhash64(F.col("url"), F.lit(salt)))
-
-
-def size_route(
-    docs: DataFrame,
-    *,
-    big_bytes: int = 1 * 1024 * 1024,
-    big_partitions: int = 8,
-    small_partitions: int = 64,
-    max_html_bytes: int = DEFAULT_MAX_HTML_BYTES,
-) -> DataFrame:
-    """Two-lane extraction: oversized payloads get their own partitions.
-
-    A 50 MB page in a batch of 1 KB pages serializes that task; routing
-    giants to a dedicated narrow lane keeps the common lane's Arrow
-    batches small and uniform (maxHits-guard philosophy: bound the
-    pathological case explicitly).
-    """
-    size = F.octet_length(F.col("html"))
-    small = repartition_salted(docs.where(size < F.lit(big_bytes)), small_partitions)
-    big = repartition_salted(docs.where(size >= F.lit(big_bytes)), big_partitions, salt=7)
-    return extract_stage(small, max_html_bytes=max_html_bytes).unionByName(
-        extract_stage(big, max_html_bytes=max_html_bytes)
-    )
-
-
-def extract_all(
-    docs: DataFrame,
-    *,
-    num_partitions: int | None = None,
-    max_html_bytes: int = DEFAULT_MAX_HTML_BYTES,
-) -> DataFrame:
-    """End-to-end: documents -> extraction stage.
-
-    With ``num_partitions`` (the path entry()/extract_words run):
-    size_route — the 1 MiB oversize lane keeps giants out of the common
-    lane's Arrow batches, each lane salted-repartitioned. Cost note for
-    the 100-TB plan: the two lanes each filter the source, so a
-    columnar store scans the html column twice; that is the deliberate
-    trade against a giant serializing a whole common-lane task (parse
-    cost dominates scan cost ~10:1 for web HTML).
-    """
-    if num_partitions:
-        return size_route(
-            docs,
-            big_partitions=max(num_partitions // 8, 1),
-            small_partitions=num_partitions,
-            max_html_bytes=max_html_bytes,
-        )
-    return extract_stage(docs, max_html_bytes=max_html_bytes)
-
-
-def count_extracted(stage: DataFrame) -> dict[str, int]:
-    """Driver-side accounting (A4/A5 metrics analog): status counts."""
-    rows = stage.groupBy("status").agg(F.count("*").alias("n")).collect()
-    out = {r["status"]: r["n"] for r in rows}
-    out.setdefault(STATUS_EXTRACTED, 0)
-    return out

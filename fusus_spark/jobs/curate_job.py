@@ -295,16 +295,8 @@ def run_job(
         )
 
     # 6. PII redaction -> final corpus
-    red = redact_pii(kept)
-    final_cols = [c for c in kept.columns if c != "text"]
     corpus = write(
-        kept.select(*final_cols).join(
-            red.select(
-                "doc_id", "n_email", "n_ipv4", "n_phone",
-                F.col("text_redacted").alias("text"),
-            ),
-            "doc_id",
-        ),
+        redact_pii(kept).drop("text").withColumnRenamed("text_redacted", "text"),
         "corpus",
         n_final=F.count("*"),
         n_pii_redacted=sum(

@@ -226,6 +226,10 @@ def main(argv: list[str] | None = None) -> None:
     # Under spark-submit, the session already exists; standalone, build one.
     spark = SparkSession.builder.appName("fusus-extract").getOrCreate()
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    from fusus_spark.session import ARROW_MAX_BYTES_PER_BATCH
+
+    # the Arrow batch byte cap session.get_spark sets (giant pages)
+    spark.conf.set("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES_PER_BATCH))
     # determinism parity with session.get_spark (crawl-date derivation is
     # already tz-free arithmetic; this pins everything else, e.g. logs)
     spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -360,14 +360,14 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def redact_pii(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """PII redaction for training corpora: emails, IPv4 addresses and
     international-format phone numbers replaced by typed placeholder
     tokens, with per-doc match counts for the redaction audit.
 
-    Returns (doc_id, n_email, n_ipv4, n_phone, text_redacted).
+    Returns ``docs`` with n_email, n_ipv4, n_phone and text_redacted
+    appended, so a caller swaps the text in place instead of joining
+    the redaction back onto its input.
 
     Whole-stage codegen end to end: each pattern is one JVM
     regexp_extract_all (count) + regexp_replace (rewrite) pair chained
@@ -377,7 +377,6 @@ def redact_pii(
     """
     # chain stepwise so each count sees the prior patterns' rewrites
     step = docs.withColumn("__pii_cur__", F.coalesce(F.col(text_col), F.lit("")))
-    selected = [F.col(id_col).alias("doc_id")]
     for name, pat, token in PII_PATTERNS:
         step = step.withColumn(
             f"n_{name}",
@@ -386,9 +385,11 @@ def redact_pii(
         ).withColumn(
             "__pii_cur__", F.regexp_replace(F.col("__pii_cur__"), pat, token)
         )
-        selected.append(F.col(f"n_{name}"))
-    selected.append(F.col("__pii_cur__").alias("text_redacted"))
-    return step.select(*selected)
+    return step.select(
+        *docs.columns,
+        *(f"n_{name}" for name, _, _ in PII_PATTERNS),
+        F.col("__pii_cur__").alias("text_redacted"),
+    )
 
 
 def host_stats(

@@ -16,9 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from fusus_spark.extraction.pipeline import (
-    extract_all,
     extract_removals,
+    extract_stage,
     extracted_from_stage,
+    repartition_salted,
     words_from_stage,
 )
 from fusus_spark.functions.text import LANG_STOPWORDS, norm_ws, tokens
@@ -55,7 +56,7 @@ def _doc_id(df: DataFrame) -> DataFrame:
 
 
 def q_extract_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stage = extract_all(docs_as_web(spark, sf_dir), num_partitions=32)
+    stage = extract_stage(repartition_salted(docs_as_web(spark, sf_dir), 32))
     words = _doc_id(words_from_stage(stage))
     return words.select(
         "doc_id",
@@ -98,7 +99,7 @@ def q_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     input url (the round-2 `extract_stats` query folded in — one
     envelope query hash-verifies both the text bytes and the counts,
     freeing a slot in the driver's 50-query correctness budget)."""
-    stage = extract_all(docs_as_web(spark, sf_dir), num_partitions=32)
+    stage = extract_stage(repartition_salted(docs_as_web(spark, sf_dir), 32))
     env = _doc_id(extracted_from_stage(stage))
     return env.select(
         "doc_id",
@@ -148,7 +149,7 @@ FROM (SELECT unnest({list(WRAP_REMOVED_RULES)!r}) AS rule_id)
 
 
 def q_extract_text_hard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stage = extract_all(docs_as_web_hard(spark, sf_dir), num_partitions=32)
+    stage = extract_stage(repartition_salted(docs_as_web_hard(spark, sf_dir), 32))
     env = _doc_id(extracted_from_stage(stage))
     return env.where(F.col("status") == "extracted").select("doc_id", "extracted_text")
 
@@ -169,7 +170,7 @@ FROM base
 
 
 def q_extract_words_hard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stage = extract_all(docs_as_web_hard(spark, sf_dir), num_partitions=32)
+    stage = extract_stage(repartition_salted(docs_as_web_hard(spark, sf_dir), 32))
     words = _doc_id(words_from_stage(stage))
     return words.select(
         "doc_id",

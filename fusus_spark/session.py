@@ -12,6 +12,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# Arrow batches into Python UDF stages are cut at this many bytes as
+# well as at maxRecordsPerBatch: it bounds the memory of a batch of
+# giant pages, so extraction needs no separate lane for them.
+ARROW_MAX_BYTES_PER_BATCH = 16 * 1024 * 1024
 
 
 def _default_mem() -> str:
@@ -50,6 +54,7 @@ def get_spark(
         # pandas/Arrow UDFs (input_hint: no per-row Python).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES_PER_BATCH))
         # Deterministic session timezone for timestamp round-trips.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("FUSUS_DRIVER_MEM", _default_mem()))

@@ -404,6 +404,7 @@ def run_extraction_job(
     done_now = 0
     skipped = 0
     locked = 0
+    relineaged = 0
     for bucket in range(n_buckets):
         lineage = input_lineage(input_path, bucket)
         # the emit SET is part of the bucket's identity, same principle
@@ -421,6 +422,11 @@ def run_extraction_job(
         if ledger.is_done(bucket, lineage):
             skipped += 1
             continue
+        if ledger.is_done(bucket):
+            # done under another lineage (changed input, emit set or
+            # robots policy; every ledger older than the emit suffix):
+            # redone, and counted so a resume never redoes it silently
+            relineaged += 1
         if fail_after is not None and done_now >= fail_after:
             raise RuntimeError(f"injected failure after {done_now} buckets")
         if not lock.acquire(bucket):
@@ -530,6 +536,7 @@ def run_extraction_job(
         "processed": done_now,
         "skipped": skipped,
         "locked": locked,
+        "relineaged": relineaged,
         "ledger_rows": len(ledger.rows()),
     }
 
@@ -564,7 +571,7 @@ def run_extraction_job_by_date(
         raise ValueError(f"no crawl_date=* partitions under {input_path}")
     out: dict = {}
     total = {"buckets": 0, "processed": 0, "skipped": 0, "locked": 0,
-             "ledger_rows": 0}
+             "relineaged": 0, "ledger_rows": 0}
     for d in todo:
         summary = run_extraction_job(
             spark,

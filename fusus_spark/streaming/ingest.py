@@ -1,7 +1,7 @@
 """Structured Streaming wrapper around the batch extraction stage.
 
 ``readStream`` over a documents directory -> the fused extraction
-``mapInPandas`` stage -> ``foreachBatch`` sink that appends words +
+``mapInArrow`` stage -> ``foreachBatch`` sink that appends words +
 envelope tables per micro-batch. Checkpointing is Spark's streaming
 checkpoint (offsets) — exactly-once per micro-batch with an idempotent
 parquet append keyed by batch id.

@@ -322,7 +322,9 @@ def test_redact_pii_matches_duckdb_oracle(spark):
     from fusus_spark.operators.curate import PII_PATTERNS
 
     docs = spark.createDataFrame(_pii_corpus(), "doc_id long, text string")
-    sdf = redact_pii(docs)
+    sdf = redact_pii(docs).select(
+        "doc_id", "n_email", "n_ipv4", "n_phone", "text_redacted"
+    )
     srows = [tuple(r) for r in sdf.collect()]
     con = duckdb.connect()
     con.sql("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")

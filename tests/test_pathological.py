@@ -47,11 +47,15 @@ def test_pathological_determinism():
 
 def test_pathological_through_spark_pipeline(spark):
     """The same adversarial corpus must survive the full Arrow pipeline
-    (mapInArrow batching, size routing, envelope accounting) with
+    (salted repartition, mapInArrow batching, envelope accounting) with
     byte-identical extracted text per url."""
     import datetime as dt
 
-    from fusus_spark.extraction.pipeline import extract_all, extracted_from_stage
+    from fusus_spark.extraction.pipeline import (
+        extract_stage,
+        extracted_from_stage,
+        repartition_salted,
+    )
 
     docs = pathological_documents()
     rows = [
@@ -62,7 +66,7 @@ def test_pathological_through_spark_pipeline(spark):
     )
     got = {
         r["url"]: r
-        for r in extracted_from_stage(extract_all(df, num_partitions=4)).collect()
+        for r in extracted_from_stage(extract_stage(repartition_salted(df, 4))).collect()
     }
     assert len(got) == len(docs)  # every url accounted
     for d in docs:

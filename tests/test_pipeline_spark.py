@@ -5,11 +5,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from fusus_spark.extraction.pipeline import (
-    count_extracted,
-    extract_all,
     extract_removals,
+    extract_stage,
     extracted_from_stage,
-    size_route,
+    repartition_salted,
     words_from_stage,
 )
 from fusus_spark.schema import DOCUMENTS_SCHEMA
@@ -28,7 +27,7 @@ def _docs_df(spark):
 
 def test_end_to_end_byte_identical(spark):
     docs = _docs_df(spark)
-    stage = extract_all(docs, num_partitions=8, max_html_bytes=CAP).cache()
+    stage = extract_stage(repartition_salted(docs, 8), max_html_bytes=CAP).cache()
     extracted = {r["url"]: r for r in extracted_from_stage(stage).collect()}
 
     fixture = fixture_documents()
@@ -38,16 +37,12 @@ def test_end_to_end_byte_identical(spark):
         assert row["status"] == doc["status"], doc["url"]
         if doc["golden"] is not None and doc["status"] == "extracted":
             assert row["extracted_text"] == doc["golden"], doc["url"]
-
-    counts = count_extracted(stage)
-    n_extracted = sum(1 for d in fixture if d["status"] == "extracted")
-    assert counts["extracted"] == n_extracted
     stage.unpersist()
 
 
 def test_words_table_invariants(spark):
     docs = _docs_df(spark)
-    stage = extract_all(docs, num_partitions=8, max_html_bytes=CAP).cache()
+    stage = extract_stage(repartition_salted(docs, 8), max_html_bytes=CAP).cache()
     words = words_from_stage(stage)
 
     # schema sanity
@@ -98,7 +93,7 @@ def test_emit_words_false_keeps_envelope_counts(spark):
     no word crosses the Arrow channel, but envelopes (incl. n_words)
     and removals are identical to the full stage — the removals-only
     fast path contract."""
-    from fusus_spark.extraction.pipeline import extract_stage, removals_from_stage
+    from fusus_spark.extraction.pipeline import removals_from_stage
 
     docs = _docs_df(spark)
     full = extract_stage(docs, max_html_bytes=CAP)
@@ -120,7 +115,7 @@ def test_stage_one_row_per_document(spark):
     records nested in it, and the split frames keep the table schemas
     (names, types, nullability) exactly."""
     from fusus_spark.extraction.extract import extract_document
-    from fusus_spark.extraction.pipeline import extract_stage, removals_from_stage
+    from fusus_spark.extraction.pipeline import removals_from_stage
     from fusus_spark.schema import EXTRACTED_SCHEMA, REMOVALS_SCHEMA, WORDS_SCHEMA
 
     rows = [(d["url"], d["html"], d["lang"], None) for d in fixture_documents()]
@@ -155,30 +150,73 @@ def test_stage_one_row_per_document(spark):
     stage.unpersist()
 
 
-def test_size_route_matches_single_lane(spark):
-    docs = _docs_df(spark)
-    a = words_from_stage(extract_all(docs, num_partitions=4, max_html_bytes=CAP))
-    b = words_from_stage(size_route(docs, big_bytes=64 * 1024,
-                                    big_partitions=2, small_partitions=4,
-                                    max_html_bytes=CAP))
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
 def test_deterministic_across_runs(spark):
     docs = _docs_df(spark)
     h1 = (
-        words_from_stage(extract_all(docs, num_partitions=8, max_html_bytes=CAP))
+        words_from_stage(extract_stage(repartition_salted(docs, 8), max_html_bytes=CAP))
         .orderBy("url", "block_id", "line_id", "word_seq")
         .select(F.md5(F.concat_ws("", "url", "word", "punc", "char_start")).alias("h"))
         .agg(F.md5(F.concat_ws("", F.collect_list("h"))).alias("corpus_hash"))
         .first()["corpus_hash"]
     )
     h2 = (
-        words_from_stage(extract_all(docs, num_partitions=3, max_html_bytes=CAP))
+        words_from_stage(extract_stage(repartition_salted(docs, 3), max_html_bytes=CAP))
         .orderBy("url", "block_id", "line_id", "word_seq")
         .select(F.md5(F.concat_ws("", "url", "word", "punc", "char_start")).alias("h"))
         .agg(F.md5(F.concat_ws("", F.collect_list("h"))).alias("corpus_hash"))
         .first()["corpus_hash"]
     )
     assert h1 == h2
+
+
+def test_arrow_batches_capped_by_bytes(spark):
+    """Eight 4 MiB pages among 2 000 small ones, all in one partition:
+    the session's byte cap splits the Arrow input of a ``mapInArrow``
+    stage so no batch exceeds the cap by more than one page, and the
+    giants still extract exactly as ``extract_document`` does."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from fusus_spark.extraction.extract import extract_document
+    from fusus_spark.session import ARROW_MAX_BYTES_PER_BATCH
+
+    giant_bytes = 4 * 1024 * 1024
+
+    def page(i: int, size: int) -> bytes:
+        # the bulk sits in an inline script: a whole parse/strip over
+        # the bytes, a few words of text out
+        head = f"<html><body><main><p>page {i} body text stays</p><script>"
+        tail = "</script></main></body></html>"
+        return (head + "x" * (size - len(head) - len(tail)) + tail).encode()
+
+    rows = [
+        (f"https://ex.com/p{i}", page(i, giant_bytes if i % 251 == 0 else 900), "en")
+        for i in range(2008)
+    ]
+    giants = {url: html for url, html, _ in rows if len(html) == giant_bytes}
+    assert len(giants) == 8
+    docs = spark.createDataFrame(rows, "url string, html binary, lang string").coalesce(1)
+
+    def probe(batches):
+        for rb in batches:
+            sizes = pc.binary_length(rb.column("html"))
+            n_giant = pc.sum(pc.greater_equal(sizes, giant_bytes)).as_py() or 0
+            yield pa.RecordBatch.from_pydict(
+                {"rows": [rb.num_rows], "nbytes": [rb.nbytes], "giants": [n_giant]}
+            )
+
+    seen = docs.mapInArrow(probe, "rows long, nbytes long, giants long").collect()
+    assert sum(r["rows"] for r in seen) == len(rows)
+    assert max(r["nbytes"] for r in seen) <= ARROW_MAX_BYTES_PER_BATCH + giant_bytes
+    assert sum(r["giants"] for r in seen) == 8
+    assert sum(1 for r in seen if r["giants"]) >= 2
+
+    stage = extracted_from_stage(extract_stage(docs))
+    got = {
+        r["url"]: r
+        for r in stage.where(F.col("url").isin(list(giants))).collect()
+    }
+    for url, html in giants.items():
+        want = extract_document(html, lang="en")
+        assert got[url]["status"] == want["status"] == "extracted", url
+        assert got[url]["extracted_text"] == want["extracted_text"], url

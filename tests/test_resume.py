@@ -145,9 +145,10 @@ def test_multi_emit_one_parse_three_tables(spark, bucketed_input, tmp_path):
     from pyspark.sql import functions as F
 
     from fusus_spark.extraction.pipeline import (
-        extract_all,
         extract_removals,
+        extract_stage,
         extracted_from_stage,
+        repartition_salted,
     )
 
     out = str(tmp_path / "out3")
@@ -164,7 +165,7 @@ def test_multi_emit_one_parse_three_tables(spark, bucketed_input, tmp_path):
     assert summary["processed"] == N_BUCKETS - 2 and summary["skipped"] == 2
 
     docs = spark.read.parquet(bucketed_input).drop("bucket")
-    want_env = extracted_from_stage(extract_all(docs, num_partitions=4))
+    want_env = extracted_from_stage(extract_stage(repartition_salted(docs, 4)))
     got_env = spark.read.parquet(out + "/extracted/bucket=*")
     assert got_env.count() == want_env.count()
     assert got_env.exceptAll(want_env).count() == 0
@@ -489,7 +490,8 @@ def test_doc_level_emit_only_skips_parse(spark, tmp_path):
 def test_emit_set_is_part_of_the_resume_key(spark, tmp_path):
     """Adding a kind to a finished run must REDO buckets (and produce
     the new side table) rather than skip-all and silently emit
-    nothing (review finding)."""
+    nothing (review finding); the summary counts the redone buckets
+    as ``relineaged``."""
     inp = str(tmp_path / "input")
     rows = [
         (f"http://ex.com/{i}", None,
@@ -506,13 +508,16 @@ def test_emit_set_is_part_of_the_resume_key(spark, tmp_path):
     led = str(tmp_path / "ledger")
 
     s1 = run_extraction_job(spark, inp, out, led, 2, emit=("words",))
-    assert s1["processed"] == 2
+    assert s1["processed"] == 2 and s1["relineaged"] == 0
     s2 = run_extraction_job(spark, inp, out, led, 2, emit=("words", "jsonld"))
     assert s2["processed"] == 2 and s2["skipped"] == 0   # invalidated
+    # ...and the summary says why: every done bucket was relineaged
+    assert s2["relineaged"] == 2
     assert spark.read.parquet(out + "/jsonld/bucket=*").count() == 12
     # identical emit resumes as before
     s3 = run_extraction_job(spark, inp, out, led, 2, emit=("words", "jsonld"))
     assert s3["skipped"] == 2 and s3["processed"] == 0
+    assert s3["relineaged"] == 0
 
 
 def _spark_jobs(spark, run) -> int:

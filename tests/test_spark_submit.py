@@ -61,10 +61,10 @@ def test_spark_submit_py_files_local_cluster(spark, tmp_path):
 
     # the executor-side extraction matches the in-process batch path
     # byte-for-byte (same words table)
-    from fusus_spark.extraction.pipeline import extract_all, words_from_stage
+    from fusus_spark.extraction.pipeline import extract_stage, words_from_stage
 
     words = spark.read.parquet(out).drop("bucket")
-    batch = words_from_stage(extract_all(docs)).select(*words.columns)
+    batch = words_from_stage(extract_stage(docs)).select(*words.columns)
     assert batch.exceptAll(words).count() == 0
     assert words.exceptAll(batch).count() == 0
 

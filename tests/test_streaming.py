@@ -29,9 +29,9 @@ def test_streaming_matches_batch(spark, tmp_path):
     assert got.count() == len(rows)  # every url accounted once
 
     # byte-identical vs the batch path
-    from fusus_spark.extraction.pipeline import extract_all, extracted_from_stage
+    from fusus_spark.extraction.pipeline import extract_stage, extracted_from_stage
 
-    batch = extracted_from_stage(extract_all(docs)).select("url", "extracted_text")
+    batch = extracted_from_stage(extract_stage(docs)).select("url", "extracted_text")
     stream = got.select("url", "extracted_text")
     assert batch.exceptAll(stream).count() == 0
     assert stream.exceptAll(batch).count() == 0

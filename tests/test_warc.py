@@ -182,7 +182,11 @@ def test_read_warc_to_extraction(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from fusus_spark.extraction.pipeline import extract_all, extracted_from_stage
+    from fusus_spark.extraction.pipeline import (
+        extract_stage,
+        extracted_from_stage,
+        repartition_salted,
+    )
 
     seg = _segment()
     (tmp_path / "seg-00000.warc").write_bytes(seg)
@@ -203,7 +207,7 @@ def test_read_warc_to_extraction(spark, tmp_path):
     assert by_url["http://ex.com/b"][0]["warc_ts"] == dt.datetime(2026, 2, 3, 4, 5, 6)
     assert all(r["text"] is None and r["lang"] == "en" for r in rows)
 
-    env = extracted_from_stage(extract_all(docs, num_partitions=2))
+    env = extracted_from_stage(extract_stage(repartition_salted(docs, 2)))
     got = {
         (r["url"], r["extracted_text"])
         for r in env.where(F.col("status") == "extracted").collect()
@@ -286,7 +290,11 @@ def test_warc_header_charset_reaches_extraction(spark, tmp_path):
     extraction stage (the charset column rides the bucketed table)."""
     from pyspark.sql import functions as F
 
-    from fusus_spark.extraction.pipeline import extract_all, extracted_from_stage
+    from fusus_spark.extraction.pipeline import (
+        extract_stage,
+        extracted_from_stage,
+        repartition_salted,
+    )
 
     body = "<html><main><p>привет мир сегодня</p></main></html>".encode("cp1251")
     block = (b"HTTP/1.1 200 OK\r\n"
@@ -295,7 +303,7 @@ def test_warc_header_charset_reaches_extraction(spark, tmp_path):
     (tmp_path / "seg.warc").write_bytes(seg)
     docs = read_warc(spark, str(tmp_path))
     assert docs.collect()[0]["charset"] == "windows-1251"
-    env = extracted_from_stage(extract_all(docs, num_partitions=2))
+    env = extracted_from_stage(extract_stage(repartition_salted(docs, 2)))
     row = env.where(F.col("status") == "extracted").collect()[0]
     assert row["extracted_text"] == "привет мир сегодня"
 

@@ -5,7 +5,7 @@ Checks the plans Catalyst actually builds:
   * small dims are broadcast (BroadcastHashJoin, not SortMergeJoin),
   * aggregations are partial+final (no single-stage agg),
   * WholeStageCodegen spans cover the relational tail,
-  * the extraction stage has exactly one ArrowEvalPython / MapInPandas.
+  * the extraction stage has exactly one MapInArrow over one scan.
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """
@@ -20,8 +20,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CHECKS = {
     # the words/removals tables are a JVM inline (Generate) of the
-    # stage's nested arrays, not a second python pass or a row filter
-    "extract_words": [("MapInArrow", True), ("Generate", True), ("Exchange", None)],
+    # stage's nested arrays, not a second python pass or a row filter.
+    # One extraction lane: one MapInArrow over one documents scan, no
+    # size-routed union (the session's Arrow byte cap bounds batches)
+    "extract_words": [("MapInArrow", 1), ("Scan parquet", 1), ("Union", False),
+                      ("Generate", True), ("Exchange", None)],
+    "extract_text": [("MapInArrow", 1), ("Scan parquet", 1), ("Union", False)],
+    "extract_words_hard": [("MapInArrow", 1), ("Scan parquet", 1), ("Union", False)],
+    "extract_text_hard": [("MapInArrow", 1), ("Scan parquet", 1), ("Union", False)],
     # removals come from the SAME fused pass as words/envelopes: exactly
     # one MapInArrow node, and no second python stage (int = exact count
     # of plan-detail nodes '(n) <op>')
