@@ -1,8 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship extraction end-to-end on sf0.001;
-``queries()`` exposes every implemented operator (SURVEY.md §2 + the
-training-data-pipeline surface); ``oracle_sql()`` gives the DuckDB
+``queries()`` is the registry of 50 web-native queries over the
+``documents`` and ``embeddings`` tables: extraction, text analysis,
+dedup, similarity search, multimodal plumbing, alignment and the
+curate tiers ``curate_job`` runs. ``oracle_sql()`` gives the DuckDB
 equivalent for every query — the alignment queries (including
 ``align_editions``, the sequential 2-pointer fuzzy walk) run the full
 aligner on provably-exact scenarios whose ground truth is closed-form
@@ -31,12 +33,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from fusus_spark.plans.registry import QUERIES
+    from fusus_spark.plans.web_queries import WEB_QUERIES
 
-    return dict(QUERIES)
+    return dict(WEB_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    from fusus_spark.plans.registry import ORACLES
+    from fusus_spark.plans.web_queries import WEB_ORACLES
 
-    return dict(ORACLES)
+    return dict(WEB_ORACLES)

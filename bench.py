@@ -102,13 +102,12 @@ def bench_extraction(spark, sf_dir: str, replicate: int, cpus: int) -> dict:
     }
 
 
-# dedup_jaccard re-joined the headline in round 2: the df-cap
-# stop-shingle prefilter (shingles in > 250 docs dropped from the
-# universe) bounds the inverted-index fan-in, so the synthetic corpus's
-# shared-vocabulary degeneration no longer blows the join up.
-# dedup_passages joined in round 3: the Lee-et-al exact-substring tier
-# (window-hash inverted index; lives outside the 50-query registry, so
-# the frame comes from _extra_queries below).
+# The headline is the extraction pass plus the web pipeline's heavy
+# operators: text stats, the dedup tiers (dedup_jaccard's df-cap
+# stop-shingle prefilter bounds its inverted-index fan-in; dedup_passages
+# is the Lee-et-al exact-substring tier), brute-force kNN and one crawl
+# scheduling cycle. All but frontier_cycle are registry queries;
+# frontier_cycle comes from _extra_queries below.
 HEADLINE = [
     "extract_words",
     "token_stats",
@@ -119,12 +118,6 @@ HEADLINE = [
     "dedup_passages",
     "knn_bruteforce",
     "frontier_cycle",
-    "pricing_summary",
-    "top_orders",
-    "nation_revenue",
-    "sessionize",
-    "running_value",
-    "events_daily",
 ]
 
 
@@ -191,15 +184,7 @@ def _frontier_cycle(spark, sf_dir: str):
 
 def _extra_queries():
     """Headline frames for operators outside the driver registry."""
-    from fusus_spark.operators.curate import dedup_passages
-    from fusus_spark.sources.testdata import load
-
-    return {
-        "dedup_passages": lambda spark, sf_dir: dedup_passages(
-            load(spark, sf_dir, "documents"), n=8
-        ),
-        "frontier_cycle": _frontier_cycle,
-    }
+    return {"frontier_cycle": _frontier_cycle}
 
 
 def main() -> None:
@@ -244,8 +229,9 @@ def main() -> None:
     rounds = int(os.environ.get("FUSUS_BENCH_ROUNDS", "3"))
     docs, n_docs, total_bytes = prepare_extraction(spark, sf_dir, replicate)
     # one extraction trial in the still-clean JVM: the interleaved
-    # rounds below share the executor with 13 other queries' shuffle
-    # files and GC debris, which taxes the python-worker stage ~10-20%
+    # rounds below share the executor with the other headline queries'
+    # shuffle files and GC debris, which taxes the python-worker stage
+    # ~10-20%
     ext_wall, n_words = extraction_trial(docs)
     for name in names:  # one untimed warmup pass (codegen + caches)
         qs[name](spark, sf_dir).count()

@@ -1,4 +1,5 @@
-"""Web/extraction/training-data queries + DuckDB oracles.
+"""The driver registry: web/extraction/training-data queries + DuckDB
+oracles (``WEB_QUERIES`` / ``WEB_ORACLES``, read by __spark_entry__).
 
 Naming/aliasing rule (driver contract): every computed column is aliased
 IDENTICALLY in the Spark plan and the oracle SQL. Float-valued outputs
@@ -22,8 +23,18 @@ from fusus_spark.extraction.pipeline import (
     repartition_salted,
     words_from_stage,
 )
+from fusus_spark.extraction.rewrite import (
+    ARABIC_REWRITE_RULES,
+    DEFAULT_COMPILED,
+    DEFAULT_REWRITE_RULES,
+    MOJIBAKE_WRAP_POST,
+    MOJIBAKE_WRAP_PRE,
+    CompiledRules,
+    apply_rewrites,
+    compiled_for_lang,
+)
 from fusus_spark.functions.text import LANG_STOPWORDS, norm_ws, tokens
-from fusus_spark.operators import dedup, similarity, textstats
+from fusus_spark.operators import curate, dedup, frontier, similarity, textstats, webgraph
 from fusus_spark.sources.testdata import (
     WRAP_HARD_REMOVED_RULES,
     WRAP_REMOVED_RULES,
@@ -55,9 +66,9 @@ def _doc_id(df: DataFrame) -> DataFrame:
 # Extraction flagship
 
 
-def q_extract_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stage = extract_stage(repartition_salted(docs_as_web(spark, sf_dir), 32))
-    words = _doc_id(words_from_stage(stage))
+def _word_rows(web: DataFrame) -> DataFrame:
+    """The words table of extracting ``web``, keyed by doc_id."""
+    words = _doc_id(words_from_stage(extract_stage(repartition_salted(web, 32))))
     return words.select(
         "doc_id",
         F.col("block_id").cast("int").alias("block_id"),
@@ -68,6 +79,28 @@ def q_extract_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("char_start").cast("int").alias("char_start"),
         F.col("char_end").cast("int").alias("char_end"),
     )
+
+
+def _removal_counts(web: DataFrame) -> DataFrame:
+    """Removed-node count per boilerplate rule over ``web``."""
+    rem = extract_removals(web)
+    return (
+        rem.where(~F.col("kept"))
+        .groupBy("rule_id")
+        .agg(F.count("*").cast("bigint").alias("n_removed"))
+    )
+
+
+def _removals_oracle_sql(rules: tuple[str, ...]) -> str:
+    """Every document's chrome triggers each of ``rules`` once."""
+    return f"""
+SELECT rule_id, (SELECT count(*) FROM documents)::BIGINT AS n_removed
+FROM (SELECT unnest({list(rules)!r}) AS rule_id)
+"""
+
+
+def q_extract_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _word_rows(docs_as_web(spark, sf_dir))
 
 
 ORACLE_EXTRACT_WORDS = f"""
@@ -125,18 +158,10 @@ FROM documents
 
 
 def q_extract_removals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rem = extract_removals(docs_as_web(spark, sf_dir))
-    return (
-        rem.where(~F.col("kept"))
-        .groupBy("rule_id")
-        .agg(F.count("*").cast("bigint").alias("n_removed"))
-    )
+    return _removal_counts(docs_as_web(spark, sf_dir))
 
 
-ORACLE_EXTRACT_REMOVALS = f"""
-SELECT rule_id, (SELECT count(*) FROM documents)::BIGINT AS n_removed
-FROM (SELECT unnest({list(WRAP_REMOVED_RULES)!r}) AS rule_id)
-"""
+ORACLE_EXTRACT_REMOVALS = _removals_oracle_sql(WRAP_REMOVED_RULES)
 
 
 # ---------------------------------------------------------------------------
@@ -170,18 +195,7 @@ FROM base
 
 
 def q_extract_words_hard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stage = extract_stage(repartition_salted(docs_as_web_hard(spark, sf_dir), 32))
-    words = _doc_id(words_from_stage(stage))
-    return words.select(
-        "doc_id",
-        F.col("block_id").cast("int").alias("block_id"),
-        F.col("line_id").cast("int").alias("line_id"),
-        F.col("word_seq").cast("int").alias("word_seq"),
-        "word",
-        "punc",
-        F.col("char_start").cast("int").alias("char_start"),
-        F.col("char_end").cast("int").alias("char_end"),
-    )
+    return _word_rows(docs_as_web_hard(spark, sf_dir))
 
 
 # Offsets: the title line is 'doc <id>'; every body token is preceded by
@@ -229,18 +243,10 @@ SELECT * FROM title_rows UNION ALL SELECT * FROM body_rows
 
 
 def q_extract_removals_hard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rem = extract_removals(docs_as_web_hard(spark, sf_dir))
-    return (
-        rem.where(~F.col("kept"))
-        .groupBy("rule_id")
-        .agg(F.count("*").cast("bigint").alias("n_removed"))
-    )
+    return _removal_counts(docs_as_web_hard(spark, sf_dir))
 
 
-ORACLE_EXTRACT_REMOVALS_HARD = f"""
-SELECT rule_id, (SELECT count(*) FROM documents)::BIGINT AS n_removed
-FROM (SELECT unnest({list(WRAP_HARD_REMOVED_RULES)!r}) AS rule_id)
-"""
+ORACLE_EXTRACT_REMOVALS_HARD = _removals_oracle_sql(WRAP_HARD_REMOVED_RULES)
 
 
 # ---------------------------------------------------------------------------
@@ -1088,28 +1094,17 @@ def q_align_editions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # T26 rewrite engine as a driver query
 
 
-def q_normalize_rewrites(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T26 rewrite-rule engine over deterministically-corrupted text:
-    each doc's payload is wrapped in mojibake / double-escaped-entity /
-    zero-width material (in-plan, JVM concat) and repaired by the
-    leftmost longest-first apply-once engine inside an Arrow batch UDF.
-    The wrap is rule-disjoint, so the oracle is the equivalent
-    sorted-order replace chain (equivalence pinned in
-    tests/test_rewrite.py); the nasty overlap semantics are covered by
-    the unit tests, not this query."""
+def _rewritten(spark: SparkSession, sf_dir: str, pre: str, post: str,
+               compiled: CompiledRules = DEFAULT_COMPILED) -> DataFrame:
+    """(doc_id, normalized): each text wrapped in ``pre``/``post``
+    (in-plan, JVM concat) and repaired by the leftmost longest-first
+    apply-once rewrite engine inside an Arrow batch UDF."""
     import pandas as pd
 
-    from fusus_spark.extraction.rewrite import (
-        MOJIBAKE_WRAP_POST,
-        MOJIBAKE_WRAP_PRE,
-        apply_rewrites,
-    )
-
     docs = load(spark, sf_dir, "documents")
-    corrupted = F.concat(
-        F.lit(MOJIBAKE_WRAP_PRE), F.col("text"), F.lit(MOJIBAKE_WRAP_POST)
+    src = docs.select(
+        "doc_id", F.concat(F.lit(pre), F.col("text"), F.lit(post)).alias("corrupted")
     )
-    src = docs.select("doc_id", corrupted.alias("corrupted"))
 
     def run(batches):
         for pdf in batches:
@@ -1117,7 +1112,7 @@ def q_normalize_rewrites(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {
                     "doc_id": pdf["doc_id"],
                     "normalized": [
-                        apply_rewrites(t) for t in pdf["corrupted"].tolist()
+                        apply_rewrites(t, compiled) for t in pdf["corrupted"].tolist()
                     ],
                 }
             )
@@ -1125,23 +1120,34 @@ def q_normalize_rewrites(spark: SparkSession, sf_dir: str) -> DataFrame:
     return src.mapInPandas(run, "doc_id long, normalized string")
 
 
-def _normalize_rewrites_oracle_sql() -> str:
-    from fusus_spark.extraction.rewrite import (
-        DEFAULT_REWRITE_RULES,
-        MOJIBAKE_WRAP_POST,
-        MOJIBAKE_WRAP_PRE,
-    )
-
+def _rewritten_oracle_sql(pre: str, post: str, rules) -> str:
+    """The wraps are rule-disjoint, so the engine equals the replace
+    chain over ``rules`` in (longest, then lexicographic) order."""
     def q(s: str) -> str:
         return s.replace("'", "''")
 
-    expr = f"'{q(MOJIBAKE_WRAP_PRE)}' || text || '{q(MOJIBAKE_WRAP_POST)}'"
-    for src, repl in sorted(DEFAULT_REWRITE_RULES, key=lambda r: (-len(r[0]), r[0])):
+    expr = f"'{q(pre)}' || text || '{q(post)}'"
+    for src, repl in sorted(rules, key=lambda r: (-len(r[0]), r[0])):
         expr = f"replace({expr}, '{q(src)}', '{q(repl)}')"
     return f"SELECT doc_id, {expr} AS normalized FROM documents"
 
 
-ORACLE_NORMALIZE_REWRITES = _normalize_rewrites_oracle_sql()
+def q_normalize_rewrites(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T26 rewrite-rule engine over deterministically-corrupted text:
+    each doc's payload is wrapped in mojibake / double-escaped-entity /
+    zero-width material and repaired by the rewrite engine. The oracle
+    is the equivalent sorted-order replace chain (equivalence pinned in
+    tests/test_rewrite.py); the nasty overlap semantics are covered by
+    the unit tests, not this query."""
+    return _rewritten(spark, sf_dir, MOJIBAKE_WRAP_PRE, MOJIBAKE_WRAP_POST)
+
+
+ORACLE_NORMALIZE_REWRITES = _rewritten_oracle_sql(
+    MOJIBAKE_WRAP_PRE, MOJIBAKE_WRAP_POST, DEFAULT_REWRITE_RULES
+)
+
+_ARABIC_PRE = "أَلِف مدرسةٌ "
+_ARABIC_POST = " هدى كتـاب"
 
 
 def q_normalize_arabic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1151,53 +1157,12 @@ def q_normalize_arabic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arabic-wrapped payloads; oracle = the sorted replace chain over the
     combined table (rule-disjoint wrap, same argument as
     normalize_rewrites)."""
-    import pandas as pd
-
-    from fusus_spark.extraction.rewrite import apply_rewrites, compiled_for_lang
-
-    pre = "أَلِف مدرسةٌ "
-    post = " هدى كتـاب"
-    docs = load(spark, sf_dir, "documents")
-    src = docs.select(
-        "doc_id",
-        F.concat(F.lit(pre), F.col("text"), F.lit(post)).alias("corrupted"),
-    )
-    compiled = compiled_for_lang("ar")
-
-    def run(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "normalized": [
-                        apply_rewrites(t, compiled)
-                        for t in pdf["corrupted"].tolist()
-                    ],
-                }
-            )
-
-    return src.mapInPandas(run, "doc_id long, normalized string")
+    return _rewritten(spark, sf_dir, _ARABIC_PRE, _ARABIC_POST, compiled_for_lang("ar"))
 
 
-def _normalize_arabic_oracle_sql() -> str:
-    from fusus_spark.extraction.rewrite import (
-        ARABIC_REWRITE_RULES,
-        DEFAULT_REWRITE_RULES,
-    )
-
-    def q(s: str) -> str:
-        return s.replace("'", "''")
-
-    pre = "أَلِف مدرسةٌ "
-    post = " هدى كتـاب"
-    expr = f"'{q(pre)}' || text || '{q(post)}'"
-    rules = DEFAULT_REWRITE_RULES + ARABIC_REWRITE_RULES
-    for src, repl in sorted(rules, key=lambda r: (-len(r[0]), r[0])):
-        expr = f"replace({expr}, '{q(src)}', '{q(repl)}')"
-    return f"SELECT doc_id, {expr} AS normalized FROM documents"
-
-
-ORACLE_NORMALIZE_ARABIC = _normalize_arabic_oracle_sql()
+ORACLE_NORMALIZE_ARABIC = _rewritten_oracle_sql(
+    _ARABIC_PRE, _ARABIC_POST, DEFAULT_REWRITE_RULES + ARABIC_REWRITE_RULES
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1396,6 +1361,110 @@ FROM per GROUP BY url
 """
 
 
+# ---------------------------------------------------------------------------
+# Alignment prefilter
+
+
+# PassJoin segmenting for the 12-char prefix / distance-4 edit join:
+# (chunk_id, 1-based start, length). 5 = maxD + 1 segments, so any pair
+# within distance 4 has at least one untouched segment (pigeonhole).
+_LEV_PREFIX_LEN = 12
+_LEV_MAX_D = 4
+_LEV_CHUNKS = ((0, 1, 3), (1, 4, 3), (2, 7, 2), (3, 9, 2), (4, 11, 2))
+
+
+def q_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Alignment prefilter (J1 relational half): close doc prefixes by
+    edit distance <= 4, as a PassJoin-style blocked similarity join.
+
+    lev(a, b) <= d implies: partition a into d+1 segments and at least
+    one segment survives all edits, appearing verbatim in b at a start
+    position shifted by at most d (Li et al., PassJoin, VLDB'12). So
+    the join key is (lang, chunk_id, segment chars) — every index
+    segment against every shifted probe substring — which is COMPLETE
+    (the all-pairs DuckDB oracle is unchanged and still hash-matches)
+    while the fan-in per key is the character-level block, not the
+    whole language (the round-1 plan was quadratic within each of ~5
+    languages). Prefixes shorter than 12 chars take a broadcast
+    all-pairs lane (rare degenerate docs). Candidates are verified with
+    the exact JVM levenshtein.
+    """
+    docs = load(spark, sf_dir, "documents").select(
+        "doc_id", "lang", F.substring(F.trim("text"), 1, _LEV_PREFIX_LEN).alias("prefix")
+    )
+    return levenshtein_blocked_pairs(docs)
+
+
+def levenshtein_blocked_pairs(docs: DataFrame) -> DataFrame:
+    """PassJoin-blocked edit-distance self-join over (doc_id, lang,
+    prefix) rows; see q_levenshtein_pairs for the completeness argument."""
+    docs = docs.localCheckpoint()  # reused by index, probe, short lane + 2 verify sides
+
+    full = docs.where(F.length("prefix") == _LEV_PREFIX_LEN)
+    segs = F.array(*[
+        F.struct(F.lit(c).alias("chunk"), F.substring("prefix", s, ln).alias("seg"))
+        for c, s, ln in _LEV_CHUNKS
+    ])
+    idx = full.select("doc_id", "lang", F.explode(segs).alias("x")).select(
+        "doc_id", "lang", F.col("x.chunk").alias("chunk"), F.col("x.seg").alias("seg")
+    )
+    probes = F.array_distinct(F.array(*[
+        F.struct(F.lit(c).alias("chunk"), F.substring("prefix", p, ln).alias("seg"))
+        for c, s, ln in _LEV_CHUNKS
+        for p in range(max(1, s - _LEV_MAX_D),
+                       min(s + _LEV_MAX_D, _LEV_PREFIX_LEN - ln + 1) + 1)
+    ]))
+    prb = full.select("doc_id", "lang", F.explode(probes).alias("x")).select(
+        "doc_id", "lang", F.col("x.chunk").alias("chunk"), F.col("x.seg").alias("seg")
+    )
+    cand = (
+        idx.alias("i").join(
+            prb.alias("p"),
+            (F.col("i.lang") == F.col("p.lang"))
+            & (F.col("i.chunk") == F.col("p.chunk"))
+            & (F.col("i.seg") == F.col("p.seg"))
+            & (F.col("i.doc_id") != F.col("p.doc_id")),
+        )
+        .select(
+            F.least("i.doc_id", "p.doc_id").alias("doc_a"),
+            F.greatest("i.doc_id", "p.doc_id").alias("doc_b"),
+        )
+    )
+    # degenerate short prefixes: all-pairs within lang, short side broadcast
+    short = docs.where(F.length("prefix") < _LEV_PREFIX_LEN)
+    short_cand = (
+        F.broadcast(short.alias("s")).join(
+            docs.alias("t"),
+            (F.col("s.lang") == F.col("t.lang"))
+            & (F.col("s.doc_id") != F.col("t.doc_id")),
+        )
+        .select(
+            F.least("s.doc_id", "t.doc_id").alias("doc_a"),
+            F.greatest("s.doc_id", "t.doc_id").alias("doc_b"),
+        )
+    )
+    pairs = cand.unionByName(short_cand).dropDuplicates(["doc_a", "doc_b"])
+    va = docs.select(F.col("doc_id").alias("doc_a"), F.col("lang").alias("lang"),
+                     F.col("prefix").alias("pa"))
+    vb = docs.select(F.col("doc_id").alias("doc_b"), F.col("prefix").alias("pb"))
+    return (
+        pairs.join(va, "doc_a")
+        .join(vb, "doc_b")
+        .withColumn("dist", F.levenshtein("pa", "pb").cast("int"))
+        .where(F.col("dist") <= _LEV_MAX_D)
+        .select("doc_a", "doc_b", "lang", "dist")
+    )
+
+
+ORACLE_LEVENSHTEIN_PAIRS = """
+WITH p AS (SELECT doc_id, lang, substr(trim(text), 1, 12) AS prefix FROM documents)
+SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.lang AS lang,
+       levenshtein(a.prefix, b.prefix)::INT AS dist
+FROM p a JOIN p b ON a.lang = b.lang AND a.doc_id < b.doc_id
+WHERE levenshtein(a.prefix, b.prefix) <= 4
+"""
+
+
 def q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-data curation: keep one representative per
     exact-dup group, with quality >= 0.45 (on the e6 integer, so the
@@ -1455,6 +1524,424 @@ WHERE d.doc_id = g.rep_id AND q.quality_e6 >= 450000
 """
 
 
+# ---------------------------------------------------------------------------
+# Curate tiers: the operators curate_job runs, each over `documents`.
+# Where an operator needs urls, html or snapshot rows they are built
+# in-plan from doc_id, and the oracle derives the same values in SQL.
+
+
+def hosted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents + a url spreading them over seven hosts h0.com..h6.com."""
+    return load(spark, sf_dir, "documents").withColumn(
+        "url", F.concat(F.lit("http://h"), F.pmod("doc_id", F.lit(7)),
+                        F.lit(".com/p/"), "doc_id")
+    )
+
+
+def linked_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(url, html) pages on hosted_docs' urls; each page links to host
+    h<doc_id % 5>.com with anchor text a<doc_id % 11>."""
+    return hosted_docs(spark, sf_dir).select(
+        "url",
+        F.encode(
+            F.concat(F.lit('<a href="http://h'), F.pmod("doc_id", F.lit(5)),
+                     F.lit('.com/x">a'), F.pmod("doc_id", F.lit(11)),
+                     F.lit("</a><p>"), F.col("text"), F.lit("</p>")),
+            "UTF-8",
+        ).alias("html"),
+    )
+
+
+def snapshot_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(url, content_hash, crawl_date) snapshot history: 350 urls over
+    seven hosts, three content versions, nine crawl dates."""
+    return load(spark, sf_dir, "documents").select(
+        F.concat(F.lit("http://h"), F.pmod("doc_id", F.lit(7)),
+                 F.lit(".com/p/"), F.pmod("doc_id", F.lit(50))).alias("url"),
+        F.md5(F.concat(F.lit("c"), F.pmod("doc_id", F.lit(3)))).alias("content_hash"),
+        F.concat(F.lit("2026-01-0"), (F.pmod("doc_id", F.lit(9)) + 1)).alias("crawl_date"),
+    )
+
+
+# SQL twin of hosted_docs' host (doc ids are non-negative, so DuckDB's
+# % agrees with pmod)
+_ORC_HOST = "'h' || (doc_id % 7) || '.com'"
+
+
+def q_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-rules keep/drop verdict; the reasons array is joined with
+    '|' so the driver hashes one string column."""
+    gate = curate.curation_gate(load(spark, sf_dir, "documents"))
+    return gate.select(
+        "doc_id", "n_tokens", "keep",
+        F.concat_ws("|", "reasons").alias("reasons_str"),
+    )
+
+
+ORACLE_CURATION_GATE = f"""
+WITH toks AS (SELECT doc_id, {_ORC_TOKS_SAFE} AS t FROM documents),
+sig AS (
+  SELECT doc_id, len(t) AS n,
+         CASE WHEN len(t) > 0 THEN round(list_sum(list_transform(t, x -> length(x))) / len(t) * 1000000) ELSE 0 END::BIGINT AS mean_e6,
+         CASE WHEN len(t) > 0 THEN round(len(list_filter(t, x -> x IN ({_EN_STOPS_SQL}))) / len(t) * 1000000) ELSE 0 END::BIGINT AS stop_e6,
+         COALESCE((SELECT round(max(c) / (len(any_value(k.t)) - 1) * 1000000)::BIGINT FROM (
+             SELECT count(*) AS c FROM (
+               SELECT k.t[i] || ' ' || k.t[i + 1] AS g
+               FROM unnest(generate_series(1, len(k.t) - 1)) AS u(i)
+             ) GROUP BY g
+           )), 0) AS bigram_e6
+  FROM toks k GROUP BY doc_id, t
+),
+flags AS (
+  SELECT doc_id, n,
+         list_sort(list_filter([
+           CASE WHEN n < 5 THEN 'too_few_tokens' END,
+           CASE WHEN n > 100000 THEN 'too_many_tokens' END,
+           CASE WHEN mean_e6 < 1500000 THEN 'mean_token_too_short' END,
+           CASE WHEN mean_e6 > 12000000 THEN 'mean_token_too_long' END,
+           CASE WHEN stop_e6 < 20000 THEN 'too_few_stopwords' END,
+           CASE WHEN bigram_e6 > 200000 THEN 'repetitive_bigrams' END
+         ], x -> x IS NOT NULL)) AS reasons
+  FROM sig
+)
+SELECT doc_id, n::INT AS n_tokens, len(reasons) = 0 AS keep,
+       COALESCE(array_to_string(reasons, '|'), '') AS reasons_str
+FROM flags
+"""
+
+
+def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return textstats.repetition_stats(load(spark, sf_dir, "documents"))
+
+
+ORACLE_REPETITION_STATS = f"""
+WITH toks AS (SELECT doc_id, {_ORC_TOKS_SAFE} AS t FROM documents),
+words AS (SELECT doc_id, unnest(t) AS w FROM toks),
+bigrams AS (
+  SELECT doc_id, t[i] || ' ' || t[i + 1] AS g
+  FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)
+  WHERE len(t) >= 2
+),
+wtop AS (
+  SELECT doc_id, max(c) AS top FROM (
+    SELECT doc_id, count(*) AS c FROM words GROUP BY doc_id, w
+  ) GROUP BY doc_id
+),
+btop AS (
+  SELECT doc_id, max(c) AS top FROM (
+    SELECT doc_id, count(*) AS c FROM bigrams GROUP BY doc_id, g
+  ) GROUP BY doc_id
+)
+SELECT k.doc_id,
+       len(k.t)::INT AS n_tokens,
+       COALESCE(round(wtop.top / len(k.t) * 1000000), 0)::BIGINT AS top_word_share_e6,
+       COALESCE(round(btop.top / (len(k.t) - 1) * 1000000), 0)::BIGINT AS top_bigram_share_e6
+FROM toks k
+LEFT JOIN wtop ON k.doc_id = wtop.doc_id
+LEFT JOIN btop ON k.doc_id = btop.doc_id
+"""
+
+
+def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplicated-line removal (§2.8 ``unionByName``: blank lines bypass
+    the dup join and rejoin the flagged non-blank ones)."""
+    return curate.dedup_lines(load(spark, sf_dir, "documents"))
+
+
+ORACLE_DEDUP_LINES = """
+WITH lines AS (
+  SELECT doc_id, len(l)::INT AS n_lines, i AS pos, l[i] AS line, trim(l[i]) AS lt
+  FROM (SELECT doc_id, string_split(text, chr(10)) AS l FROM documents),
+       unnest(generate_series(1, len(l))) AS u(i)
+),
+dups AS (
+  SELECT md5(lt) AS h FROM lines WHERE length(lt) > 0
+  GROUP BY md5(lt) HAVING count(DISTINCT doc_id) >= 2
+),
+marked AS (
+  SELECT l.*,
+         (length(lt) > 0 AND md5(lt) IN (SELECT h FROM dups)) AS dropped
+  FROM lines l
+)
+SELECT doc_id, any_value(n_lines) AS n_lines,
+       sum(CASE WHEN NOT dropped THEN 1 ELSE 0 END)::INT AS n_kept,
+       COALESCE(string_agg(CASE WHEN NOT dropped THEN line END, chr(10) ORDER BY pos), '') AS text_dedup
+FROM marked GROUP BY doc_id
+"""
+
+
+_PASSAGE_N = 8
+
+
+def q_dedup_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return curate.dedup_passages(load(spark, sf_dir, "documents"), n=_PASSAGE_N)
+
+
+# owner = min(struct(doc_id, pos)) expressed as min(doc_id*C + pos),
+# equivalent while pos < C
+ORACLE_DEDUP_PASSAGES = f"""
+WITH toks AS (SELECT doc_id, {_ORC_TOKS_SAFE} AS t FROM documents),
+wins AS (
+  SELECT doc_id, i - 1 AS pos, md5(array_to_string(t[i:i+{_PASSAGE_N - 1}], ' ')) AS h
+  FROM toks, unnest(generate_series(1, len(t) - {_PASSAGE_N - 1})) AS u(i)
+  WHERE len(t) >= {_PASSAGE_N}
+),
+dups AS (
+  SELECT h, min(doc_id * 10000000 + pos) AS owner_key
+  FROM wins GROUP BY h HAVING count(*) >= 2
+),
+hits AS (
+  SELECT w.doc_id, w.pos FROM wins w JOIN dups d USING (h)
+  WHERE w.doc_id * 10000000 + w.pos <> d.owner_key
+),
+covered AS (
+  SELECT DISTINCT doc_id, pos + j AS cpos
+  FROM hits, unnest(generate_series(0, {_PASSAGE_N - 1})) AS u(j)
+),
+tokpos AS (
+  SELECT doc_id, i - 1 AS p, t[i] AS tok
+  FROM toks, unnest(generate_series(1, len(t))) AS u(i)
+  WHERE len(t) >= 1
+),
+cov_per_doc AS (SELECT doc_id, count(*)::INT AS n_removed FROM covered GROUP BY doc_id),
+text_per_doc AS (
+  SELECT tp.doc_id, string_agg(tp.tok, ' ' ORDER BY tp.p) AS text_dedup
+  FROM tokpos tp
+  LEFT JOIN covered c ON tp.doc_id = c.doc_id AND tp.p = c.cpos
+  WHERE c.cpos IS NULL
+  GROUP BY tp.doc_id
+)
+SELECT t.doc_id,
+       len(t.t)::INT AS n_tokens,
+       COALESCE(c.n_removed, 0)::INT AS n_removed,
+       CASE WHEN c.n_removed IS NULL THEN COALESCE(d.text, '')
+            ELSE COALESCE(x.text_dedup, '') END AS text_dedup
+FROM toks t
+JOIN documents d USING (doc_id)
+LEFT JOIN cov_per_doc c USING (doc_id)
+LEFT JOIN text_per_doc x USING (doc_id)
+"""
+
+
+def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Eval-set 5-gram decontamination (J4 broadcast hash join: the eval
+    grams are broadcast); the eval set is documents 0-4, so every
+    contaminated document shares a 5-gram with one of them."""
+    docs = load(spark, sf_dir, "documents")
+    evals = docs.where(F.col("doc_id") < 5).select(F.col("doc_id").alias("eval_id"), "text")
+    return curate.decontaminate(docs, evals, n=5)
+
+
+ORACLE_DECONTAMINATE = """
+WITH dt AS (
+  SELECT doc_id,
+         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+  FROM documents
+  WHERE length(trim(text)) > 0
+),
+dg AS (
+  SELECT DISTINCT doc_id, md5(array_to_string(t[i:i+4], ' ')) AS gh
+  FROM dt, unnest(generate_series(1, len(t) - 4)) AS u(i)
+  WHERE len(t) >= 5
+),
+dn AS (SELECT doc_id, count(*) AS n_ngrams FROM dg GROUP BY doc_id),
+eg AS (SELECT DISTINCT gh FROM dg WHERE doc_id < 5)
+SELECT dg.doc_id,
+       any_value(dn.n_ngrams)::INT AS n_ngrams,
+       count(*)::INT AS n_hit_ngrams,
+       round(count(*) / any_value(dn.n_ngrams) * 1000000)::BIGINT AS hit_ratio_e6
+FROM dg JOIN eg USING (gh) JOIN dn USING (doc_id)
+GROUP BY dg.doc_id
+"""
+
+
+def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
+    red = curate.redact_pii(load(spark, sf_dir, "documents"))
+    return red.select("doc_id", "n_email", "n_ipv4", "n_phone", "text_redacted")
+
+
+def _redact_pii_oracle_sql() -> str:
+    # DuckDB string literals keep backslashes verbatim — patterns go in as-is
+    em, ip, ph = (pat for _, pat, _ in curate.PII_PATTERNS)
+    return f"""
+WITH s0 AS (SELECT doc_id, COALESCE(text, '') AS t FROM documents),
+s1 AS (SELECT doc_id, len(regexp_extract_all(t, '{em}'))::INT AS n_email,
+              regexp_replace(t, '{em}', '<EMAIL>', 'g') AS t FROM s0),
+s2 AS (SELECT doc_id, n_email, len(regexp_extract_all(t, '{ip}'))::INT AS n_ipv4,
+              regexp_replace(t, '{ip}', '<IP>', 'g') AS t FROM s1),
+s3 AS (SELECT doc_id, n_email, n_ipv4,
+              len(regexp_extract_all(t, '{ph}'))::INT AS n_phone,
+              regexp_replace(t, '{ph}', '<PHONE>', 'g') AS t FROM s2)
+SELECT doc_id, n_email, n_ipv4, n_phone, t AS text_redacted FROM s3
+"""
+
+
+ORACLE_REDACT_PII = _redact_pii_oracle_sql()
+
+
+def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sequence packing (A7/W3: a per-shard running token sum cut into
+    24-token bins, then row_number inside each bin), on the portable
+    shard key pmod(doc_id, 4)."""
+    return curate.pack_sequences(
+        load(spark, sf_dir, "documents"), target_tokens=24, shards=4,
+        shard_expr=F.pmod(F.col("doc_id"), F.lit(4)),
+    )
+
+
+ORACLE_PACK_SEQUENCES = f"""
+WITH t AS (
+  SELECT doc_id, len({_ORC_TOKS_SAFE})::INT AS n_tokens, (doc_id % 4)::INT AS shard
+  FROM documents
+),
+w AS (
+  SELECT doc_id, n_tokens, shard,
+         sum(n_tokens) OVER (PARTITION BY shard ORDER BY n_tokens DESC, doc_id
+                             ROWS UNBOUNDED PRECEDING) AS cum,
+         row_number() OVER (PARTITION BY shard ORDER BY n_tokens DESC, doc_id) AS rn
+  FROM t
+),
+p AS (
+  SELECT doc_id, n_tokens, shard,
+         floor((cum - n_tokens) / 24)::INT AS seq_id, rn
+  FROM w
+)
+SELECT doc_id, n_tokens, shard, seq_id,
+       row_number() OVER (PARTITION BY shard, seq_id ORDER BY rn)::INT AS seq_pos
+FROM p
+"""
+
+
+def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dataset-card rollup: per-language rows plus the total from one
+    grouping-sets aggregation (ROLLUP), distinct hosts included."""
+    return curate.corpus_report(hosted_docs(spark, sf_dir), url_col="url")
+
+
+ORACLE_CORPUS_REPORT = f"""
+WITH base AS (
+  SELECT lang AS _lang,
+         CASE WHEN text IS NULL OR length({_ORC_NORM}) = 0 THEN 1 ELSE 0 END AS _empty,
+         len({_ORC_TOKS_SAFE}) AS _toks,
+         length({_ORC_NORM}) AS _chars,
+         octet_length(encode(text)) AS _bytes,
+         {_ORC_HOST} AS _host
+  FROM documents
+),
+g AS (
+  SELECT _lang AS scope,
+         GROUPING(_lang) = 1 AS is_total,
+         count(*) AS n_docs,
+         sum(_empty)::BIGINT AS n_empty,
+         count(DISTINCT _host)::BIGINT AS n_hosts,
+         sum(_toks)::BIGINT AS tokens_total,
+         sum(_chars)::BIGINT AS chars_total,
+         sum(_bytes)::BIGINT AS bytes_total
+  FROM base GROUP BY ROLLUP(_lang)
+)
+SELECT *, round(tokens_total * 10000 / n_docs)::BIGINT AS avg_tokens_e4 FROM g
+"""
+
+
+def q_apply_host_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Host policy: broadcast anti-join of the blocklist (h3.com) and
+    the md5-threshold cap of ~10 documents per host."""
+    block = spark.createDataFrame([("h3.com",)], "domain string")
+    kept = curate.apply_host_policy(
+        hosted_docs(spark, sf_dir), block_domains=block, cap_per_host=10
+    )
+    return kept.select("doc_id", "url")
+
+
+ORACLE_APPLY_HOST_POLICY = f"""
+WITH d AS (
+  SELECT doc_id, 'http://' || {_ORC_HOST} || '/p/' || doc_id AS url, {_ORC_HOST} AS host
+  FROM documents WHERE {_ORC_HOST} <> 'h3.com'
+),
+c AS (SELECT host AS h, count(*) AS n FROM d GROUP BY host HAVING count(*) > 10),
+t AS (SELECT h, printf('%05x', (10 * 1048576) // n) AS thr FROM c)
+SELECT d.doc_id, d.url FROM d LEFT JOIN t ON d.host = t.h
+WHERE t.thr IS NULL OR substring(md5(d.host || ':' || d.doc_id), 1, 5) < t.thr
+"""
+
+
+def q_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return curate.host_stats(hosted_docs(spark, sf_dir))
+
+
+ORACLE_HOST_STATS = f"""
+WITH d AS (
+  SELECT {_ORC_HOST} AS host, len({_ORC_TOKS_SAFE}) AS n_tok, md5(text) AS th
+  FROM documents
+)
+SELECT host, count(*)::INT AS n_docs, sum(n_tok)::BIGINT AS total_tokens,
+       round(avg(n_tok) * 10000)::BIGINT AS mean_tokens_e4,
+       count(DISTINCT th)::INT AS n_distinct_texts,
+       round((1 - count(DISTINCT th) / count(*)) * 1000000)::BIGINT AS dup_ratio_e6
+FROM d GROUP BY host
+"""
+
+
+def q_host_change_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Host churn rollup over url_change_stats (W2 change detection: a
+    per-url window compares each content hash with the previous one)."""
+    return frontier.host_change_stats(
+        frontier.url_change_stats(snapshot_docs(spark, sf_dir))
+    )
+
+
+ORACLE_HOST_CHANGE_STATS = f"""
+WITH snaps AS (
+  SELECT 'http://' || {_ORC_HOST} || '/p/' || (doc_id % 50) AS url,
+         {_ORC_HOST} AS host,
+         md5('c' || (doc_id % 3)) AS content_hash,
+         '2026-01-0' || (doc_id % 9 + 1) AS crawl_date
+  FROM documents
+),
+o AS (
+  SELECT url, host, content_hash,
+         lag(content_hash) OVER (PARTITION BY url ORDER BY crawl_date, content_hash) AS prev
+  FROM snaps
+),
+u AS (
+  SELECT any_value(host) AS host,
+         CASE WHEN count(*) > 1
+              THEN round(sum(CASE WHEN prev IS NOT NULL AND content_hash != prev
+                                  THEN 1 ELSE 0 END) / (count(*) - 1) * 1000000)
+              ELSE 0 END::BIGINT AS cr
+  FROM o GROUP BY url
+)
+SELECT host, count(*)::INT AS n_urls,
+       round(avg(cr))::BIGINT AS mean_change_ratio_e6,
+       sum(CASE WHEN cr > 500000 THEN 1 ELSE 0 END)::INT AS n_hot_urls,
+       round(sum(CASE WHEN cr > 500000 THEN 1 ELSE 0 END) / count(*) * 1000000)::BIGINT AS hot_ratio_e6
+FROM u GROUP BY host
+"""
+
+
+def q_host_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 inbound cross-host anchor texts per host (O4 grouped top-k,
+    (n_refs DESC, anchor ASC) tie-break)."""
+    return webgraph.host_anchor_texts(linked_docs(spark, sf_dir), k=3)
+
+
+ORACLE_HOST_ANCHOR_TEXTS = f"""
+WITH p AS (
+  SELECT {_ORC_HOST} AS src_host, 'h' || (doc_id % 5) || '.com' AS host,
+         'a' || (doc_id % 11) AS anchor
+  FROM documents
+),
+c AS (
+  SELECT host, anchor, count(*)::INT AS n_refs
+  FROM p WHERE src_host <> host GROUP BY host, anchor
+)
+SELECT host, anchor, n_refs,
+       sum(n_refs) OVER (PARTITION BY host)::INT AS host_refs,
+       row_number() OVER (PARTITION BY host ORDER BY n_refs DESC, anchor ASC)::INT AS rnk
+FROM c QUALIFY rnk <= 3
+"""
+
+
 WEB_QUERIES: dict = {
     "align_editions": q_align_editions,
     "align_merged": q_align_merged,
@@ -1493,6 +1980,19 @@ WEB_QUERIES: dict = {
     "multimodal_meta": q_multimodal_meta,
     "multimodal_resize": q_multimodal_resize,
     "multimodal_frames": q_multimodal_frames,
+    "levenshtein_pairs": q_levenshtein_pairs,
+    "curation_gate": q_curation_gate,
+    "repetition_stats": q_repetition_stats,
+    "dedup_lines": q_dedup_lines,
+    "dedup_passages": q_dedup_passages,
+    "decontaminate": q_decontaminate,
+    "redact_pii": q_redact_pii,
+    "pack_sequences": q_pack_sequences,
+    "corpus_report": q_corpus_report,
+    "apply_host_policy": q_apply_host_policy,
+    "host_stats": q_host_stats,
+    "host_change_stats": q_host_change_stats,
+    "host_anchor_texts": q_host_anchor_texts,
 }
 
 WEB_ORACLES: dict[str, str] = {
@@ -1533,4 +2033,17 @@ WEB_ORACLES: dict[str, str] = {
     "align_quality": ORACLE_ALIGN_QUALITY,
     "align_stretches": ORACLE_ALIGN_STRETCHES,
     "align_editions": ORACLE_ALIGN_EDITIONS,
+    "levenshtein_pairs": ORACLE_LEVENSHTEIN_PAIRS,
+    "curation_gate": ORACLE_CURATION_GATE,
+    "repetition_stats": ORACLE_REPETITION_STATS,
+    "dedup_lines": ORACLE_DEDUP_LINES,
+    "dedup_passages": ORACLE_DEDUP_PASSAGES,
+    "decontaminate": ORACLE_DECONTAMINATE,
+    "redact_pii": ORACLE_REDACT_PII,
+    "pack_sequences": ORACLE_PACK_SEQUENCES,
+    "corpus_report": ORACLE_CORPUS_REPORT,
+    "apply_host_policy": ORACLE_APPLY_HOST_POLICY,
+    "host_stats": ORACLE_HOST_STATS,
+    "host_change_stats": ORACLE_HOST_CHANGE_STATS,
+    "host_anchor_texts": ORACLE_HOST_ANCHOR_TEXTS,
 }

@@ -27,3 +27,33 @@ def driver_actions(monkeypatch):
 
         monkeypatch.setattr(DataFrame, name, wrapped)
     return calls
+
+
+@pytest.fixture
+def registry_parity(spark, tmp_path):
+    """``check(name, rows, schema)``: write ``rows`` as
+    ``tmp_path/documents.parquet``, run registry query ``name`` on it in
+    Spark and its oracle in DuckDB over the same table, and assert the
+    row count, columns and value hash agree."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from tools.parity import value_hash
+
+    def check(name: str, rows: list[tuple],
+              schema: str = "doc_id BIGINT, text VARCHAR") -> None:
+        con = duckdb.connect()
+        con.sql(f"CREATE TABLE documents ({schema})")
+        con.executemany(
+            f"INSERT INTO documents VALUES ({', '.join('?' * len(rows[0]))})", rows
+        )
+        con.sql(f"COPY documents TO '{tmp_path}/documents.parquet' (FORMAT PARQUET)")
+        sdf = entrymod.queries()[name](spark, str(tmp_path))
+        srows = [tuple(r) for r in sdf.collect()]
+        orc = con.sql(entrymod.oracle_sql()[name])
+        orows = [tuple(r) for r in orc.fetchall()]
+        assert len(srows) == len(orows), f"{name}: row count"
+        assert sorted(sdf.columns) == sorted(orc.columns), f"{name}: schema"
+        assert value_hash(sdf.columns, srows) == value_hash(orc.columns, orows), name
+
+    return check

@@ -1,12 +1,9 @@
-"""Curation-gate tests: hand-pinned verdicts + DuckDB oracle cross-check."""
+"""Curation-gate tests: hand-pinned verdicts + the registry query's
+DuckDB oracle on the same corpus."""
 
 from __future__ import annotations
 
-import duckdb
-from pyspark.sql import functions as F
-
 from fusus_spark.operators.curate import curation_gate
-from tools.parity import value_hash
 
 
 def _corpus() -> list[tuple[int, str]]:
@@ -36,57 +33,5 @@ def test_curation_gate_hand_cases(spark):
     assert got[5]["keep"] is False  # empty doc fails the floor rules
 
 
-def test_curation_gate_matches_duckdb_oracle(spark):
-    from fusus_spark.functions.text import LANG_STOPWORDS
-
-    df = spark.createDataFrame(_corpus(), "doc_id long, text string")
-    sdf = curation_gate(df).select(
-        "doc_id", "n_tokens", "keep",
-        F.concat_ws("|", "reasons").alias("reasons_str"),
-    )
-    srows = [tuple(r) for r in sdf.collect()]
-    stops = ", ".join(f"'{w}'" for w in sorted(LANG_STOPWORDS["en"]))
-    con = duckdb.connect()
-    con.sql("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?, ?)", _corpus())
-    orc = con.sql(f"""
-WITH toks AS (
-  SELECT doc_id,
-         CASE WHEN length(trim(regexp_replace(text, '\\s+', ' ', 'g'))) = 0
-              THEN []::VARCHAR[]
-              ELSE string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')
-         END AS t
-  FROM documents
-),
-sig AS (
-  SELECT doc_id, len(t) AS n,
-         CASE WHEN len(t) > 0 THEN round(list_sum(list_transform(t, x -> length(x))) / len(t) * 1000000) ELSE 0 END::BIGINT AS mean_e6,
-         CASE WHEN len(t) > 0 THEN round(len(list_filter(t, x -> x IN ({stops}))) / len(t) * 1000000) ELSE 0 END::BIGINT AS stop_e6,
-         COALESCE((SELECT round(max(c) / (len(any_value(k.t)) - 1) * 1000000)::BIGINT FROM (
-             SELECT count(*) AS c FROM (
-               SELECT k.t[i] || ' ' || k.t[i + 1] AS g
-               FROM unnest(generate_series(1, len(k.t) - 1)) AS u(i)
-             ) GROUP BY g
-           )), 0) AS bigram_e6
-  FROM toks k GROUP BY doc_id, t
-),
-flags AS (
-  SELECT doc_id, n,
-         list_sort(list_filter([
-           CASE WHEN n < 5 THEN 'too_few_tokens' END,
-           CASE WHEN n > 100000 THEN 'too_many_tokens' END,
-           CASE WHEN mean_e6 < 1500000 THEN 'mean_token_too_short' END,
-           CASE WHEN mean_e6 > 12000000 THEN 'mean_token_too_long' END,
-           CASE WHEN stop_e6 < 20000 THEN 'too_few_stopwords' END,
-           CASE WHEN bigram_e6 > 200000 THEN 'repetitive_bigrams' END
-         ], x -> x IS NOT NULL)) AS reasons
-  FROM sig
-)
-SELECT doc_id, n::INT AS n_tokens, len(reasons) = 0 AS keep,
-       COALESCE(array_to_string(reasons, '|'), '') AS reasons_str
-FROM flags
-""")
-    orows = [tuple(r) for r in orc.fetchall()]
-    assert len(srows) == len(orows)
-    assert sorted(sdf.columns) == sorted(orc.columns)
-    assert value_hash(sdf.columns, srows) == value_hash(orc.columns, orows)
+def test_curation_gate_matches_duckdb_oracle(registry_parity):
+    registry_parity("curation_gate", _corpus())

@@ -1,6 +1,7 @@
-"""Decontamination / line-dedup / PII-redaction tests: hand-pinned
-behavior + DuckDB oracle hash cross-checks (these operators live outside
-the driver's 50-query registry budget, so the oracle runs in-test)."""
+"""Decontamination / line-dedup / passage-dedup / PII-redaction / corpus
+report tests: hand-pinned behavior + DuckDB oracle hash cross-checks.
+Fixtures shaped like ``documents`` run through the registry query and
+its oracle; the eval- and url-shaped fixtures keep their own SQL."""
 
 from __future__ import annotations
 
@@ -136,37 +137,8 @@ def test_dedup_lines_hand_cases(spark):
     assert got[6]["n_kept"] == 3
 
 
-def test_dedup_lines_matches_duckdb_oracle(spark):
-    docs = spark.createDataFrame(_line_corpus(), "doc_id long, text string")
-    sdf = dedup_lines(docs)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    con.sql("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?, ?)", _line_corpus())
-    orc = con.sql("""
-WITH lines AS (
-  SELECT doc_id, len(l)::INT AS n_lines, i AS pos, l[i] AS line, trim(l[i]) AS lt
-  FROM (SELECT doc_id, string_split(text, chr(10)) AS l FROM documents),
-       unnest(generate_series(1, len(l))) AS u(i)
-),
-dups AS (
-  SELECT md5(lt) AS h FROM lines WHERE length(lt) > 0
-  GROUP BY md5(lt) HAVING count(DISTINCT doc_id) >= 2
-),
-marked AS (
-  SELECT l.*,
-         (length(lt) > 0 AND md5(lt) IN (SELECT h FROM dups)) AS dropped
-  FROM lines l
-)
-SELECT doc_id, any_value(n_lines) AS n_lines,
-       sum(CASE WHEN NOT dropped THEN 1 ELSE 0 END)::INT AS n_kept,
-       COALESCE(string_agg(CASE WHEN NOT dropped THEN line END, chr(10) ORDER BY pos), '') AS text_dedup
-FROM marked GROUP BY doc_id
-""")
-    orows = [tuple(r) for r in orc.fetchall()]
-    assert len(srows) == len(orows)
-    assert sorted(sdf.columns) == sorted(orc.columns)
-    assert value_hash(sdf.columns, srows) == value_hash(orc.columns, orows)
+def test_dedup_lines_matches_duckdb_oracle(registry_parity):
+    registry_parity("dedup_lines", _line_corpus())
 
 
 # ----------------------------------------------------------- dedup_passages
@@ -220,68 +192,10 @@ def test_dedup_passages_hand_cases(spark):
     assert got[8]["text_dedup"] == "newline\npreserved doc\n\nuntouched  entirely"
 
 
-def test_dedup_passages_matches_duckdb_oracle(spark):
-    docs = spark.createDataFrame(_passage_corpus(), "doc_id long, text string")
-    sdf = dedup_passages(docs, n=4)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    con.sql("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?, ?)", _passage_corpus())
-    # owner = min(struct(doc_id, pos)) expressed as min(doc_id*C + pos),
-    # equivalent while pos < C
-    orc = con.sql("""
-WITH toks AS (
-  SELECT doc_id,
-         CASE WHEN length(trim(regexp_replace(text, '\\s+', ' ', 'g'))) = 0
-              THEN []::VARCHAR[]
-              ELSE string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')
-         END AS t
-  FROM documents
-),
-wins AS (
-  SELECT doc_id, i - 1 AS pos, md5(array_to_string(t[i:i+3], ' ')) AS h
-  FROM toks, unnest(generate_series(1, len(t) - 3)) AS u(i)
-  WHERE len(t) >= 4
-),
-dups AS (
-  SELECT h, min(doc_id * 10000000 + pos) AS owner_key
-  FROM wins GROUP BY h HAVING count(*) >= 2
-),
-hits AS (
-  SELECT w.doc_id, w.pos FROM wins w JOIN dups d USING (h)
-  WHERE w.doc_id * 10000000 + w.pos <> d.owner_key
-),
-covered AS (
-  SELECT DISTINCT doc_id, pos + j AS cpos
-  FROM hits, unnest(generate_series(0, 3)) AS u(j)
-),
-tokpos AS (
-  SELECT doc_id, i - 1 AS p, t[i] AS tok
-  FROM toks, unnest(generate_series(1, len(t))) AS u(i)
-  WHERE len(t) >= 1
-),
-cov_per_doc AS (SELECT doc_id, count(*)::INT AS n_removed FROM covered GROUP BY doc_id),
-text_per_doc AS (
-  SELECT tp.doc_id, string_agg(tp.tok, ' ' ORDER BY tp.p) AS text_dedup
-  FROM tokpos tp
-  LEFT JOIN covered c ON tp.doc_id = c.doc_id AND tp.p = c.cpos
-  WHERE c.cpos IS NULL
-  GROUP BY tp.doc_id
-)
-SELECT t.doc_id,
-       len(t.t)::INT AS n_tokens,
-       COALESCE(c.n_removed, 0)::INT AS n_removed,
-       CASE WHEN c.n_removed IS NULL THEN COALESCE(d.text, '')
-            ELSE COALESCE(x.text_dedup, '') END AS text_dedup
-FROM toks t
-JOIN documents d USING (doc_id)
-LEFT JOIN cov_per_doc c USING (doc_id)
-LEFT JOIN text_per_doc x USING (doc_id)
-""")
-    orows = [tuple(r) for r in orc.fetchall()]
-    assert len(srows) == len(orows)
-    assert sorted(sdf.columns) == sorted(orc.columns)
-    assert value_hash(sdf.columns, srows) == value_hash(orc.columns, orows)
+def test_dedup_passages_matches_duckdb_oracle(registry_parity):
+    # the registry's n=8 windows are exactly PASSAGE: owner doc 0, copies
+    # in docs 1, 2 and twice in doc 6; the short and blank docs pass through
+    registry_parity("dedup_passages", _passage_corpus())
 
 
 # --------------------------------------------------------------- redact_pii
@@ -318,34 +232,8 @@ def test_redact_pii_hand_cases(spark):
     assert got[6]["n_ipv4"] == 1 and "8.8.8.8" not in got[6]["text_redacted"]
 
 
-def test_redact_pii_matches_duckdb_oracle(spark):
-    from fusus_spark.operators.curate import PII_PATTERNS
-
-    docs = spark.createDataFrame(_pii_corpus(), "doc_id long, text string")
-    sdf = redact_pii(docs).select(
-        "doc_id", "n_email", "n_ipv4", "n_phone", "text_redacted"
-    )
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    con.sql("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?, ?)", _pii_corpus())
-    # DuckDB string literals keep backslashes verbatim — patterns go in as-is
-    (em, ip, ph) = [p[1] for p in PII_PATTERNS]
-    orc = con.sql(f"""
-WITH s0 AS (SELECT doc_id, COALESCE(text, '') AS t FROM documents),
-s1 AS (SELECT doc_id, len(regexp_extract_all(t, '{em}'))::INT AS n_email,
-              regexp_replace(t, '{em}', '<EMAIL>', 'g') AS t FROM s0),
-s2 AS (SELECT doc_id, n_email, len(regexp_extract_all(t, '{ip}'))::INT AS n_ipv4,
-              regexp_replace(t, '{ip}', '<IP>', 'g') AS t FROM s1),
-s3 AS (SELECT doc_id, n_email, n_ipv4,
-              len(regexp_extract_all(t, '{ph}'))::INT AS n_phone,
-              regexp_replace(t, '{ph}', '<PHONE>', 'g') AS t FROM s2)
-SELECT doc_id, n_email, n_ipv4, n_phone, t AS text_redacted FROM s3
-""")
-    orows = [tuple(r) for r in orc.fetchall()]
-    assert len(srows) == len(orows)
-    assert sorted(sdf.columns) == sorted(orc.columns)
-    assert value_hash(sdf.columns, srows) == value_hash(orc.columns, orows)
+def test_redact_pii_matches_duckdb_oracle(registry_parity):
+    registry_parity("redact_pii", _pii_corpus())
 
 
 def test_dedup_passages_matches_python_reference(spark):

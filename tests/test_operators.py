@@ -334,7 +334,7 @@ def test_levenshtein_blocked_equals_all_pairs(spark):
     import random
 
     from fusus_spark.operators.align import _lev
-    from fusus_spark.plans.relational_queries import levenshtein_blocked_pairs
+    from fusus_spark.plans.web_queries import levenshtein_blocked_pairs
 
     rng = random.Random(13)
     al = "abcdefgh"

@@ -23,12 +23,12 @@ FAST_SUBSET = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "knn_bruteforce",
-    "pricing_summary",
-    "sessionize",
-    "events_daily",
+    "decontaminate",
+    "corpus_report",
+    "host_change_stats",
     "multimodal_meta",
-    "events_asof",
-    "lineitem_rollup",
+    "pack_sequences",
+    "host_anchor_texts",
     "curate_corpus",
     # round-2 surface
     "extract_words_hard",
@@ -68,30 +68,16 @@ def test_query_matches_oracle(spark, duck, name):
 
 
 @pytest.mark.parametrize("name", ["extract_text", "extract_text_hard", "extract_words_hard"])
-def test_extraction_parity_with_empty_docs(spark, tmp_path, name):
+def test_extraction_parity_with_empty_docs(registry_parity, name):
     """Empty / whitespace-only documents: the engine emits an empty token
     array while DuckDB string_split('', ' ') yields [''] — the oracles'
     guarded token expression must agree (advisor round-2 latent bug)."""
-    import duckdb as ddb
-
-    sf_dir = str(tmp_path)
-    ddb.sql(
-        "COPY (SELECT * FROM (VALUES "
-        "(0::BIGINT, 'alpha beta gamma', 'en', 'web', 16::BIGINT), "
-        "(1::BIGINT, '', 'en', 'web', 0::BIGINT), "
-        "(2::BIGINT, '   ', 'en', 'web', 3::BIGINT), "
-        "(3::BIGINT, 'solo', 'en', 'web', 4::BIGINT)"
-        ") t(doc_id, text, lang, source, n_chars)) "
-        f"TO '{sf_dir}/documents.parquet' (FORMAT PARQUET)"
+    registry_parity(
+        name,
+        [(0, "alpha beta gamma", "en", "web", 16), (1, "", "en", "web", 0),
+         (2, "   ", "en", "web", 3), (3, "solo", "en", "web", 4)],
+        "doc_id BIGINT, text VARCHAR, lang VARCHAR, source VARCHAR, n_chars BIGINT",
     )
-    con = ddb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
-    sdf = entrymod.queries()[name](spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    orc = con.sql(entrymod.oracle_sql()[name])
-    orows = [tuple(r) for r in orc.fetchall()]
-    assert len(srows) == len(orows), f"{name}: row count"
-    assert value_hash(sdf.columns, srows) == value_hash(orc.columns, orows), name
 
 
 def test_entry_contract(spark):
@@ -103,5 +89,25 @@ def test_entry_contract(spark):
 def test_every_oracle_key_has_query():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    assert set(oracles) <= set(qs)
-    assert len(qs) >= 30
+    assert len(qs) == 50
+    assert set(oracles) == set(qs)
+
+
+def test_every_plan_audit_check_resolves():
+    """Every plan_audit CHECKS name is a registry query or an
+    ``_extra_frames`` builder, and the CHECKS literal repeats no key (a
+    repeated key silently drops the first entry's checks)."""
+    import ast
+    import inspect
+
+    from tools import plan_audit
+
+    orphans = set(plan_audit.CHECKS) - set(entrymod.queries()) - set(plan_audit._extra_frames())
+    assert not orphans, sorted(orphans)
+    tree = ast.parse(inspect.getsource(plan_audit))
+    checks = next(
+        node.value for node in tree.body
+        if isinstance(node, ast.Assign) and node.targets[0].id == "CHECKS"
+    )
+    keys = [k.value for k in checks.keys]
+    assert len(keys) == len(set(keys)), sorted(k for k in keys if keys.count(k) > 1)

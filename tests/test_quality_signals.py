@@ -1,17 +1,15 @@
 """Gopher/RefinedWeb-style quality signals: repetition + compression.
 
-repetition_stats is hash-verified against a DuckDB oracle in-test (the
-driver registry is capped at 50 entries); compression_ratio has no SQL
-equivalent and is pinned against direct zlib.
+repetition_stats is hash-verified through its registry query and DuckDB
+oracle; compression_ratio has no SQL equivalent and is pinned against
+direct zlib.
 """
 
 from __future__ import annotations
 
-import duckdb
 import zlib
 
 from fusus_spark.operators.textstats import compression_ratio, repetition_stats
-from tools.parity import value_hash
 
 
 def _corpus() -> list[tuple[int, str]]:
@@ -46,52 +44,8 @@ def test_repetition_stats_hand_cases(spark):
     assert got[5]["top_bigram_share_e6"] == round(5 / 9 * 1e6)
 
 
-def test_repetition_stats_matches_duckdb_oracle(spark):
-    df = spark.createDataFrame(_corpus(), "doc_id long, text string")
-    sdf = repetition_stats(df)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    con.sql("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?, ?)", _corpus())
-    orc = con.sql("""
-WITH toks AS (
-  SELECT doc_id,
-         CASE WHEN length(trim(regexp_replace(text, '\\s+', ' ', 'g'))) = 0
-              THEN []::VARCHAR[]
-              ELSE string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')
-         END AS t
-  FROM documents
-),
-words AS (
-  SELECT doc_id, unnest(t) AS w FROM toks
-),
-bigrams AS (
-  SELECT doc_id, t[i] || ' ' || t[i + 1] AS g
-  FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)
-  WHERE len(t) >= 2
-),
-wtop AS (
-  SELECT doc_id, max(c) AS top FROM (
-    SELECT doc_id, count(*) AS c FROM words GROUP BY doc_id, w
-  ) GROUP BY doc_id
-),
-btop AS (
-  SELECT doc_id, max(c) AS top FROM (
-    SELECT doc_id, count(*) AS c FROM bigrams GROUP BY doc_id, g
-  ) GROUP BY doc_id
-)
-SELECT k.doc_id,
-       len(k.t)::INT AS n_tokens,
-       COALESCE(round(wtop.top / len(k.t) * 1000000), 0)::BIGINT AS top_word_share_e6,
-       COALESCE(round(btop.top / (len(k.t) - 1) * 1000000), 0)::BIGINT AS top_bigram_share_e6
-FROM toks k
-LEFT JOIN wtop ON k.doc_id = wtop.doc_id
-LEFT JOIN btop ON k.doc_id = btop.doc_id
-""")
-    orows = [tuple(r) for r in orc.fetchall()]
-    assert len(srows) == len(orows)
-    assert sorted(sdf.columns) == sorted(orc.columns)
-    assert value_hash(sdf.columns, srows) == value_hash(orc.columns, orows)
+def test_repetition_stats_matches_duckdb_oracle(registry_parity):
+    registry_parity("repetition_stats", _corpus())
 
 
 def test_compression_ratio_matches_zlib(spark):

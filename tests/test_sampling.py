@@ -205,49 +205,10 @@ def test_pack_sequences_invariants(spark):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_pack_sequences_matches_duckdb_oracle(spark):
-    from pyspark.sql import functions as F
-
-    from fusus_spark.operators.curate import pack_sequences
-
-    docs = spark.createDataFrame(_pack_corpus(), "doc_id long, text string")
-    # portable shard key so DuckDB reproduces the assignment exactly
-    sdf = pack_sequences(
-        docs, target_tokens=24, shards=4, shard_expr=F.pmod(F.col("doc_id"), F.lit(4))
-    )
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    con.sql("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?, ?)", _pack_corpus())
-    orc = con.sql("""
-WITH t AS (
-  SELECT doc_id,
-         CASE WHEN length(trim(regexp_replace(text, '\\s+', ' ', 'g'))) = 0 THEN 0
-              ELSE len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' '))
-         END::INT AS n_tokens,
-         (doc_id % 4)::INT AS shard
-  FROM documents
-),
-w AS (
-  SELECT doc_id, n_tokens, shard,
-         sum(n_tokens) OVER (PARTITION BY shard ORDER BY n_tokens DESC, doc_id
-                             ROWS UNBOUNDED PRECEDING) AS cum,
-         row_number() OVER (PARTITION BY shard ORDER BY n_tokens DESC, doc_id) AS rn
-  FROM t
-),
-p AS (
-  SELECT doc_id, n_tokens, shard,
-         floor((cum - n_tokens) / 24)::INT AS seq_id, rn
-  FROM w
-)
-SELECT doc_id, n_tokens, shard, seq_id,
-       row_number() OVER (PARTITION BY shard, seq_id ORDER BY rn)::INT AS seq_pos
-FROM p
-""")
-    orows = [tuple(r) for r in orc.fetchall()]
-    assert len(srows) == len(orows)
-    assert sorted(sdf.columns) == sorted(orc.columns)
-    assert value_hash(sdf.columns, srows) == value_hash(orc.columns, orows)
+def test_pack_sequences_matches_duckdb_oracle(registry_parity):
+    # the registry query packs at target 24 on the portable shard key
+    # pmod(doc_id, 4), the parameters this corpus is built for
+    registry_parity("pack_sequences", _pack_corpus())
 
 
 # ------------------------------------------------------------ split_oversize

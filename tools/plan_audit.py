@@ -1,11 +1,17 @@
-"""Physical-plan audit: .explain('formatted') for the headline queries.
+"""Physical-plan audit: .explain('formatted') for the registry queries
+and the operators beyond it.
 
 Checks the plans Catalyst actually builds:
-  * parquet scans show PushedFilters / pruned ReadSchema,
-  * small dims are broadcast (BroadcastHashJoin, not SortMergeJoin),
+  * config-sized sides (eval n-grams, blocklists, the bigram model) are
+    broadcast (BroadcastHashJoin, not SortMergeJoin),
   * aggregations are partial+final (no single-stage agg),
-  * WholeStageCodegen spans cover the relational tail,
+  * map-side tiers are whole-stage codegen'd and shuffle-free,
+  * windows partition by a key, never one global partition,
+  * no all-pairs operator where a blocked equi-join is claimed,
   * the extraction stage has exactly one MapInArrow over one scan.
+
+A CHECKS name resolves to a registry query first, else to an
+``_extra_frames`` builder.
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """
@@ -32,17 +38,12 @@ CHECKS = {
     # one MapInArrow node, and no second python stage (int = exact count
     # of plan-detail nodes '(n) <op>')
     "extract_removals": [("MapInArrow", 1), ("Generate", True), ("MapInPandas", False)],
-    "top_orders": [("BroadcastHashJoin", True)],
-    "nation_revenue": [("BroadcastHashJoin", True), ("HashAggregate", True)],
-    "pricing_summary": [("HashAggregate", True), ("PushedFilters", None)],
     "token_stats": [("codegen id", True)],  # whole-stage codegen spans
     "knn_bruteforce": [("BroadcastNestedLoopJoin", None), ("Window", True)],
     "dedup_minhash_lsh": [("HashAggregate", True)],
-    "sessionize": [("Window", True)],
     # top-k must be the distributed TakeOrderedAndProject, not a global
     # single-partition window over the full aggregate
     "top_words": [("TakeOrderedAndProject", True)],
-    "top_orders": [("TakeOrderedAndProject", True), ("BroadcastHashJoin", True)],
     # the LSH candidate join must be an equi-join on the band keys —
     # required=False asserts the all-pairs operators are ABSENT
     "dedup_embedding": [
@@ -393,43 +394,12 @@ CHECKS = {
 
 
 def _extra_frames():
-    """Non-registry operator frames audited alongside the 50 registry
-    queries (the driver registry is capped; plans still get checked)."""
+    """Frames for the operators outside the 50-query registry, audited
+    alongside it."""
     from pyspark.sql import functions as F
 
-    from fusus_spark.operators.curate import (
-        decontaminate, dedup_lines, redact_pii)
+    from fusus_spark.plans.web_queries import linked_docs, snapshot_docs
     from fusus_spark.sources.testdata import load
-
-    def f_decontam(spark, sf_dir):
-        docs = load(spark, sf_dir, "documents")
-        ev = docs.limit(5).select(F.col("doc_id").alias("eval_id"), "text")
-        return decontaminate(docs, ev, n=5)
-
-    def f_lines(spark, sf_dir):
-        return dedup_lines(load(spark, sf_dir, "documents"))
-
-    def f_pii(spark, sf_dir):
-        return redact_pii(load(spark, sf_dir, "documents"))
-
-    def f_passages(spark, sf_dir):
-        from fusus_spark.operators.curate import dedup_passages
-
-        return dedup_passages(load(spark, sf_dir, "documents"))
-
-    def f_pack(spark, sf_dir):
-        from fusus_spark.operators.curate import pack_sequences
-
-        return pack_sequences(load(spark, sf_dir, "documents"))
-
-    def f_host_policy(spark, sf_dir):
-        from fusus_spark.operators.curate import apply_host_policy
-
-        docs = load(spark, sf_dir, "documents").withColumn(
-            "url", F.concat(F.lit("http://h"), F.pmod("doc_id", F.lit(7)), F.lit(".com/p/"), "doc_id")
-        )
-        block = spark.createDataFrame([("h3.com",)], "domain string")
-        return apply_host_policy(docs, block_domains=block, cap_per_host=10)
 
     def f_incremental(spark, sf_dir):
         import tempfile
@@ -458,46 +428,15 @@ def _extra_frames():
 
         return assign_split(load(spark, sf_dir, "documents"))
 
-    def _web_docs(spark, sf_dir):
-        return load(spark, sf_dir, "documents").select(
-            F.concat(F.lit("http://h"), F.pmod("doc_id", F.lit(7)),
-                     F.lit(".com/p/"), "doc_id").alias("url"),
-            F.encode(
-                F.concat(F.lit('<a href="http://h'), F.pmod("doc_id", F.lit(5)),
-                         F.lit('.com/x">link</a><p>'), F.col("text"),
-                         F.lit("</p>")),
-                "UTF-8",
-            ).alias("html"),
-        )
-
     def f_links(spark, sf_dir):
         from fusus_spark.operators.webgraph import extract_links
 
-        return extract_links(_web_docs(spark, sf_dir))
+        return extract_links(linked_docs(spark, sf_dir))
 
     def f_hostgraph(spark, sf_dir):
         from fusus_spark.operators.webgraph import host_link_stats
 
-        return host_link_stats(_web_docs(spark, sf_dir))
-
-    def f_gate(spark, sf_dir):
-        from fusus_spark.operators.curate import curation_gate
-
-        return curation_gate(load(spark, sf_dir, "documents"))
-
-    def f_host_stats(spark, sf_dir):
-        from fusus_spark.operators.curate import host_stats
-
-        docs = load(spark, sf_dir, "documents").withColumn(
-            "url", F.concat(F.lit("http://h"), F.pmod("doc_id", F.lit(7)),
-                            F.lit(".com/p/"), "doc_id")
-        )
-        return host_stats(docs)
-
-    def f_repetition(spark, sf_dir):
-        from fusus_spark.operators.textstats import repetition_stats
-
-        return repetition_stats(load(spark, sf_dir, "documents"))
+        return host_link_stats(linked_docs(spark, sf_dir))
 
     def f_compression(spark, sf_dir):
         from fusus_spark.operators.textstats import compression_ratio
@@ -511,14 +450,9 @@ def _extra_frames():
 
         # the at-scale configuration: parquet-backed lineage truncation
         return host_pagerank(
-            _web_docs(spark, sf_dir), iters=3,
+            linked_docs(spark, sf_dir), iters=3,
             checkpoint_dir=tempfile.mkdtemp() + "/pr_ck", checkpoint_every=2,
         )
-
-    def f_anchors(spark, sf_dir):
-        from fusus_spark.operators.webgraph import host_anchor_texts
-
-        return host_anchor_texts(_web_docs(spark, sf_dir), k=3)
 
     def f_canon(spark, sf_dir):
         from fusus_spark.functions.url import dedup_by_canonical_url
@@ -537,25 +471,12 @@ def _extra_frames():
             load(spark, sf_dir, "documents"), {"en": 500_000}, default_ppm=250_000
         )
 
-    def _snap_docs(spark, sf_dir):
-        return load(spark, sf_dir, "documents").select(
-            F.concat(F.lit("http://h"), F.pmod("doc_id", F.lit(7)),
-                     F.lit(".com/p/"), F.pmod("doc_id", F.lit(50))).alias("url"),
-            F.md5(F.concat(F.lit("c"), F.pmod("doc_id", F.lit(3)))).alias("content_hash"),
-            F.concat(F.lit("2026-01-0"), (F.pmod("doc_id", F.lit(9)) + 1)).alias("crawl_date"),
-        )
-
     def f_revisit(spark, sf_dir):
         from fusus_spark.operators.frontier import revisit_priority, url_change_stats
 
         return revisit_priority(
-            url_change_stats(_snap_docs(spark, sf_dir)), as_of_date="2026-02-01"
+            url_change_stats(snapshot_docs(spark, sf_dir)), as_of_date="2026-02-01"
         )
-
-    def f_host_change(spark, sf_dir):
-        from fusus_spark.operators.frontier import host_change_stats, url_change_stats
-
-        return host_change_stats(url_change_stats(_snap_docs(spark, sf_dir)))
 
     def f_cluster_reps(spark, sf_dir):
         from fusus_spark.operators.dedup import cluster_representatives
@@ -568,13 +489,13 @@ def _extra_frames():
     def f_enrich(spark, sf_dir):
         from fusus_spark.operators.webgraph import enrich_with_anchors, host_anchor_texts
 
-        web = _web_docs(spark, sf_dir)
+        web = linked_docs(spark, sf_dir)
         return enrich_with_anchors(web, host_anchor_texts(web, k=3))
 
     def f_robots(spark, sf_dir):
         from fusus_spark.operators.robots import robots_signals
 
-        return robots_signals(_web_docs(spark, sf_dir))
+        return robots_signals(linked_docs(spark, sf_dir))
 
     def f_audio(spark, sf_dir):
         from fusus_spark.operators.multimodal import audio_meta
@@ -633,7 +554,7 @@ def _extra_frames():
         from fusus_spark.operators.frontier import (
             fetch_queue, url_change_stats)
 
-        stats = url_change_stats(_snap_docs(spark, sf_dir))
+        stats = url_change_stats(snapshot_docs(spark, sf_dir))
         sm = load(spark, sf_dir, "documents").select(
             F.lit("https://h0.com/sm.xml").alias("sitemap_url"),
             F.lit("urlset").alias("kind"),
@@ -756,7 +677,7 @@ def _extra_frames():
             F.md5(F.col("text")).alias("content_hash"),
         )
         return extend_snapshots(
-            _snap_docs(spark, sf_dir), fetches, crawl_date="2026-02-01"
+            snapshot_docs(spark, sf_dir), fetches, crawl_date="2026-02-01"
         )
 
     def f_follow(spark, sf_dir):
@@ -898,15 +819,6 @@ def _extra_frames():
         )
         return microdata_records(docs)
 
-    def f_corpus_report(spark, sf_dir):
-        from fusus_spark.operators.curate import corpus_report
-
-        docs = load(spark, sf_dir, "documents").withColumn(
-            "url", F.concat(F.lit("http://h"), F.pmod("doc_id", F.lit(7)),
-                            F.lit(".com/p/"), "doc_id")
-        )
-        return corpus_report(docs, url_col="url")
-
     def f_wet(spark, sf_dir):
         from fusus_spark.sources.warc import wet_records
 
@@ -1011,7 +923,7 @@ def _extra_frames():
     def f_pagemeta(spark, sf_dir):
         from fusus_spark.operators.pagemeta import page_metadata
 
-        return page_metadata(_web_docs(spark, sf_dir))
+        return page_metadata(linked_docs(spark, sf_dir))
 
     def f_hreflang(spark, sf_dir):
         from fusus_spark.operators.pagemeta import hreflang_alternates
@@ -1028,52 +940,54 @@ def _extra_frames():
         )
         return hreflang_alternates(docs)
 
-    return {"decontaminate": f_decontam, "dedup_lines": f_lines,
-            "redact_pii": f_pii, "dedup_passages": f_passages,
-            "pack_sequences": f_pack, "apply_host_policy": f_host_policy,
-            "incremental_dedup": f_incremental, "split_oversize": f_split,
-            "assign_split": f_assign, "extract_links": f_links,
-            "host_link_stats": f_hostgraph, "curation_gate": f_gate,
-            "host_stats": f_host_stats, "repetition_stats": f_repetition,
-            "compression_ratio": f_compression, "host_pagerank": f_pagerank,
-            "host_anchor_texts": f_anchors,
-            "dedup_by_canonical_url": f_canon, "stratified_sample": f_sample,
-            "revisit_priority": f_revisit, "host_change_stats": f_host_change,
-            "cluster_representatives": f_cluster_reps,
-            "enrich_with_anchors": f_enrich, "robots_signals": f_robots,
-            "mixture_ppm": f_mixture,
-            "stratified_sample_by_table": f_sample_table,
-            "audio_meta": f_audio, "video_meta": f_video,
-            "apply_robots_txt": f_robots_txt,
-            "robots_sitemaps": f_sitemaps,
-            "parse_sitemap_entries": f_parse_sitemaps,
-            "fetch_queue": f_queue,
-            "schedule_fetches": f_schedule,
-            "schedule_fetches_domain": f_schedule_domain,
-            "robots_crawl_delays": f_crawl_delays,
-            "url_failure_stats": f_failures,
-            "sitemap_fetch_list": f_sitemap_list,
-            "url_trap_features": f_trap,
-            "robots_fetch_policy": f_robots_policy,
-            "canonical_collapse": f_canon_collapse,
-            "canonical_representatives": f_canon_reps,
-            "resolve_redirects": f_redirects,
-            "follow_redirects": f_follow,
-            "extend_snapshots": f_extend,
-            "page_metadata": f_pagemeta,
-            "hreflang_alternates": f_hreflang,
-            "parse_feed_entries": f_feeds,
-            "feed_entries_as_announcements": f_feed_ann,
-            "sniff_mime": f_sniff,
-            "hreflang_clusters": f_hreflang_clusters,
-            "jsonld_records": f_jsonld,
-            "image_text_pairs": f_img_pairs,
-            "media_refs": f_media_refs,
-            "microdata_records": f_microdata,
-            "corpus_report": f_corpus_report,
-            "wet_records": f_wet,
-            "parse_sitemap_media": f_sitemap_media,
-            "article_tags": f_article_tags}
+    return {
+        "incremental_dedup": f_incremental,
+        "split_oversize": f_split,
+        "assign_split": f_assign,
+        "extract_links": f_links,
+        "host_link_stats": f_hostgraph,
+        "compression_ratio": f_compression,
+        "host_pagerank": f_pagerank,
+        "dedup_by_canonical_url": f_canon,
+        "stratified_sample": f_sample,
+        "revisit_priority": f_revisit,
+        "cluster_representatives": f_cluster_reps,
+        "enrich_with_anchors": f_enrich,
+        "robots_signals": f_robots,
+        "mixture_ppm": f_mixture,
+        "stratified_sample_by_table": f_sample_table,
+        "audio_meta": f_audio,
+        "video_meta": f_video,
+        "apply_robots_txt": f_robots_txt,
+        "robots_sitemaps": f_sitemaps,
+        "parse_sitemap_entries": f_parse_sitemaps,
+        "fetch_queue": f_queue,
+        "schedule_fetches": f_schedule,
+        "schedule_fetches_domain": f_schedule_domain,
+        "robots_crawl_delays": f_crawl_delays,
+        "url_failure_stats": f_failures,
+        "sitemap_fetch_list": f_sitemap_list,
+        "url_trap_features": f_trap,
+        "robots_fetch_policy": f_robots_policy,
+        "canonical_collapse": f_canon_collapse,
+        "canonical_representatives": f_canon_reps,
+        "resolve_redirects": f_redirects,
+        "follow_redirects": f_follow,
+        "extend_snapshots": f_extend,
+        "page_metadata": f_pagemeta,
+        "hreflang_alternates": f_hreflang,
+        "parse_feed_entries": f_feeds,
+        "feed_entries_as_announcements": f_feed_ann,
+        "sniff_mime": f_sniff,
+        "hreflang_clusters": f_hreflang_clusters,
+        "jsonld_records": f_jsonld,
+        "image_text_pairs": f_img_pairs,
+        "media_refs": f_media_refs,
+        "microdata_records": f_microdata,
+        "wet_records": f_wet,
+        "parse_sitemap_media": f_sitemap_media,
+        "article_tags": f_article_tags,
+    }
 
 
 def main() -> None:
