@@ -70,13 +70,14 @@ def run_full(cpus: int, replicate: int) -> dict:
 def run_env(cpus: int, replicate: int) -> dict:
     from fusus_spark.extraction.pipeline import _extract_batches_arrow
     from fusus_spark.schema import EXTRACTED_SCHEMA
-    from fusus_spark.session import get_spark
+    from fusus_spark.session import drop_zip_finders, get_spark
 
     spark = get_spark("knee-env", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     docs, n = _spark_docs(spark, replicate)
 
     def run(batches):
+        drop_zip_finders()
         for rb in batches:
             if rb.num_rows == 0:
                 continue

@@ -20,6 +20,8 @@ from __future__ import annotations
 import pandas as pd  # module-level: pandas_udf resolves the hints here
 from pyspark.sql import Column, DataFrame, functions as F
 
+from fusus_spark.session import drop_zip_finders
+
 # scheme://host[:port]/path?query#fragment — RE2-safe piecewise extracts.
 _HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)"
 _PATH_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)"
@@ -51,6 +53,7 @@ def idna_fold(host) -> Column:
 
     @pandas_udf("string")
     def fold(hosts: pd.Series) -> pd.Series:
+        drop_zip_finders()
         import encodings.idna as stdlib_idna
 
         mask = hosts.str.contains("xn--", na=False)

@@ -23,6 +23,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from fusus_spark.session import drop_zip_finders
+
 LADDER = ((1, 0.8), (2, 0.7), (3, 0.6))
 MAX_LOOKAHEAD = 100  # reference uses escalating lookahead up to 100 (align.py:524-601)
 MAX_COMBI = 4
@@ -262,6 +264,7 @@ def align_editions(
             exc_by_url.setdefault(r["url"], {})[r["slot_a"]] = r["slot_b"]
 
     def do_align(key: tuple, pa: pd.DataFrame, pb: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         url = key[0]
         sa = list(
             pa.sort_values("slot")[["slot", "word"]].itertuples(index=False, name=None)

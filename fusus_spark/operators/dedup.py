@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from fusus_spark.functions.text import cosine, norm_ws, shingles, tokens
+from fusus_spark.session import drop_zip_finders
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -214,6 +215,7 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     pruned = docs.select(F.col(id_col).alias("doc_id"), norm_ws(text_col).alias("t"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         import hashlib
 
         import numpy as np
@@ -735,6 +737,7 @@ def incremental_dedup(
 
         @F.pandas_udf("boolean")
         def test_bits(pos: pd.Series) -> pd.Series:
+            drop_zip_finders()
             # whole-batch numpy over JVM-computed probe positions: one
             # gather into the broadcast bitmap (words rides the closure;
             # per-row python — the old s.map(md5...) loop — is gone).

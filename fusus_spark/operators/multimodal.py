@@ -17,6 +17,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from fusus_spark.session import drop_zip_finders
+
 MEDIA_META_SCHEMA = (
     "url string, media_type string, n_bytes long, magic_hex string, "
     "width int, height int, feature array<float>"
@@ -303,6 +305,7 @@ def _map_payloads(df: DataFrame, payload_col: str, schema: str, row_fn) -> DataF
     names = [part.strip().split(" ")[0] for part in schema.split(",")]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows = {k: [] for k in names}
             for url, payload in zip(pdf["url"].tolist(), pdf["payload"].tolist()):
@@ -681,6 +684,7 @@ def resize_images(df: DataFrame, target: int = 64, payload_col: str = "payload",
         return (seed * ((w * h) // len(seed) + 1))[: w * h]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows = {k: [] for k in
                     ("url", "width", "height", "out_width", "out_height", "resized")}
@@ -726,6 +730,7 @@ def frame_sample(df: DataFrame, n_frames: int = 4, fps: float = 25.0,
     pruned = df.select("url", F.col(payload_col).alias("payload"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         import hashlib
 
         for pdf in batches:

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from fusus_spark.session import drop_zip_finders
+
 # lowered-copy patterns (robots content is case-insensitive by spec).
 # Attribute VALUES may be double-quoted, single-quoted, or unquoted
 # (valid HTML: <meta name=robots content=noindex>) — each value is a
@@ -282,6 +284,7 @@ def robots_txt_rules(
     import pandas as pd
 
     def run(batches):
+        drop_zip_finders()
         for pdf in batches:
             rows = {"host": [], "allow": [], "pattern": [],
                     "pattern_len": [], "regex": []}
@@ -355,6 +358,7 @@ def robots_crawl_delays(
     import pandas as pd
 
     def run(batches):
+        drop_zip_finders()
         for pdf in batches:
             rows: dict[str, list] = {"host": [], "crawl_delay_ms": []}
             for host, body in zip(pdf[host_col].tolist(), pdf[body_col].tolist()):

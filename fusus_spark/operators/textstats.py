@@ -20,6 +20,7 @@ from fusus_spark.functions.text import (
     tokens,
     top_run_share,
 )
+from fusus_spark.session import drop_zip_finders
 
 
 def doc_token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -289,6 +290,7 @@ def compression_ratio(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     pruned = docs.select(F.col(id_col).alias("doc_id"), norm_ws(text_col).alias("t"))
 
     def run(batches):
+        drop_zip_finders()
         import zlib
 
         for pdf in batches:

@@ -35,6 +35,7 @@ from fusus_spark.extraction.rewrite import (
 )
 from fusus_spark.functions.text import LANG_STOPWORDS, norm_ws, tokens
 from fusus_spark.operators import curate, dedup, frontier, similarity, textstats, webgraph
+from fusus_spark.session import drop_zip_finders
 from fusus_spark.sources.testdata import (
     WRAP_HARD_REMOVED_RULES,
     WRAP_REMOVED_RULES,
@@ -1107,6 +1108,7 @@ def _rewritten(spark: SparkSession, sf_dir: str, pre: str, post: str,
     )
 
     def run(batches):
+        drop_zip_finders()
         for pdf in batches:
             yield pd.DataFrame(
                 {

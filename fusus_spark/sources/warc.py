@@ -46,6 +46,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from fusus_spark.session import drop_zip_finders
+
 WARC_DOCS_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string, "
     "http_status int, content_type string, charset string, "
@@ -301,6 +303,7 @@ def read_warc(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows: dict[str, list] = {
                 "url": [], "warc_ts": [], "html": [], "text": [], "lang": [],

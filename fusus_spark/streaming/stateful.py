@@ -25,6 +25,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from fusus_spark.functions.text import norm_ws
 from fusus_spark.schema import DOCUMENTS_SCHEMA
+from fusus_spark.session import drop_zip_finders
 from fusus_spark.streaming.ingest import EVENTS_STREAM_SCHEMA
 
 
@@ -102,6 +103,7 @@ def user_counts_stream(
     )
 
     def update(key, pdfs, state: GroupState):
+        drop_zip_finders()
         import numpy as np
 
         n, sv_e4 = state.get if state.exists else (0, 0)
