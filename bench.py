@@ -10,16 +10,13 @@ distinct urls, in-plan) so the html volume is large enough that compute
 dominates fixed overheads; docs/sec and GB/sec are computed against the
 replicated volume actually parsed.
 
-Modes:
-  python bench.py                 # full suite, one JSON line on stdout
-  python bench.py --extract-only  # just the extraction job (scaling runs)
+Usage: python bench.py   # full suite, one JSON line on stdout
 """
 
 from __future__ import annotations
 
 import json
 import os
-import sys
 import time
 
 
@@ -78,28 +75,6 @@ def extraction_trial(docs) -> tuple[float, int]:
     t0 = time.time()
     n_words = words_from_stage(extract_stage(docs)).count()
     return time.time() - t0, n_words
-
-
-def bench_extraction(spark, sf_dir: str, replicate: int, cpus: int) -> dict:
-    """--extract-only mode (BENCH/scaling.py contract): best of
-    FUSUS_BENCH_TRIALS back-to-back trials — scaling.py provides its own
-    interleaving by running whole processes in rounds."""
-    docs, n_docs, total_bytes = prepare_extraction(spark, sf_dir, replicate)
-    trials = int(os.environ.get("FUSUS_BENCH_TRIALS", "3"))
-    wall = float("inf")
-    n_words = 0
-    for _ in range(max(trials, 1)):
-        w, n_words = extraction_trial(docs)
-        wall = min(wall, w)
-    docs.unpersist()
-    return {
-        "wall_s": round(wall, 3),
-        "n_docs": n_docs,
-        "n_words": n_words,
-        "bytes_in": total_bytes,
-        "docs_per_sec": round(n_docs / wall, 1),
-        "gb_per_sec": round(total_bytes / wall / 1e9, 4),
-    }
 
 
 # The headline is the extraction pass plus the web pipeline's heavy
@@ -191,12 +166,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # x60 (~253 MB html, 300k docs at sf0.1): the volume where marginal
-    # extraction rate dominates the fixed per-stage overhead — the same
-    # volume BENCH/scaling.py measures, so the two artifacts agree.
-    # (x20 left ~40% of the wall in fixed overhead and understated
-    # docs/sec by a third.)
+    # extraction rate dominates the fixed per-stage overhead. (x20 left
+    # ~40% of the wall in fixed overhead and understated docs/sec by a
+    # third.)
     replicate = int(os.environ.get("FUSUS_BENCH_REPLICATE", "60"))
-    extract_only = "--extract-only" in sys.argv
 
     from fusus_spark.session import get_spark
 
@@ -206,12 +179,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-
-    if extract_only:
-        ext = bench_extraction(spark, sf_dir, replicate, cpus)
-        print(json.dumps({"mode": "extract-only", "cpus": cpus, "sf": sf, **ext}))
-        spark.stop()
-        return
 
     import __spark_entry__ as entrymod
 
@@ -224,8 +191,7 @@ def main() -> None:
     # whichever queries it covers (BENCH_r03 read as a fake
     # across-the-board regression that way). Round-robin ordering means
     # an episode inflates one ROUND of each query instead, and the
-    # per-query min across rounds recovers the quiet-host number — the
-    # same methodology BENCH/scaling.py uses across processes.
+    # per-query min across rounds recovers the quiet-host number.
     rounds = int(os.environ.get("FUSUS_BENCH_ROUNDS", "3"))
     docs, n_docs, total_bytes = prepare_extraction(spark, sf_dir, replicate)
     # one extraction trial in the still-clean JVM: the interleaved

@@ -6,13 +6,14 @@ North-rule launch shape:
     spark-submit --py-files dist/fusus_spark.zip \\
         fusus_spark/jobs/extract_job.py \\
         --input  <bucketed documents table dir> \\
-        --output <words table dir> \\
+        --output <output root: one <kind>/bucket=k table per --emit kind> \\
         --ledger <progress ledger dir> \\
         --buckets 256
 
 The job is resumable: buckets already marked done in the ledger (with
 matching input lineage) are skipped; kill it at any point and re-submit
 with the same arguments to resume exactly (tests/test_resume.py).
+Read the output back with ``sources.ledger.load_done``.
 
 ``--input-format warc`` accepts raw crawl segment files instead: the
 segments are ingested (fusus_spark.sources.warc — one task per file,
@@ -193,7 +194,7 @@ def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True,
                    help="bucketed documents dir, or a crawl segment dir with --input-format warc")
-    p.add_argument("--output", required=True, help="words output dir")
+    p.add_argument("--output", required=True, help="root of the <output>/<kind>/bucket=k tables")
     p.add_argument("--ledger", required=True, help="progress ledger dir")
     p.add_argument("--buckets", type=int, required=True)
     p.add_argument("--input-format", choices=("bucketed-parquet", "warc"),
@@ -203,8 +204,7 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--emit", default="words",
                    help="comma list of output tables: parse-derived "
                         "words,extracted,removals + doc-level side tables "
-                        "pagemeta,image_pairs,media_refs,jsonld "
-                        "(multi-kind layout: <output>/<kind>/bucket=k)")
+                        "pagemeta,image_pairs,media_refs,jsonld")
     p.add_argument("--max-html-bytes", type=int, default=4 * 1024 * 1024)
     p.add_argument("--respect-robots", action="store_true",
                    help="drop meta/header-noindex pages BEFORE parsing "

@@ -93,21 +93,6 @@ EXTRACTION_STAGE_SCHEMA = T.StructType(
     ]
 )
 
-# Checkpoint/resume ledger (north rule: per-partition lineage + metrics).
-LEDGER_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("rows_in", T.LongType(), False),
-        T.StructField("rows_out", T.LongType(), False),
-        T.StructField("bytes_in", T.LongType(), False),
-        T.StructField("bytes_out", T.LongType(), False),
-        T.StructField("input_snapshot_id", T.StringType(), True),
-        T.StructField("attempt", T.IntegerType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-    ]
-)
-
 # Alignment output (fusus/align.py:436 row shape (iLK,left,d,r,right,iAF)).
 ALIGNMENT_SCHEMA = T.StructType(
     [

@@ -9,30 +9,25 @@ page, re-run only selected pages); ours is the **url-hash bucket**:
   (at real scale: Iceberg ``days(warc_ts) + bucket(N, url)`` — reading
   one bucket prunes to one partition directory, never a full scan);
 * each bucket is processed independently and committed atomically IN
-  TWO STAGES: output parquet is written to a staging dir
-  ``out.staging/bucket=k-<uuid>`` — a SIBLING tree, entirely outside
-  the reader's path, so a concurrent reader of ``out/`` can never see
-  a half-written bucket (Spark 4's partition inference trips even on
-  ``_``-prefixed dirs inside the table root, so staging must live
-  outside it) — then renamed to ``out/bucket=k`` (POSIX-atomic on one
-  filesystem — the Iceberg snapshot-commit analog), THEN the ledger row
-  is written via tmp-file + rename. A crash at any point leaves either
-  the old complete bucket or no bucket, never a partial one, and an
-  un-marked bucket is simply redone — idempotent because the rename
-  replaces the whole bucket;
+  TWO STAGES: each kind's parquet is written to a staging dir
+  ``out/<kind>.staging/bucket=k-<uuid>`` — a SIBLING of the table
+  ``out/<kind>``, never inside it (Spark 4's partition inference trips
+  even on ``_``-prefixed dirs in a table root) — then renamed to
+  ``out/<kind>/bucket=k`` (POSIX-atomic on one filesystem — the Iceberg
+  snapshot-commit analog), THEN the ledger row, whose ``outputs`` names
+  the kinds committed, is written via tmp-file + rename. A crash at any
+  point leaves either the old complete bucket or no bucket, never a
+  partial one, and an un-marked bucket is simply redone — idempotent
+  because the rename replaces the whole bucket;
 * resume = skip buckets whose ledger row says done AND whose recorded
-  input lineage still matches;
+  input lineage and ``outputs`` kinds still match;
 * concurrent writers: each bucket is guarded by a ``BucketLock``
   (O_EXCL lock file under ``<ledger>/locks/``) — two job instances
   against the same output PARTITION the un-done buckets between them
   instead of double-processing; stale locks (dead pid / age) are
-  broken and taken over. What remains out of scope of this
-  parquet+ledger proxy, stated plainly: Iceberg-style SNAPSHOT
-  ISOLATION for readers (a reader listing ``out/`` mid-job sees
-  per-bucket atomicity, not a single table-wide snapshot) — readers
-  wanting a consistent view read the ledger first and select only
-  buckets it marks done, which is exactly the snapshot the ledger
-  defines.
+  broken and taken over;
+* readers load through the ledger (``load_done``), which reads only
+  the buckets it marks done: exactly the snapshot the ledger defines.
 
 The ledger is a directory of one small JSON file per bucket — the same
 shape an Iceberg ``_progress`` table would have; files keep the sandbox
@@ -130,11 +125,13 @@ class Ledger:
         except (FileNotFoundError, json.JSONDecodeError):
             return None
 
-    def is_done(self, bucket: int, lineage: str | None = None) -> bool:
+    def is_done(self, bucket: int, lineage: str | None = None, emit: tuple | None = None) -> bool:
         rec = self.get(bucket)
         if rec is None or rec.get("status") != "done":
             return False
-        return lineage is None or rec.get("input_snapshot_id") == lineage
+        if lineage is not None and rec.get("input_snapshot_id") != lineage:
+            return False
+        return emit is None or set(rec.get("outputs") or ()) == set(emit)
 
     def mark_done(self, bucket: int, **metrics) -> None:
         rec = {
@@ -155,6 +152,23 @@ class Ledger:
                 with open(os.path.join(self.path, f)) as fh:
                     out.append(json.load(fh))
         return out
+
+
+def load_done(
+    spark: SparkSession, output_path: str, ledger_path: str, kind: str
+) -> DataFrame:
+    """Exactly the ``out/<kind>/bucket=k`` dirs whose ledger row is done
+    and lists ``kind`` in ``outputs`` (``bucket`` column kept); nothing
+    else under ``out`` is read. By-date output loads once per date."""
+    root = os.path.join(output_path, kind)
+    paths = [
+        os.path.join(root, r["partition_id"])
+        for r in Ledger(ledger_path).rows()
+        if r.get("status") == "done" and kind in (r.get("outputs") or ())
+    ]
+    if not paths:
+        raise ValueError(f"no committed {kind!r} bucket in ledger {ledger_path}")
+    return spark.read.option("basePath", root).parquet(*paths)
 
 
 class BucketLock:
@@ -308,8 +322,8 @@ def _footer_metrics(tmp_dir: str) -> tuple[int, int]:
     return rows, size
 
 
-def _commit_bucket(tmp_dir: str, final_dir: str, staging_root: str, bucket: int) -> None:
-    """Atomically move a staged bucket dir under its final name.
+def _commit_bucket(tmp_dir: str, root: str, bucket: int) -> None:
+    """Atomically move a staged bucket dir to ``root/bucket=k``.
 
     Replacement moves the old bucket ASIDE first (rename, atomic),
     commits the new one, THEN deletes the old files — a reader never
@@ -318,9 +332,10 @@ def _commit_bucket(tmp_dir: str, final_dir: str, staging_root: str, bucket: int)
     (plus sweepable trash in staging)."""
     import shutil
 
-    os.makedirs(os.path.dirname(final_dir), exist_ok=True)
+    final_dir = os.path.join(root, f"bucket={bucket}")
+    os.makedirs(root, exist_ok=True)
     if os.path.isdir(final_dir):
-        trash = os.path.join(staging_root, f"trash-bucket={bucket}-{uuid.uuid4().hex}")
+        trash = os.path.join(root + ".staging", f"trash-bucket={bucket}-{uuid.uuid4().hex}")
         os.rename(final_dir, trash)
         os.rename(tmp_dir, final_dir)
         shutil.rmtree(trash, ignore_errors=True)
@@ -359,16 +374,14 @@ def run_extraction_job(
     ``emit`` selects the output tables: the parse-derived kinds come
     from ONE fused parse per bucket (the stage is persisted across
     their writes when more than one is requested — bounded by bucket
-    sizing): ``words`` (the default, legacy layout ``out/bucket=k``),
-    plus ``extracted`` (per-url envelopes) and ``removals``
-    (boilerplate diagnostics). The doc-level side-table kinds —
-    ``pagemeta``, ``image_pairs``, ``media_refs``, ``jsonld`` — are
-    map-side harvests over the bucket's raw html (see _doc_splitters)
-    riding the same staged commit and ledger grid.
-    With multiple kinds the layout becomes ``out/<kind>/bucket=k`` and
-    each kind's bucket dir is committed with the same staged atomic
-    rename; the ledger row is the source of truth for bucket
-    completeness across all kinds (it is written after every rename).
+    sizing): ``words`` (the default), plus ``extracted`` (per-url
+    envelopes) and ``removals`` (boilerplate diagnostics). The
+    doc-level side-table kinds — ``pagemeta``, ``image_pairs``,
+    ``media_refs``, ``jsonld`` — are map-side harvests over the
+    bucket's raw html (see _doc_splitters) riding the same staged
+    commit and ledger grid. Each kind lands in ``out/<kind>/bucket=k``;
+    the ledger row's ``outputs``, written after every rename, is the
+    record of what a bucket committed (``load_done`` reads through it).
 
     ``fail_after=k`` injects a crash after k buckets; ``fail_before_
     commit=k`` injects it on the k-th processed bucket AFTER the staging
@@ -393,39 +406,30 @@ def run_extraction_job(
     }
     doc_splitters = _doc_splitters()
     stage_kinds = [k for k in emit if k in splitters]
-    multi = len(emit) > 1
-    roots = {
-        kind: (os.path.join(output_path, kind) if multi else output_path)
-        for kind in emit
-    }
 
     ledger = Ledger(ledger_path)
     lock = BucketLock(ledger_path)
+    for rec in ledger.rows():  # retire an older, larger bucket count's rows
+        old = int(rec["partition_id"][len("bucket="):])
+        if old >= n_buckets:
+            os.unlink(ledger._file(old))
     done_now = 0
     skipped = 0
     locked = 0
     relineaged = 0
     for bucket in range(n_buckets):
+        # a bucket's identity: its input files, the consent filter and
+        # (as the row's ``outputs`` kinds) the emit set — a resume that
+        # toggles robots or adds a kind redoes the bucket, never skips it
         lineage = input_lineage(input_path, bucket)
-        # the emit SET is part of the bucket's identity, same principle
-        # as the robots toggle below: a resume that adds (or drops) a
-        # kind must redo the bucket — otherwise adding --emit jsonld to
-        # a finished run would skip every bucket and silently emit no
-        # side table at all (review finding)
-        lineage += "+emit=" + ",".join(sorted(set(emit)))
         if respect_robots:
-            # the consent filter is part of the bucket's identity:
-            # toggling it must invalidate done buckets (a resume with a
-            # different policy would otherwise silently skip them and
-            # leave noindex pages in — or out of — the committed output)
             lineage += "+robots"
-        if ledger.is_done(bucket, lineage):
+        if ledger.is_done(bucket, lineage, emit):
             skipped += 1
             continue
         if ledger.is_done(bucket):
-            # done under another lineage (changed input, emit set or
-            # robots policy; every ledger older than the emit suffix):
-            # redone, and counted so a resume never redoes it silently
+            # done under another lineage or emit set (or a flat-layout
+            # row with no ``outputs``): redone, and counted
             relineaged += 1
         if fail_after is not None and done_now >= fail_after:
             raise RuntimeError(f"injected failure after {done_now} buckets")
@@ -476,15 +480,13 @@ def run_extraction_job(
 
                     stage = stage.persist(StorageLevel.MEMORY_AND_DISK)
                     persisted = True
-            staged: list[tuple[str, str, str]] = []  # (tmp, final, staging_root)
+            staged: dict[str, str] = {}  # kind -> tmp dir under out/<kind>.staging
             per_kind: dict[str, dict[str, int]] = {}
             try:
                 for kind in emit:
-                    staging_root = roots[kind].rstrip("/") + ".staging"
+                    staging_root = os.path.join(output_path, kind) + ".staging"
                     _sweep_staging(staging_root, bucket)
-                    tmp_dir = os.path.join(
-                        staging_root, f"bucket={bucket}-{uuid.uuid4().hex}"
-                    )
+                    tmp_dir = os.path.join(staging_root, f"bucket={bucket}-{uuid.uuid4().hex}")
                     if kind in splitters:
                         frame = splitters[kind](stage)
                     else:
@@ -504,9 +506,7 @@ def run_extraction_job(
                     frame.write.mode("overwrite").parquet(tmp_dir)
                     rows, size = _footer_metrics(tmp_dir)
                     per_kind[kind] = {"rows": rows, "bytes": size}
-                    staged.append(
-                        (tmp_dir, os.path.join(roots[kind], f"bucket={bucket}"), staging_root)
-                    )
+                    staged[kind] = tmp_dir
             finally:
                 if persisted:
                     stage.unpersist()  # a failed write must not leak the cache
@@ -515,8 +515,8 @@ def run_extraction_job(
                 raise RuntimeError(
                     f"injected failure between write and rename on bucket {bucket}"
                 )
-            for tmp_dir, final_dir, staging_root in staged:
-                _commit_bucket(tmp_dir, final_dir, staging_root, bucket)
+            for kind, tmp_dir in staged.items():
+                _commit_bucket(tmp_dir, os.path.join(output_path, kind), bucket)
             primary = per_kind.get("words") or per_kind[emit[0]]
             ledger.mark_done(
                 bucket,
@@ -526,7 +526,7 @@ def run_extraction_job(
                 bytes_out=primary["bytes"],
                 input_snapshot_id=lineage,
                 wall_ms=int((time.time() - t0) * 1000),
-                **({"outputs": per_kind} if multi else {}),
+                outputs=per_kind,
             )
         finally:
             lock.release(bucket)
@@ -559,9 +559,9 @@ def run_extraction_job_by_date(
     ``run_extraction_job`` verbatim: its per-bucket lineage checks,
     staged atomic commits, crash injection and resume semantics apply
     per (date, bucket) with no new machinery. Output and ledger mirror
-    the date layout (``out/crawl_date=D/...``, one ledger dir per date);
-    a new crawl date is a pure append (earlier dates' ledgers show
-    all-skip), and reprocessing one date touches nothing else.
+    the date layout (``out/crawl_date=D/<kind>/bucket=k``, one ledger
+    dir per date, so ``load_done`` reads one date at a time); a new
+    date is a pure append, and reprocessing one date touches no other.
 
     ``dates=None`` processes every ``crawl_date=*`` present in the
     input. Returns {date: per-date summary} plus a ``_total`` roll-up.

@@ -8,13 +8,9 @@ to a stream of document files via ``foreachBatch`` — one code path for
 batch and streaming (the stage function is shared).
 """
 
-from fusus_spark.streaming.ingest import (  # noqa: F401
-    extraction_stream,
-    windowed_event_counts_stream,
-)
+from fusus_spark.streaming.ingest import extraction_stream  # noqa: F401
 from fusus_spark.streaming.stateful import (  # noqa: F401
     dedup_stream,
     dedup_stream_vs_store,
     snapshot_foldback_stream,
-    user_counts_stream,
 )

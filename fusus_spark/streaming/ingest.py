@@ -67,59 +67,3 @@ def extraction_stream(
         .start()
     )
 
-
-EVENTS_STREAM_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
-
-def windowed_event_counts_stream(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    query_name: str = "windowed_events",
-    *,
-    window: str = "1 hour",
-    watermark: str = "1 hour",
-    max_files_per_trigger: int = 1,
-):
-    """Event-time windowed aggregation with a watermark (append mode).
-
-    The late-data contract: a window emits exactly once, when the
-    watermark (max event time seen - ``watermark``) passes its end;
-    events later than the watermark are dropped. Results land in an
-    in-memory sink named ``query_name``. ``maxFilesPerTrigger=1`` makes
-    the watermark advance file-by-file (with a single availableNow batch
-    the watermark would only advance after ALL data, emitting nothing in
-    append mode — the standard finite-source gotcha, made explicit
-    here).
-    """
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    from pyspark.sql import functions as F
-
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value") * 10000).cast("bigint").alias("sum_value_e4"),
-        )
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "event_type", "n", "sum_value_e4",
-        )
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -1,32 +1,21 @@
-"""Stateful streaming operators: in-stream dedup + custom state.
+"""Stateful streaming operators: in-stream dedup and snapshot fold-back.
 
-Two training-pipeline streaming primitives on top of the same engine:
-
-* ``dedup_stream`` — exact in-stream deduplication on the content hash
-  with ``dropDuplicatesWithinWatermark``: state is bounded by the
-  watermark horizon (an unbounded ``dropDuplicates`` would grow state
-  forever at crawl scale). Same NOTION of duplicate as the batch
-  ``exact_duplicates`` (the md5 content hash) — but the survivor is the
-  first-ARRIVING row (file-processing order), not the batch rule's
-  deterministic min-doc_id representative; pipe the output through a
-  min-per-hash agg when a canonical representative matters;
-* ``user_counts_stream`` — a custom stateful operator via
-  ``applyInPandasWithState``: per-user running event counts that
-  survive across micro-batches (the W3 running-number analog in
-  streaming form). State is one small struct per user; output mode
-  ``update`` emits the refreshed totals each batch.
+``dedup_stream`` is exact in-stream deduplication on the content hash
+with ``dropDuplicatesWithinWatermark``: state is bounded by the
+watermark horizon (an unbounded ``dropDuplicates`` would grow state
+forever at crawl scale). Same NOTION of duplicate as the batch
+``exact_duplicates`` (the md5 content hash) — but the survivor is the
+first-ARRIVING row (file-processing order), not the batch rule's
+deterministic min-doc_id representative; pipe the output through a
+min-per-hash agg when a canonical representative matters.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import SparkSession, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from fusus_spark.functions.text import norm_ws
 from fusus_spark.schema import DOCUMENTS_SCHEMA
-from fusus_spark.session import drop_zip_finders
-from fusus_spark.streaming.ingest import EVENTS_STREAM_SCHEMA
 
 
 def dedup_stream(
@@ -62,84 +51,6 @@ def dedup_stream(
     )
     return (
         deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-_COUNT_OUT_SCHEMA = "user_id long, n_events bigint, sum_value_e4 bigint"
-_COUNT_STATE_SCHEMA = "n bigint, sv_e4 bigint"
-
-
-def user_counts_stream(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    query_name: str = "user_counts",
-    *,
-    max_files_per_trigger: int = 1,
-):
-    """Per-user running totals via applyInPandasWithState.
-
-    Each micro-batch updates one (count, sum) state struct per user and
-    emits the new totals (update mode) — the canonical custom-stateful
-    pattern for metrics a built-in agg cannot express incrementally.
-
-    Determinism contract: state accumulates PRE-SCALED integers — each
-    event's value is rounded to e4 (half away from zero, matching SQL
-    ``round``) BEFORE summation, so the total is exact int64 arithmetic
-    and independent of file/micro-batch arrival order. (A raw-float
-    running sum could flip the final e4 rounding depending on
-    summation order.) The semantics are therefore
-    ``sum(round(value * 10^4))``, not ``round(sum(value) * 10^4)``.
-    """
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def update(key, pdfs, state: GroupState):
-        drop_zip_finders()
-        import numpy as np
-
-        n, sv_e4 = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            v = pdf["value"].to_numpy(dtype="float64")
-            # half away from zero at e4, matching SQL round() EXACTLY on
-            # the double product: compare the true binary fraction to
-            # 0.5 instead of adding 0.5 (x + 0.5 can round UP in float64
-            # for x just below 0.5, e.g. 0.49999999999999994); then sum
-            # in int64 so batch totals never pass through float
-            ax = np.abs(v) * 10000.0
-            fl = np.floor(ax)
-            r = fl + (ax - fl >= 0.5)
-            sv_e4 += int((np.sign(v) * r).astype(np.int64).sum())
-        state.update((n, sv_e4))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "sum_value_e4": [sv_e4],
-            }
-        )
-
-    counts = (
-        stream.groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            _COUNT_OUT_SCHEMA,
-            _COUNT_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-    return (
-        counts.writeStream.outputMode("update")
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)

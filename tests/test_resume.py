@@ -3,6 +3,7 @@
 Run the bucketed extraction job, inject a crash after k buckets,
 resume, and assert the final output is byte-identical to a single
 uninterrupted run — plus ledger completeness and lineage invalidation.
+Output is read back only through ``ledger.load_done``.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from fusus_spark.sources.ledger import (
     BucketLock,
     Ledger,
     input_lineage,
+    load_done,
     run_extraction_job,
     write_bucketed_input,
 )
@@ -37,8 +39,17 @@ def bucketed_input(spark, tmp_path_factory):
     return path
 
 
-def _corpus_hash(spark, out_path: str) -> str:
-    df = spark.read.parquet(out_path)
+@pytest.fixture(scope="module")
+def reference(spark, bucketed_input, tmp_path_factory):
+    """The words table of one uninterrupted run."""
+    base = tmp_path_factory.mktemp("ref")
+    out, ledger_path = str(base / "out"), str(base / "ledger")
+    summary = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    assert summary["processed"] == N_BUCKETS
+    return load_done(spark, out, ledger_path, "words")
+
+
+def _corpus_hash(df) -> str:
     return (
         df.orderBy("url", "block_id", "line_id", "word_seq")
         .select(
@@ -52,15 +63,8 @@ def _corpus_hash(spark, out_path: str) -> str:
     )
 
 
-def test_kill_and_resume_identical(spark, bucketed_input, tmp_path):
-    # Reference run: uninterrupted.
-    ref_out = str(tmp_path / "ref_out")
-    ref_ledger = str(tmp_path / "ref_ledger")
-    summary = run_extraction_job(
-        spark, bucketed_input, ref_out, ref_ledger, N_BUCKETS
-    )
-    assert summary["processed"] == N_BUCKETS
-    ref_hash = _corpus_hash(spark, ref_out + "/bucket=*")
+def test_kill_and_resume_identical(spark, bucketed_input, reference, tmp_path):
+    ref_hash = _corpus_hash(reference)
 
     # Killed run: crash after 2 buckets.
     out = str(tmp_path / "out")
@@ -79,7 +83,7 @@ def test_kill_and_resume_identical(spark, bucketed_input, tmp_path):
     assert summary2["processed"] == N_BUCKETS - 2
 
     # Final state identical to uninterrupted run.
-    assert _corpus_hash(spark, out + "/bucket=*") == ref_hash
+    assert _corpus_hash(load_done(spark, out, ledger_path, "words")) == ref_hash
 
     # Ledger: one row per bucket with lineage + metrics.
     rows = ledger.rows()
@@ -90,6 +94,7 @@ def test_kill_and_resume_identical(spark, bucketed_input, tmp_path):
         assert r["bytes_in"] > 0
         assert r["input_snapshot_id"]
         assert r["wall_ms"] >= 0
+        assert set(r["outputs"]) == {"words"}
 
     # Idempotence: immediate re-run skips everything.
     summary3 = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
@@ -97,17 +102,13 @@ def test_kill_and_resume_identical(spark, bucketed_input, tmp_path):
     assert summary3["skipped"] == N_BUCKETS
 
 
-def test_kill_between_write_and_rename(spark, bucketed_input, tmp_path):
+def test_kill_between_write_and_rename(spark, bucketed_input, reference, tmp_path):
     """Crash AFTER the staging write but BEFORE the atomic rename: the
     bucket must not be visible to readers (no partial dir under the
     final name), the ledger must not mark it, and the resumed run must
     converge to the byte-identical final state with no stale staging
     dirs left behind."""
-    ref_out = str(tmp_path / "ref_out")
-    run_extraction_job(
-        spark, bucketed_input, ref_out, str(tmp_path / "ref_ledger"), N_BUCKETS
-    )
-    ref_hash = _corpus_hash(spark, ref_out + "/bucket=*")
+    ref_hash = _corpus_hash(reference)
 
     out = str(tmp_path / "out")
     ledger_path = str(tmp_path / "ledger")
@@ -121,21 +122,116 @@ def test_kill_between_write_and_rename(spark, bucketed_input, tmp_path):
     committed = {r["partition_id"] for r in ledger.rows()}
     # the crashed bucket left a dir in the SIBLING staging tree but no
     # final dir — a concurrent reader of out/ sees only complete buckets
-    victims = [d for d in os.listdir(out + ".staging") if d.startswith("bucket=")]
+    words = os.path.join(out, "words")
+    victims = [d for d in os.listdir(words + ".staging") if d.startswith("bucket=")]
     assert len(victims) == 1
-    finals = set(os.listdir(out))
+    finals = set(os.listdir(words))
     assert finals == committed
     # the table root stays readable mid-crash (no partial/conflicting dirs)
-    visible = spark.read.parquet(out).count()
+    visible = spark.read.parquet(words).count()
     assert visible > 0
 
     summary = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
     assert summary["skipped"] == 1
     assert summary["processed"] == N_BUCKETS - 1
-    assert _corpus_hash(spark, out + "/bucket=*") == ref_hash
+    assert _corpus_hash(load_done(spark, out, ledger_path, "words")) == ref_hash
     # every staging dir was either swept (the crashed attempt) or
     # renamed into the table — the staging tree drains to empty
-    assert os.listdir(out + ".staging") == []
+    assert os.listdir(words + ".staging") == []
+
+
+def test_load_done_reads_only_committed_buckets(spark, bucketed_input, reference, tmp_path):
+    """load_done reads exactly the buckets whose ledger row is done:
+    after a kill between buckets, after a kill between the staging
+    write and the rename, with a committed dir whose row is gone, and
+    with a row left by an older, larger bucket count (which the next
+    run retires). The resumed output equals the uninterrupted run."""
+    import shutil
+
+    out = str(tmp_path / "out")
+    ledger_path = str(tmp_path / "ledger")
+    words = os.path.join(out, "words")
+
+    def loaded() -> tuple[set[int], str]:
+        df = load_done(spark, out, ledger_path, "words")
+        return {r["bucket"] for r in df.select("bucket").distinct().collect()}, _corpus_hash(df)
+
+    def want(buckets: set[int]) -> tuple[set[int], str]:
+        return buckets, _corpus_hash(reference.where(F.col("bucket").isin(sorted(buckets))))
+
+    with pytest.raises(ValueError, match="'words'"):
+        load_done(spark, out, ledger_path, "words")  # nothing committed yet
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extraction_job(
+            spark, bucketed_input, out, ledger_path, N_BUCKETS, fail_after=2
+        )
+    assert loaded() == want({0, 1})
+
+    # staged for bucket 2 but never renamed: invisible
+    with pytest.raises(RuntimeError, match="between write and rename"):
+        run_extraction_job(
+            spark, bucketed_input, out, ledger_path, N_BUCKETS, fail_before_commit=0
+        )
+    assert len(os.listdir(words + ".staging")) == 1
+    assert loaded() == want({0, 1})
+
+    # a committed dir whose ledger row is gone (renamed, not yet marked): invisible
+    os.unlink(os.path.join(ledger_path, "bucket=0.json"))
+    assert os.path.isdir(os.path.join(words, "bucket=0"))
+    assert loaded() == want({1})
+    # a kind the ledger does not list is not read either
+    with pytest.raises(ValueError, match="'extracted'"):
+        load_done(spark, out, ledger_path, "extracted")
+
+    # a done row of an older 5-bucket run: read while the ledger names it,
+    # retired by the next 4-bucket run
+    shutil.copytree(os.path.join(words, "bucket=1"), os.path.join(words, f"bucket={N_BUCKETS}"))
+    Ledger(ledger_path).mark_done(N_BUCKETS, **{
+        k: v for k, v in Ledger(ledger_path).get(1).items()
+        if k not in ("partition_id", "status", "attempt")
+    })
+    assert loaded()[0] == {1, N_BUCKETS}
+
+    summary = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    assert summary["processed"] == N_BUCKETS - 1 and summary["skipped"] == 1
+    assert loaded() == want(set(range(N_BUCKETS)))
+
+
+def test_flat_layout_ledger_is_redone_into_the_kind_layout(spark, tmp_path):
+    """A ledger from the older flat layout, whose rows carry no
+    ``outputs``: a flat ``out/bucket=0`` dir, one row keyed by the old
+    ``+emit=words`` lineage suffix and one by the bare input lineage.
+    Both buckets are redone and counted relineaged, and load_done reads
+    the ``out/words`` table, not the flat dir."""
+    from fusus_spark.extraction.pipeline import extract_stage, words_from_stage
+
+    rows = [
+        (f"http://ex.com/{i}", None, f"<p>body {i} of the page</p>".encode(), None, "en")
+        for i in range(12)
+    ]
+    docs = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+    inp = str(tmp_path / "input")
+    write_bucketed_input(docs, inp, 2)
+    out = str(tmp_path / "out")
+    led = str(tmp_path / "ledger")
+    spark.createDataFrame([("http://ex.com/stale",)], "url string").write.parquet(
+        os.path.join(out, "bucket=0")
+    )
+    for bucket, suffix in ((0, "+emit=words"), (1, "")):
+        Ledger(led).mark_done(
+            bucket, rows_in=6, rows_out=6, bytes_in=1, bytes_out=1,
+            input_snapshot_id=input_lineage(inp, bucket) + suffix, wall_ms=0,
+        )
+
+    summary = run_extraction_job(spark, inp, out, led, 2)
+    assert summary["processed"] == 2 and summary["skipped"] == 0
+    assert summary["relineaged"] == 2
+    got = load_done(spark, out, led, "words").drop("bucket")
+    want = words_from_stage(extract_stage(docs)).select(*got.columns)
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
 def test_multi_emit_one_parse_three_tables(spark, bucketed_input, tmp_path):
@@ -166,17 +262,17 @@ def test_multi_emit_one_parse_three_tables(spark, bucketed_input, tmp_path):
 
     docs = spark.read.parquet(bucketed_input).drop("bucket")
     want_env = extracted_from_stage(extract_stage(repartition_salted(docs, 4)))
-    got_env = spark.read.parquet(out + "/extracted/bucket=*")
+    got_env = load_done(spark, out, ledger_path, "extracted").drop("bucket")
     assert got_env.count() == want_env.count()
     assert got_env.exceptAll(want_env).count() == 0
 
     want_rem = extract_removals(docs).where(~F.col("kept")).count()
     got_rem = (
-        spark.read.parquet(out + "/removals/bucket=*")
+        load_done(spark, out, ledger_path, "removals")
         .where(~F.col("kept")).count()
     )
     assert got_rem == want_rem
-    assert spark.read.parquet(out + "/words/bucket=*").count() > 0
+    assert load_done(spark, out, ledger_path, "words").count() > 0
 
     # ledger carries per-kind metrics
     rows = Ledger(ledger_path).rows()
@@ -188,15 +284,16 @@ def test_lineage_invalidation(spark, bucketed_input, tmp_path):
     ledger_path = str(tmp_path / "ledger2")
     run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
     ledger = Ledger(ledger_path)
-    # the stored key is input lineage + the emit-set suffix
-    lineage0 = input_lineage(bucketed_input, 0) + "+emit=words"
-    assert ledger.is_done(0, lineage0)
+    # the stored key is the input lineage; the emit set is the row's outputs
+    lineage0 = input_lineage(bucketed_input, 0)
+    assert ledger.is_done(0, lineage0, ("words",))
+    assert not ledger.is_done(0, lineage0, ("words", "jsonld"))
     # If the input bucket changes, the bucket is no longer considered done.
     assert not ledger.is_done(0, "different-lineage")
     # Corrupt ledger file -> treated as not-done (safe redo, not crash).
     with open(os.path.join(ledger_path, "bucket=1.json"), "w") as f:
         f.write("{broken json")
-    assert not ledger.is_done(1, input_lineage(bucketed_input, 1) + "+emit=words")
+    assert not ledger.is_done(1, input_lineage(bucketed_input, 1))
 
 
 def test_by_date_grid_resume_and_reprocess(spark, tmp_path):
@@ -231,8 +328,15 @@ def test_by_date_grid_resume_and_reprocess(spark, tmp_path):
     flat_inp = str(tmp_path / "flat_input")
     flat_out = str(tmp_path / "flat_out")
     write_bucketed_input(docs, flat_inp, N_BUCKETS)
-    run_extraction_job(spark, flat_inp, flat_out, str(tmp_path / "flat_led"), N_BUCKETS)
-    assert _corpus_hash(spark, out) == _corpus_hash(spark, flat_out)
+    flat_led = str(tmp_path / "flat_led")
+    run_extraction_job(spark, flat_inp, flat_out, flat_led, N_BUCKETS)
+    dated = [
+        load_done(spark, f"{out}/crawl_date={d}", f"{led}/crawl_date={d}", "words")
+        for d in list_crawl_dates(inp)
+    ]
+    assert _corpus_hash(dated[0].unionByName(dated[1])) == _corpus_hash(
+        load_done(spark, flat_out, flat_led, "words")
+    )
 
     # reprocess ONE date: only that date's grid runs
     s3 = run_extraction_job_by_date(
@@ -377,7 +481,7 @@ def test_extraction_job_respect_robots(spark, tmp_path):
     )
     assert summary["processed"] == 2
     opted = {r[0] for i, r in enumerate(rows) if i % 3 == 0}
-    words = spark.read.parquet(out + "/bucket=*")
+    words = load_done(spark, out, str(tmp_path / "rb_ledger"), "words")
     assert words.where(words["url"].isin(list(opted))).count() == 0
     assert words.count() > 0
     rows_in = sum(r["rows_in"] for r in Ledger(str(tmp_path / "rb_ledger")).rows())
@@ -439,19 +543,19 @@ def test_doc_level_emit_kinds_side_tables(spark, tmp_path):
     assert summary["processed"] == N_BUCKETS - 2 and summary["skipped"] == 2
 
     raw = spark.read.parquet(inp).drop("bucket")
-    got_pairs = spark.read.parquet(out + "/image_pairs/bucket=*")
+    got_pairs = load_done(spark, out, ledger_path, "image_pairs").drop("bucket")
     want_pairs = image_text_pairs(raw)
     assert got_pairs.count() == want_pairs.count() == 40
     assert got_pairs.exceptAll(want_pairs).count() == 0
 
-    got_meta = spark.read.parquet(out + "/pagemeta/bucket=*")
+    got_meta = load_done(spark, out, ledger_path, "pagemeta").drop("bucket")
     want_meta = page_metadata(raw)
     assert got_meta.count() == 40
     assert got_meta.exceptAll(want_meta).count() == 0
 
-    assert spark.read.parquet(out + "/jsonld/bucket=*").count() == 40
-    assert spark.read.parquet(out + "/media_refs/bucket=*").count() == 40
-    assert spark.read.parquet(out + "/words/bucket=*").count() > 0
+    assert load_done(spark, out, ledger_path, "jsonld").count() == 40
+    assert load_done(spark, out, ledger_path, "media_refs").count() == 40
+    assert load_done(spark, out, ledger_path, "words").count() > 0
 
     rows_l = Ledger(ledger_path).rows()
     assert all(set(r["outputs"]) == set(emit) for r in rows_l)
@@ -459,8 +563,8 @@ def test_doc_level_emit_kinds_side_tables(spark, tmp_path):
 
 def test_doc_level_emit_only_skips_parse(spark, tmp_path):
     """emit with ONLY doc-level kinds never builds the parse stage —
-    the job completes and emits the side table alone (layout stays
-    multi-kind? no: single kind keeps the legacy flat layout)."""
+    the job completes and emits the side table alone, in the same
+    ``out/<kind>/bucket=k`` layout as every other emit."""
     from fusus_spark.operators.pagemeta import jsonld_records
 
     inp = str(tmp_path / "input")
@@ -481,7 +585,7 @@ def test_doc_level_emit_only_skips_parse(spark, tmp_path):
         spark, inp, out, str(tmp_path / "ledger"), 2, emit=("jsonld",)
     )
     assert summary["processed"] == 2
-    got = spark.read.parquet(out + "/bucket=*")
+    got = load_done(spark, out, str(tmp_path / "ledger"), "jsonld").drop("bucket")
     want = jsonld_records(spark.read.parquet(inp).drop("bucket"))
     assert got.count() == want.count() == 12
     assert got.exceptAll(want).count() == 0
@@ -513,7 +617,7 @@ def test_emit_set_is_part_of_the_resume_key(spark, tmp_path):
     assert s2["processed"] == 2 and s2["skipped"] == 0   # invalidated
     # ...and the summary says why: every done bucket was relineaged
     assert s2["relineaged"] == 2
-    assert spark.read.parquet(out + "/jsonld/bucket=*").count() == 12
+    assert load_done(spark, out, led, "jsonld").count() == 12
     # identical emit resumes as before
     s3 = run_extraction_job(spark, inp, out, led, 2, emit=("words", "jsonld"))
     assert s3["skipped"] == 2 and s3["processed"] == 0

@@ -14,7 +14,7 @@ import subprocess
 import pyspark
 
 from fusus_spark.schema import DOCUMENTS_SCHEMA
-from fusus_spark.sources.ledger import write_bucketed_input
+from fusus_spark.sources.ledger import load_done, write_bucketed_input
 from tests.fixtures import fixture_documents
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
@@ -63,7 +63,7 @@ def test_spark_submit_py_files_local_cluster(spark, tmp_path):
     # byte-for-byte (same words table)
     from fusus_spark.extraction.pipeline import extract_stage, words_from_stage
 
-    words = spark.read.parquet(out).drop("bucket")
+    words = load_done(spark, out, ledger, "words").drop("bucket")
     batch = words_from_stage(extract_stage(docs)).select(*words.columns)
     assert batch.exceptAll(words).count() == 0
     assert words.exceptAll(batch).count() == 0

@@ -96,124 +96,6 @@ def test_dedup_stream_survivor_contract_under_arrival_order(spark, tmp_path):
     assert sets[0] == sets[1] and len(sets[0]) == len(want)
 
 
-def test_user_counts_stream_matches_batch(spark, tmp_path):
-    """applyInPandasWithState running totals: the LAST update emitted
-    per user equals the batch aggregate over all events."""
-    import datetime as dt
-
-    from fusus_spark.streaming import user_counts_stream
-
-    base = dt.datetime(2026, 1, 1)
-    rows = [
-        (i, base + dt.timedelta(minutes=i), i % 5, "click", float(i % 7), "{}")
-        for i in range(100)
-    ]
-    ev = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    in_dir = str(tmp_path / "evs")
-    # several files so state genuinely carries across micro-batches
-    ev.repartition(4).write.parquet(in_dir)
-
-    q = user_counts_stream(spark, in_dir, str(tmp_path / "sckpt"), "user_counts")
-    q.awaitTermination(120)
-
-    # update mode: several rows per user over time; the final one wins
-    got_rows = spark.table("user_counts").collect()
-    finals = {}
-    for r in got_rows:  # memory sink appends in batch order
-        finals[r["user_id"]] = (r["n_events"], r["sum_value_e4"])
-    from pyspark.sql import functions as F
-
-    # the contract is sum(round(value*1e4)) — per-event scaling keeps
-    # the total exact-integer and arrival-order independent
-    want = {
-        r["user_id"]: (r["n"], r["sv"])
-        for r in ev.groupBy("user_id").agg(
-            F.count("*").alias("n"),
-            F.sum(F.round(F.col("value") * 10000)).cast("bigint").alias("sv"),
-        ).collect()
-    }
-    assert finals == want
-    assert len(got_rows) > len(finals)  # state really updated across batches
-
-
-def test_windowed_watermark_stream_matches_batch(spark, tmp_path):
-    """Watermarked windowed agg (append mode): emitted windows == the
-    batch aggregation restricted to windows closed by the final
-    watermark (max event time - delay); nothing more, nothing less."""
-    import datetime as dt
-
-    from fusus_spark.streaming import windowed_event_counts_stream
-
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rows = []
-    eid = 0
-    for hour in range(8):  # 8 hourly windows
-        for k in range(10):
-            rows.append(
-                (eid, base + dt.timedelta(hours=hour, minutes=k * 5),
-                 k % 3, "click" if k % 2 else "view", float(k), "{}")
-            )
-            eid += 1
-    ev = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    in_dir = str(tmp_path / "ev")
-    # The file source processes oldest-modified files first; write one
-    # file per 2-hour chunk IN EVENT-TIME ORDER so the watermark
-    # advances monotonically batch by batch (out-of-order files would
-    # legitimately drop the earlier windows as late data). Mtimes are
-    # set explicitly (monotonic, whole seconds) — sleeping between
-    # writes is slower and can still tie on coarse-timestamp
-    # filesystems.
-    import glob as _glob
-    import os as _os
-
-    stamped: set[str] = set()
-    for i, h0 in enumerate(range(0, 8, 2)):
-        lo = base + dt.timedelta(hours=h0)
-        hi = base + dt.timedelta(hours=h0 + 2)
-        chunk = ev.where((ev["ts"] >= lo) & (ev["ts"] < hi))
-        chunk.coalesce(1).write.mode("append").parquet(in_dir)
-        for f in _glob.glob(in_dir + "/*.parquet"):
-            if f not in stamped:
-                _os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
-                stamped.add(f)
-
-    q = windowed_event_counts_stream(
-        spark, in_dir, str(tmp_path / "ckpt"), "win_ev",
-        window="1 hour", watermark="1 hour", max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r["w_start"], r["event_type"], r["n"], r["sum_value_e4"])
-        for r in spark.table("win_ev").collect()
-    }
-
-    from pyspark.sql import functions as F
-
-    max_ts = ev.agg(F.max("ts")).first()[0]
-    final_watermark = max_ts - dt.timedelta(hours=1)
-    batch = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"),
-             F.round(F.sum("value") * 10000).cast("bigint").alias("sum_value_e4"))
-        .where(F.col("w.end") <= F.lit(final_watermark))
-    )
-    want = {
-        (r["w"]["start"], r["event_type"], r["n"], r["sum_value_e4"])
-        for r in batch.collect()
-    }
-    assert got == want
-    assert len(got) > 0  # the stream actually emitted closed windows
-
-
 def test_dedup_stream_vs_store_flags_snapshot_dups(spark, tmp_path):
     """Stream-static incremental dedup: arriving docs carrying content
     already in the hash store come out is_seen=true; novel docs false;

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import gzip
 
+from fusus_spark.sources.ledger import load_done
 from fusus_spark.sources.warc import iter_warc_records, read_warc
 
 
@@ -146,7 +147,7 @@ def test_extract_job_warc_input(spark, tmp_path):
         input_format="warc",
     )
     assert summary["processed"] == 2
-    words = spark.read.parquet(out + "/bucket=*")
+    words = load_done(spark, out, str(tmp_path / "ledger"), "words")
     got = {(r["url"], r["word"]) for r in words.collect()}
     assert ("http://ex.com/a", "alpha") in got
     assert ("http://ex.com/b", "epsilon") in got
@@ -172,7 +173,7 @@ def test_extract_job_warc_input(spark, tmp_path):
         input_format="warc",
     )
     assert summary3["processed"] == 2
-    assert spark.read.parquet(out + "/bucket=*").count() == 10  # 5 words x 2 files
+    assert load_done(spark, out, str(tmp_path / "ledger"), "words").count() == 10  # 5 words x 2 files
 
 
 def test_read_warc_to_extraction(spark, tmp_path):
@@ -411,7 +412,7 @@ def test_extract_job_filters_non_200_and_header_robots(spark, tmp_path):
     )
     urls = {
         r["url"]
-        for r in spark.read.parquet(str(tmp_path / "words") + "/bucket=*").collect()
+        for r in load_done(spark, str(tmp_path / "words"), str(tmp_path / "ledger"), "words").collect()
     }
     assert urls == {"http://ex.com/keep", "http://ex.com/optout"}
     # the bucketed table kept the envelope columns for downstream tiers,
@@ -441,7 +442,7 @@ def test_extract_job_filters_non_200_and_header_robots(spark, tmp_path):
     )
     urls2 = {
         r["url"]
-        for r in spark.read.parquet(str(tmp_path / "words2") + "/bucket=*").collect()
+        for r in load_done(spark, str(tmp_path / "words2"), str(tmp_path / "ledger2"), "words").collect()
     }
     assert urls2 == {"http://ex.com/keep"}
 
