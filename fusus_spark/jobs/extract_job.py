@@ -6,11 +6,11 @@ North-rule launch shape:
     spark-submit --py-files dist/fusus_spark.zip \\
         fusus_spark/jobs/extract_job.py \\
         --input  <bucketed documents table dir> \\
-        --output <output root: one <kind>/bucket=k table per --emit kind> \\
+        --output <output root: one <kind> table per --emit kind> \\
         --ledger <progress ledger dir> \\
         --buckets 256
 
-The job is resumable: buckets already marked done in the ledger (with
+The job is resumable: units already marked done in the ledger (with
 matching input lineage) are skipped; kill it at any point and re-submit
 with the same arguments to resume exactly (tests/test_resume.py).
 Read the output back with ``sources.ledger.load_done``.
@@ -26,11 +26,12 @@ re-ingests, and the lineage flip invalidates the affected buckets.
 
 On a real cluster the input is an Iceberg table partitioned by
 ``days(warc_ts) + bucket(N, url)``; here the same layout is plain
-parquet — ``bucket=k/`` directories, or with ``--by-date`` the full
-``crawl_date=D/bucket=k/`` grid (written by
-fusus_spark.sources.ledger.write_bucketed_input with date_col), where
-restart/reprocess units are (crawl_date, bucket) and ``--dates`` limits
-a run to chosen crawl drops.
+parquet — ``bucket=k/`` directories, or the full
+``crawl_date=D/bucket=k/`` grid (fusus_spark.sources.ledger.
+write_bucketed_input with date_col; ``--by-date`` makes WARC ingest
+write it). The job reads which layout it has from the table: each
+partition dir is one restart unit, and on a crawl-date table
+``--dates`` limits a run to chosen crawl drops.
 """
 
 from __future__ import annotations
@@ -60,16 +61,12 @@ def run_job(
 ) -> dict:
     """The job body, session-agnostic (tests drive it directly).
 
-    ``by_date=True`` expects the ``crawl_date=D/bucket=K`` layout
-    (write_bucketed_input with date_col) and restarts on the
-    (crawl_date, bucket) grid; ``dates`` limits the run to specific
-    crawl dates (e.g. reprocessing one crawl drop).
+    ``by_date=True`` makes WARC ingest write the ``crawl_date=D/bucket=K``
+    layout; the extraction reads the layout from the table either way.
+    ``dates`` limits a crawl-date table's run to specific crawl dates
+    (e.g. reprocessing one crawl drop).
     """
-    from fusus_spark.sources.ledger import (
-        run_extraction_job,
-        run_extraction_job_by_date,
-        write_bucketed_input,
-    )
+    from fusus_spark.sources.ledger import run_extraction_job, write_bucketed_input
 
     if input_format == "warc":
         import hashlib
@@ -166,24 +163,13 @@ def run_job(
                 json.dump({"fingerprint": fingerprint}, fh)
             os.replace(tmp_marker, marker)
         input_path = table_dir
-    if by_date:
-        return run_extraction_job_by_date(
-            spark,
-            input_path,
-            output_path,
-            ledger_path,
-            n_buckets,
-            dates=dates,
-            emit=emit,
-            max_html_bytes=max_html_bytes,
-            respect_robots=respect_robots,
-        )
     return run_extraction_job(
         spark,
         input_path,
         output_path,
         ledger_path,
         n_buckets,
+        dates=dates,
         emit=emit,
         max_html_bytes=max_html_bytes,
         respect_robots=respect_robots,
@@ -194,7 +180,7 @@ def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True,
                    help="bucketed documents dir, or a crawl segment dir with --input-format warc")
-    p.add_argument("--output", required=True, help="root of the <output>/<kind>/bucket=k tables")
+    p.add_argument("--output", required=True, help="root of the <output>/<kind> tables")
     p.add_argument("--ledger", required=True, help="progress ledger dir")
     p.add_argument("--buckets", type=int, required=True)
     p.add_argument("--input-format", choices=("bucketed-parquet", "warc"),
@@ -214,14 +200,15 @@ def main(argv: list[str] | None = None) -> None:
                         "declares html (or none) — media/JSON/PDF payloads "
                         "never reach the table")
     p.add_argument("--by-date", action="store_true",
-                   help="input uses the crawl_date=D/bucket=K layout; restart "
-                        "grid becomes (crawl_date, bucket)")
+                   help="warc ingest writes the crawl_date=D/bucket=K layout "
+                        "(restart units become (crawl_date, bucket))")
     p.add_argument("--dates",
-                   help="comma list of crawl dates to process (default: all present)")
+                   help="comma list of crawl dates to process on a crawl-date "
+                        "table (default: all present)")
     args = p.parse_args(argv)
 
-    if args.dates and not args.by_date:
-        p.error("--dates requires --by-date")
+    if args.by_date and args.input_format != "warc":
+        p.error("--by-date requires --input-format warc")
 
     # Under spark-submit, the session already exists; standalone, build one.
     spark = SparkSession.builder.appName("fusus-extract").getOrCreate()

@@ -3,41 +3,44 @@
 North-rule requirement (BASELINE.json): a killed run resumes exactly,
 with per-partition lineage + rows/bytes metrics. The reference's unit
 of restart is the page file (fusus/book.py:463-485: outputs keyed by
-page, re-run only selected pages); ours is the **url-hash bucket**:
+page, re-run only selected pages); ours is the **partition id** of the
+input layout, ``bucket=k`` or ``crawl_date=D/bucket=k``:
 
 * input is laid out partitioned by ``bucket = pmod(xxhash64(url, salt), N)``
   (at real scale: Iceberg ``days(warc_ts) + bucket(N, url)`` — reading
-  one bucket prunes to one partition directory, never a full scan);
-* each bucket is processed independently and committed atomically IN
-  TWO STAGES: each kind's parquet is written to a staging dir
-  ``out/<kind>.staging/bucket=k-<uuid>`` — a SIBLING of the table
-  ``out/<kind>``, never inside it (Spark 4's partition inference trips
-  even on ``_``-prefixed dirs in a table root) — then renamed to
-  ``out/<kind>/bucket=k`` (POSIX-atomic on one filesystem — the Iceberg
-  snapshot-commit analog), THEN the ledger row, whose ``outputs`` names
-  the kinds committed, is written via tmp-file + rename. A crash at any
-  point leaves either the old complete bucket or no bucket, never a
-  partial one, and an un-marked bucket is simply redone — idempotent
-  because the rename replaces the whole bucket;
-* resume = skip buckets whose ledger row says done AND whose recorded
-  input lineage and ``outputs`` kinds still match;
-* concurrent writers: each bucket is guarded by a ``BucketLock``
+  one unit prunes to one partition directory, never a full scan);
+* each unit is processed independently and committed atomically IN
+  TWO STAGES: each kind's parquet is written to a staging dir under
+  ``out/<kind>.staging`` — a SIBLING of the table ``out/<kind>``, never
+  inside it (Spark 4's partition inference trips even on ``_``-prefixed
+  dirs in a table root) — then renamed to ``out/<kind>/<partition_id>``
+  (POSIX-atomic on one filesystem — the Iceberg snapshot-commit
+  analog), THEN the ledger row ``<partition_id>.json``, whose
+  ``outputs`` names the kinds committed, is written via tmp-file +
+  rename. A crash at any point leaves either the old complete unit or
+  no unit, never a partial one, and an un-marked unit is simply redone
+  — idempotent because the rename replaces the whole unit;
+* resume = skip units whose ledger row says done for that unit AND
+  whose recorded input lineage and ``outputs`` kinds still match;
+* concurrent writers: each unit is guarded by a ``BucketLock``
   (O_EXCL lock file under ``<ledger>/locks/``) — two job instances
-  against the same output PARTITION the un-done buckets between them
+  against the same output PARTITION the un-done units between them
   instead of double-processing; stale locks (dead pid / age) are
   broken and taken over;
 * readers load through the ledger (``load_done``), which reads only
-  the buckets it marks done: exactly the snapshot the ledger defines.
+  the units it marks done, every crawl date in one call.
 
-The ledger is a directory of one small JSON file per bucket — the same
+The ledger is a directory of one small JSON file per unit — the same
 shape an Iceberg ``_progress`` table would have; files keep the sandbox
 dependency-free and the commit atomic without a table format.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import time
 import uuid
 
@@ -62,8 +65,8 @@ def write_bucketed_input(
 
     With ``date_col`` (e.g. ``warc_ts``), the layout gains the crawl-date
     dimension the Iceberg design names — ``days(warc_ts), bucket(N, url)``
-    — as ``crawl_date=YYYY-MM-DD/bucket=K`` directories, the unit grid
-    ``run_extraction_job_by_date`` restarts on.
+    — as ``crawl_date=YYYY-MM-DD/bucket=K`` directories, each one a
+    restart unit of ``run_extraction_job``.
     """
     b = with_bucket(docs, n_buckets)
     if date_col is None:
@@ -94,11 +97,12 @@ def list_crawl_dates(input_path: str) -> list[str]:
     )
 
 
-def input_lineage(input_path: str, bucket: int) -> str:
-    """Lineage id for one input bucket: hash of (name, size) of its files."""
+def input_lineage(input_path: str, unit: str) -> str:
+    """Lineage id for one input unit (``bucket=k`` or
+    ``crawl_date=D/bucket=k``): hash of (name, size) of its files."""
     import hashlib
 
-    d = os.path.join(input_path, f"bucket={bucket}")
+    d = os.path.join(input_path, unit)
     entries = []
     if os.path.isdir(d):
         for f in sorted(os.listdir(d)):
@@ -109,57 +113,66 @@ def input_lineage(input_path: str, bucket: int) -> str:
 
 
 class Ledger:
-    """Directory-backed _progress table (FIXTURES.md §4 schema)."""
+    """Directory-backed _progress table (FIXTURES.md §4 schema): one row
+    file ``<partition_id>.json`` per unit."""
 
     def __init__(self, path: str):
         self.path = path
         os.makedirs(path, exist_ok=True)
 
-    def _file(self, bucket: int) -> str:
-        return os.path.join(self.path, f"bucket={bucket}.json")
+    def _file(self, unit: str) -> str:
+        return os.path.join(self.path, unit + ".json")
 
-    def get(self, bucket: int) -> dict | None:
+    def units(self) -> list[str]:
+        """The unit of every row file, at either depth."""
+        files = glob.glob("*.json", root_dir=self.path)
+        files += glob.glob("crawl_date=*/*.json", root_dir=self.path)
+        return sorted(f[: -len(".json")] for f in files)
+
+    def get(self, unit: str) -> dict | None:
         try:
-            with open(self._file(bucket)) as f:
+            with open(self._file(unit)) as f:
                 return json.load(f)
         except (FileNotFoundError, json.JSONDecodeError):
             return None
 
-    def is_done(self, bucket: int, lineage: str | None = None, emit: tuple | None = None) -> bool:
-        rec = self.get(bucket)
-        if rec is None or rec.get("status") != "done":
+    def is_done(self, unit: str, lineage: str | None = None, emit: tuple | None = None) -> bool:
+        rec = self.get(unit)
+        if rec is None or rec.get("status") != "done" or rec.get("partition_id") != unit:
             return False
         if lineage is not None and rec.get("input_snapshot_id") != lineage:
             return False
         return emit is None or set(rec.get("outputs") or ()) == set(emit)
 
-    def mark_done(self, bucket: int, **metrics) -> None:
+    def mark_done(self, unit: str, **metrics) -> None:
         rec = {
-            "partition_id": f"bucket={bucket}",
+            "partition_id": unit,
             "status": "done",
-            "attempt": (self.get(bucket) or {}).get("attempt", 0) + 1,
+            "attempt": (self.get(unit) or {}).get("attempt", 0) + 1,
             **metrics,
         }
-        tmp = self._file(bucket) + f".tmp.{uuid.uuid4().hex}"
+        path = self._file(unit)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = path + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(rec, f)
-        os.replace(tmp, self._file(bucket))  # atomic commit
+        os.replace(tmp, path)  # atomic commit
 
     def rows(self) -> list[dict]:
-        out = []
-        for f in sorted(os.listdir(self.path)):
-            if f.endswith(".json"):
-                with open(os.path.join(self.path, f)) as fh:
-                    out.append(json.load(fh))
-        return out
+        """Every readable row filed under its own partition id. A torn
+        file is skipped (not done, as ``get`` says); so is a row that
+        names another unit than its file, whose output is elsewhere."""
+        recs = ((u, self.get(u)) for u in self.units())
+        return [r for u, r in recs if r is not None and r.get("partition_id") == u]
 
 
 def load_done(
     spark: SparkSession, output_path: str, ledger_path: str, kind: str
 ) -> DataFrame:
-    """Exactly the ``out/<kind>/bucket=k`` dirs whose ledger row is done
-    and lists ``kind`` in ``outputs`` (``bucket`` column kept); nothing
-    else under ``out`` is read. By-date output loads once per date."""
+    """Exactly the ``out/<kind>/<partition_id>`` dirs whose ledger row
+    is done and lists ``kind`` in ``outputs`` (the ``bucket`` and, for
+    a crawl-date table, ``crawl_date`` columns kept); nothing else
+    under ``out`` is read."""
     root = os.path.join(output_path, kind)
     paths = [
         os.path.join(root, r["partition_id"])
@@ -197,8 +210,8 @@ class BucketLock:
         os.makedirs(self.dir, exist_ok=True)
         self.stale_after_s = stale_after_s
 
-    def _file(self, bucket: int) -> str:
-        return os.path.join(self.dir, f"bucket={bucket}.lock")
+    def _file(self, unit: str) -> str:
+        return os.path.join(self.dir, _flat(unit) + ".lock")
 
     @staticmethod
     def _alive(rec: dict) -> bool:
@@ -218,12 +231,12 @@ class BucketLock:
             # a live foreign-user writer, not a dead one
             return True
 
-    def acquire(self, bucket: int) -> bool:
+    def acquire(self, unit: str) -> bool:
         """True if this process now holds the bucket; False if another
         LIVE writer does. Stale locks are broken and re-raced."""
         import socket
 
-        path = self._file(bucket)
+        path = self._file(unit)
         payload = json.dumps(
             {"pid": os.getpid(), "host": socket.gethostname(), "ts": time.time()}
         )
@@ -265,9 +278,9 @@ class BucketLock:
                     pass
         return False
 
-    def release(self, bucket: int) -> None:
+    def release(self, unit: str) -> None:
         try:
-            os.unlink(self._file(bucket))
+            os.unlink(self._file(unit))
         except FileNotFoundError:
             pass
 
@@ -296,13 +309,19 @@ def _doc_splitters() -> dict:
     }
 
 
-def _sweep_staging(staging_root: str, bucket: int) -> None:
-    """Remove staging/trash leftovers of crashed attempts for a bucket."""
+def _flat(unit: str) -> str:
+    """A unit as one file name: ``crawl_date=D_bucket=k`` (staging, locks)."""
+    return unit.replace("/", "_")
+
+
+def _sweep_staging(staging_root: str, unit: str) -> None:
+    """Remove staging/trash leftovers of crashed attempts for a unit."""
     import shutil
 
     os.makedirs(staging_root, exist_ok=True)
+    name = _flat(unit)
     for stale in os.listdir(staging_root):
-        if stale.startswith((f"bucket={bucket}-", f"trash-bucket={bucket}-")):
+        if stale.startswith((f"{name}-", f"trash-{name}-")):
             shutil.rmtree(os.path.join(staging_root, stale), ignore_errors=True)
 
 
@@ -322,8 +341,8 @@ def _footer_metrics(tmp_dir: str) -> tuple[int, int]:
     return rows, size
 
 
-def _commit_bucket(tmp_dir: str, root: str, bucket: int) -> None:
-    """Atomically move a staged bucket dir to ``root/bucket=k``.
+def _commit_bucket(tmp_dir: str, root: str, unit: str) -> None:
+    """Atomically move a staged bucket dir to ``root/<unit>``.
 
     Replacement moves the old bucket ASIDE first (rename, atomic),
     commits the new one, THEN deletes the old files — a reader never
@@ -332,10 +351,10 @@ def _commit_bucket(tmp_dir: str, root: str, bucket: int) -> None:
     (plus sweepable trash in staging)."""
     import shutil
 
-    final_dir = os.path.join(root, f"bucket={bucket}")
-    os.makedirs(root, exist_ok=True)
+    final_dir = os.path.join(root, unit)
+    os.makedirs(os.path.dirname(final_dir), exist_ok=True)
     if os.path.isdir(final_dir):
-        trash = os.path.join(root + ".staging", f"trash-bucket={bucket}-{uuid.uuid4().hex}")
+        trash = os.path.join(root + ".staging", f"trash-{_flat(unit)}-{uuid.uuid4().hex}")
         os.rename(final_dir, trash)
         os.rename(tmp_dir, final_dir)
         shutil.rmtree(trash, ignore_errors=True)
@@ -356,6 +375,27 @@ def _content_rows(docs: DataFrame) -> DataFrame:
     )
 
 
+def _units(
+    input_path: str, n_buckets: int, dates: list[str] | None
+) -> list[tuple[str, str, int]]:
+    """(partition id, dir to read, bucket) of every restart unit the
+    input layout names: ``bucket=k`` for a flat table, else
+    ``crawl_date=D/bucket=k`` for ``dates`` (default: every date)."""
+    present = list_crawl_dates(input_path)
+    if not present:
+        if dates is not None:
+            raise ValueError(f"dates given, but {input_path} has no crawl_date=* partitions")
+        return [(f"bucket={k}", input_path, k) for k in range(n_buckets)]
+    for d in dates or ():
+        if d not in present:
+            raise ValueError(f"crawl_date={d} is not under {input_path}")
+    return [
+        (f"crawl_date={d}/bucket={k}", os.path.join(input_path, f"crawl_date={d}"), k)
+        for d in (present if dates is None else dates)
+        for k in range(n_buckets)
+    ]
+
+
 def run_extraction_job(
     spark: SparkSession,
     input_path: str,
@@ -363,6 +403,7 @@ def run_extraction_job(
     ledger_path: str,
     n_buckets: int,
     *,
+    dates: list[str] | None = None,
     emit: tuple[str, ...] = ("words",),
     fail_after: int | None = None,
     fail_before_commit: int | None = None,
@@ -370,6 +411,9 @@ def run_extraction_job(
     respect_robots: bool = False,
 ) -> dict:
     """Resumable bucket-at-a-time extraction job.
+
+    The restart units are the input's partition dirs (``_units``); on
+    a crawl-date table ``dates`` limits them to those dates.
 
     ``emit`` selects the output tables: the parse-derived kinds come
     from ONE fused parse per bucket (the stage is persisted across
@@ -379,12 +423,12 @@ def run_extraction_job(
     doc-level side-table kinds — ``pagemeta``, ``image_pairs``,
     ``media_refs``, ``jsonld`` — are map-side harvests over the
     bucket's raw html (see _doc_splitters) riding the same staged
-    commit and ledger grid. Each kind lands in ``out/<kind>/bucket=k``;
+    commit and ledger grid. Each kind lands in ``out/<kind>/<unit>``;
     the ledger row's ``outputs``, written after every rename, is the
     record of what a bucket committed (``load_done`` reads through it).
 
-    ``fail_after=k`` injects a crash after k buckets; ``fail_before_
-    commit=k`` injects it on the k-th processed bucket AFTER the staging
+    ``fail_after=k`` injects a crash after k units; ``fail_before_
+    commit=k`` injects it on the k-th processed unit AFTER the staging
     writes but BEFORE the atomic renames (for the kill-mid-write
     acceptance test). Returns summary metrics.
     """
@@ -407,33 +451,39 @@ def run_extraction_job(
     doc_splitters = _doc_splitters()
     stage_kinds = [k for k in emit if k in splitters]
 
+    units = _units(input_path, n_buckets, dates)
     ledger = Ledger(ledger_path)
     lock = BucketLock(ledger_path)
-    for rec in ledger.rows():  # retire an older, larger bucket count's rows
-        old = int(rec["partition_id"][len("bucket="):])
-        if old >= n_buckets:
+    # one ledger at one depth: retire rows of the other layout's shape
+    # and of an older, larger bucket count (other dates' rows stay)
+    dated = bool(list_crawl_dates(input_path))
+    shape = re.compile(r"crawl_date=[^/]+/bucket=(\d+)" if dated else r"bucket=(\d+)")
+    for old in ledger.units():
+        m = shape.fullmatch(old)
+        if m is None or int(m.group(1)) >= n_buckets:
             os.unlink(ledger._file(old))
     done_now = 0
     skipped = 0
     locked = 0
     relineaged = 0
-    for bucket in range(n_buckets):
-        # a bucket's identity: its input files, the consent filter and
+    for unit, unit_input, bucket in units:
+        # a unit's identity: its input files, the consent filter and
         # (as the row's ``outputs`` kinds) the emit set — a resume that
-        # toggles robots or adds a kind redoes the bucket, never skips it
-        lineage = input_lineage(input_path, bucket)
+        # toggles robots or adds a kind redoes the unit, never skips it
+        lineage = input_lineage(input_path, unit)
         if respect_robots:
             lineage += "+robots"
-        if ledger.is_done(bucket, lineage, emit):
+        if ledger.is_done(unit, lineage, emit):
             skipped += 1
             continue
-        if ledger.is_done(bucket):
+        if (ledger.get(unit) or {}).get("status") == "done":
             # done under another lineage or emit set (or a flat-layout
-            # row with no ``outputs``): redone, and counted
+            # row with no ``outputs``, or a per-date row naming only
+            # its bucket): redone, and counted
             relineaged += 1
         if fail_after is not None and done_now >= fail_after:
             raise RuntimeError(f"injected failure after {done_now} buckets")
-        if not lock.acquire(bucket):
+        if not lock.acquire(unit):
             # a LIVE concurrent writer owns this bucket: leave it to
             # them — concurrent job instances partition the bucket set
             locked += 1
@@ -445,7 +495,7 @@ def run_extraction_job(
         try:
             t0 = time.time()
             # Partition-pruned read: only this bucket's files are scanned.
-            docs = spark.read.parquet(input_path).where(F.col("bucket") == bucket)
+            docs = spark.read.parquet(unit_input).where(F.col("bucket") == bucket)
             docs = _content_rows(docs)
             if respect_robots:
                 # consent filter BEFORE the parse: a meta-noindex page
@@ -485,8 +535,8 @@ def run_extraction_job(
             try:
                 for kind in emit:
                     staging_root = os.path.join(output_path, kind) + ".staging"
-                    _sweep_staging(staging_root, bucket)
-                    tmp_dir = os.path.join(staging_root, f"bucket={bucket}-{uuid.uuid4().hex}")
+                    _sweep_staging(staging_root, unit)
+                    tmp_dir = os.path.join(staging_root, f"{_flat(unit)}-{uuid.uuid4().hex}")
                     if kind in splitters:
                         frame = splitters[kind](stage)
                     else:
@@ -513,13 +563,13 @@ def run_extraction_job(
             observed = stats.get  # filled by the first write above
             if fail_before_commit is not None and done_now >= fail_before_commit:
                 raise RuntimeError(
-                    f"injected failure between write and rename on bucket {bucket}"
+                    f"injected failure between write and rename on {unit}"
                 )
             for kind, tmp_dir in staged.items():
-                _commit_bucket(tmp_dir, os.path.join(output_path, kind), bucket)
+                _commit_bucket(tmp_dir, os.path.join(output_path, kind), unit)
             primary = per_kind.get("words") or per_kind[emit[0]]
             ledger.mark_done(
-                bucket,
+                unit,
                 rows_in=observed["rows_in"],
                 rows_out=primary["rows"],
                 bytes_in=observed["bytes_in"],
@@ -529,10 +579,10 @@ def run_extraction_job(
                 outputs=per_kind,
             )
         finally:
-            lock.release(bucket)
+            lock.release(unit)
         done_now += 1
     return {
-        "buckets": n_buckets,
+        "buckets": len(units),
         "processed": done_now,
         "skipped": skipped,
         "locked": locked,
@@ -540,49 +590,3 @@ def run_extraction_job(
         "ledger_rows": len(ledger.rows()),
     }
 
-
-def run_extraction_job_by_date(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    ledger_path: str,
-    n_buckets: int,
-    dates: list[str] | None = None,
-    **job_kwargs,
-) -> dict:
-    """Crawl-date-partitioned extraction: the restart grid is
-    (crawl_date, bucket), mirroring the Iceberg ``days(warc_ts),
-    bucket(N, url)`` partition spec the module header names.
-
-    Pure composition — each date's slice IS a complete bucketed table
-    (``input/crawl_date=D/bucket=K``), so every date reuses
-    ``run_extraction_job`` verbatim: its per-bucket lineage checks,
-    staged atomic commits, crash injection and resume semantics apply
-    per (date, bucket) with no new machinery. Output and ledger mirror
-    the date layout (``out/crawl_date=D/<kind>/bucket=k``, one ledger
-    dir per date, so ``load_done`` reads one date at a time); a new
-    date is a pure append, and reprocessing one date touches no other.
-
-    ``dates=None`` processes every ``crawl_date=*`` present in the
-    input. Returns {date: per-date summary} plus a ``_total`` roll-up.
-    """
-    todo = dates if dates is not None else list_crawl_dates(input_path)
-    if not todo:
-        raise ValueError(f"no crawl_date=* partitions under {input_path}")
-    out: dict = {}
-    total = {"buckets": 0, "processed": 0, "skipped": 0, "locked": 0,
-             "relineaged": 0, "ledger_rows": 0}
-    for d in todo:
-        summary = run_extraction_job(
-            spark,
-            os.path.join(input_path, f"crawl_date={d}"),
-            os.path.join(output_path, f"crawl_date={d}"),
-            os.path.join(ledger_path, f"crawl_date={d}"),
-            n_buckets,
-            **job_kwargs,
-        )
-        out[d] = summary
-        for k in total:
-            total[k] += summary[k]
-    out["_total"] = total
-    return out

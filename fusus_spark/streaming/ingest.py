@@ -1,10 +1,11 @@
 """Structured Streaming wrapper around the batch extraction stage.
 
 ``readStream`` over a documents directory -> the fused extraction
-``mapInArrow`` stage -> ``foreachBatch`` sink that appends words +
-envelope tables per micro-batch. Checkpointing is Spark's streaming
-checkpoint (offsets) — exactly-once per micro-batch with an idempotent
-parquet append keyed by batch id.
+``mapInArrow`` stage -> ``foreachBatch`` sink that writes the words +
+envelope tables of each micro-batch to ``out/<kind>/batch_id=N``.
+Checkpointing is Spark's streaming checkpoint (offsets); ``foreachBatch``
+is at-least-once, so the sink overwrites its own batch's dirs and a
+re-run micro-batch replaces its output instead of appending it twice.
 
 This is deliberately thin: the extraction semantics live in ONE place
 (fusus_spark.extraction) and are reused verbatim; only the source/sink
@@ -13,6 +14,7 @@ plumbing differs from the batch job.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,6 +25,19 @@ from fusus_spark.extraction.pipeline import (
     words_from_stage,
 )
 from fusus_spark.schema import DOCUMENTS_SCHEMA
+
+
+def write_micro_batch(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
+    """The ``foreachBatch`` sink: one parse, then each table overwrites
+    ``out/<kind>/batch_id=N`` — writing a batch id twice leaves one copy."""
+    stage = extract_stage(batch_df).cache()
+    try:
+        for kind, split in (("words", words_from_stage), ("extracted", extracted_from_stage)):
+            split(stage).write.mode("overwrite").parquet(
+                os.path.join(output_dir, kind, f"batch_id={batch_id}")
+            )
+    finally:
+        stage.unpersist()
 
 
 def extraction_stream(
@@ -41,27 +56,10 @@ def extraction_stream(
         .parquet(input_dir)
     )
 
-    words_dir = os.path.join(output_dir, "words")
-    extracted_dir = os.path.join(output_dir, "extracted")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        stage = extract_stage(batch_df).cache()
-        try:
-            (
-                words_from_stage(stage)
-                .write.mode("append")
-                .parquet(words_dir)
-            )
-            (
-                extracted_from_stage(stage)
-                .write.mode("append")
-                .parquet(extracted_dir)
-            )
-        finally:
-            stage.unpersist()
-
     return (
-        stream.writeStream.foreachBatch(sink)
+        stream.writeStream.foreachBatch(
+            functools.partial(write_micro_batch, output_dir=output_dir)
+        )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -18,6 +18,25 @@ from fusus_spark.functions.text import norm_ws
 from fusus_spark.schema import DOCUMENTS_SCHEMA
 
 
+def _deduped_docs(
+    spark: SparkSession, input_dir: str, watermark: str, max_files_per_trigger: int
+):
+    """(url, warc_ts, content_hash) of documents landing in ``input_dir``,
+    the first arrival per hash within the watermark. The hash is the
+    SAME md5-of-normalized-text (functions.text.norm_ws) as the batch
+    exact dedup: stream and batch must never disagree on what a
+    duplicate is."""
+    stream = (
+        spark.readStream.schema(DOCUMENTS_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+    )
+    hashed = stream.select("url", "warc_ts", F.md5(norm_ws("text")).alias("content_hash"))
+    return hashed.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
+        ["content_hash"]
+    )
+
+
 def dedup_stream(
     spark: SparkSession,
     input_dir: str,
@@ -36,19 +55,7 @@ def dedup_stream(
     surviving count; only which twin survives differs. Results in an
     in-memory sink (append mode).
     """
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    hashed = stream.select(
-        "url",
-        "warc_ts",
-        F.md5(norm_ws("text")).alias("content_hash"),
-    )
-    deduped = hashed.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        ["content_hash"]
-    )
+    deduped = _deduped_docs(spark, input_dir, watermark, max_files_per_trigger)
     return (
         deduped.writeStream.outputMode("append")
         .format("memory")
@@ -160,21 +167,7 @@ def dedup_stream_vs_store(
     store here: the only stateful operator is the watermark dedup.
     Emits (url, warc_ts, content_hash, is_seen) to an in-memory sink.
     """
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    # the SAME normalizer as batch (functions.text.norm_ws): stream and
-    # batch must never disagree on what a duplicate is
-    hashed = stream.select(
-        "url",
-        "warc_ts",
-        F.md5(norm_ws("text")).alias("content_hash"),
-    )
-    deduped = hashed.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        ["content_hash"]
-    )
+    deduped = _deduped_docs(spark, input_dir, watermark, max_files_per_trigger)
     seen = (
         spark.read.parquet(store_path)
         .select("content_hash")

@@ -186,8 +186,8 @@ def test_load_done_reads_only_committed_buckets(spark, bucketed_input, reference
     # a done row of an older 5-bucket run: read while the ledger names it,
     # retired by the next 4-bucket run
     shutil.copytree(os.path.join(words, "bucket=1"), os.path.join(words, f"bucket={N_BUCKETS}"))
-    Ledger(ledger_path).mark_done(N_BUCKETS, **{
-        k: v for k, v in Ledger(ledger_path).get(1).items()
+    Ledger(ledger_path).mark_done(f"bucket={N_BUCKETS}", **{
+        k: v for k, v in Ledger(ledger_path).get("bucket=1").items()
         if k not in ("partition_id", "status", "attempt")
     })
     assert loaded()[0] == {1, N_BUCKETS}
@@ -221,8 +221,8 @@ def test_flat_layout_ledger_is_redone_into_the_kind_layout(spark, tmp_path):
     )
     for bucket, suffix in ((0, "+emit=words"), (1, "")):
         Ledger(led).mark_done(
-            bucket, rows_in=6, rows_out=6, bytes_in=1, bytes_out=1,
-            input_snapshot_id=input_lineage(inp, bucket) + suffix, wall_ms=0,
+            f"bucket={bucket}", rows_in=6, rows_out=6, bytes_in=1, bytes_out=1,
+            input_snapshot_id=input_lineage(inp, f"bucket={bucket}") + suffix, wall_ms=0,
         )
 
     summary = run_extraction_job(spark, inp, out, led, 2)
@@ -285,75 +285,200 @@ def test_lineage_invalidation(spark, bucketed_input, tmp_path):
     run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
     ledger = Ledger(ledger_path)
     # the stored key is the input lineage; the emit set is the row's outputs
-    lineage0 = input_lineage(bucketed_input, 0)
-    assert ledger.is_done(0, lineage0, ("words",))
-    assert not ledger.is_done(0, lineage0, ("words", "jsonld"))
+    lineage0 = input_lineage(bucketed_input, "bucket=0")
+    assert ledger.is_done("bucket=0", lineage0, ("words",))
+    assert not ledger.is_done("bucket=0", lineage0, ("words", "jsonld"))
     # If the input bucket changes, the bucket is no longer considered done.
-    assert not ledger.is_done(0, "different-lineage")
+    assert not ledger.is_done("bucket=0", "different-lineage")
     # Corrupt ledger file -> treated as not-done (safe redo, not crash).
     with open(os.path.join(ledger_path, "bucket=1.json"), "w") as f:
         f.write("{broken json")
-    assert not ledger.is_done(1, input_lineage(bucketed_input, 1))
+    assert not ledger.is_done("bucket=1", input_lineage(bucketed_input, "bucket=1"))
 
 
-def test_by_date_grid_resume_and_reprocess(spark, tmp_path):
-    """Crawl-date layout: (date, bucket) restart units, per-date
-    reprocessing, and output identical to the undated run."""
-    from fusus_spark.sources.ledger import (
-        list_crawl_dates,
-        run_extraction_job_by_date,
-    )
-
-    rows = [
+def _fixture_rows(day: str | None = None) -> list[tuple]:
+    """The fixture documents as DOCUMENTS_SCHEMA rows, optionally only
+    those crawled on UTC ``day``."""
+    return [
         (d["url"], d["warc_ts"], d["html"], d["text"], d["lang"])
         for d in fixture_documents()
+        if day is None or str(d["warc_ts"])[:10] == day
     ]
-    docs = spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
+
+
+def _buckets_read(df) -> set[str]:
+    """The partition ids a load_done frame read."""
+    cols = ["crawl_date", "bucket"] if "crawl_date" in df.columns else ["bucket"]
+    return {
+        "/".join(f"{c}={r[c]}" for c in cols)
+        for r in df.select(*cols).distinct().collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def dated_input(spark, tmp_path_factory):
+    """The fixture documents in the crawl_date=D/bucket=k layout."""
+    path = str(tmp_path_factory.mktemp("dated") / "input")
+    docs = spark.createDataFrame(_fixture_rows(), schema=DOCUMENTS_SCHEMA)
+    write_bucketed_input(docs, path, N_BUCKETS, date_col="warc_ts")
+    return path
+
+
+def test_by_date_grid_resume_and_reprocess(spark, reference, tmp_path):
+    """Crawl-date layout through the one job: (date, bucket) restart
+    units, per-date reprocessing, and one load_done call whose output
+    equals the undated run."""
+    from fusus_spark.sources.ledger import list_crawl_dates
+
+    docs = spark.createDataFrame(_fixture_rows(), schema=DOCUMENTS_SCHEMA)
     inp = str(tmp_path / "dated_input")
     write_bucketed_input(docs, inp, N_BUCKETS, date_col="warc_ts")
     assert list_crawl_dates(inp) == ["2026-01-01", "2026-01-02"]
 
     out = str(tmp_path / "dated_out")
     led = str(tmp_path / "dated_ledger")
-    s1 = run_extraction_job_by_date(spark, inp, out, led, N_BUCKETS)
-    assert s1["_total"]["processed"] == 2 * N_BUCKETS
-    assert s1["_total"]["skipped"] == 0
+    s1 = run_extraction_job(spark, inp, out, led, N_BUCKETS)
+    assert s1["processed"] == 2 * N_BUCKETS
+    assert s1["skipped"] == 0
 
     # resume: everything skips, on both date grids
-    s2 = run_extraction_job_by_date(spark, inp, out, led, N_BUCKETS)
-    assert s2["_total"]["processed"] == 0
-    assert s2["_total"]["skipped"] == 2 * N_BUCKETS
+    s2 = run_extraction_job(spark, inp, out, led, N_BUCKETS)
+    assert s2["processed"] == 0
+    assert s2["skipped"] == 2 * N_BUCKETS
 
-    # the dated output equals the undated single-table run byte-for-byte
-    flat_inp = str(tmp_path / "flat_input")
-    flat_out = str(tmp_path / "flat_out")
-    write_bucketed_input(docs, flat_inp, N_BUCKETS)
-    flat_led = str(tmp_path / "flat_led")
-    run_extraction_job(spark, flat_inp, flat_out, flat_led, N_BUCKETS)
-    dated = [
-        load_done(spark, f"{out}/crawl_date={d}", f"{led}/crawl_date={d}", "words")
-        for d in list_crawl_dates(inp)
-    ]
-    assert _corpus_hash(dated[0].unionByName(dated[1])) == _corpus_hash(
-        load_done(spark, flat_out, flat_led, "words")
-    )
+    # the dated output, read in one call, equals the undated run byte-for-byte
+    dated = load_done(spark, out, led, "words")
+    assert {"crawl_date", "bucket"} <= set(dated.columns)
+    assert _corpus_hash(dated.drop("crawl_date")) == _corpus_hash(reference)
 
     # reprocess ONE date: only that date's grid runs
-    s3 = run_extraction_job_by_date(
-        spark, inp, out, led, N_BUCKETS, dates=["2026-01-02"]
-    )
-    assert set(s3) == {"2026-01-02", "_total"}
-    assert s3["_total"]["skipped"] == N_BUCKETS
+    s3 = run_extraction_job(spark, inp, out, led, N_BUCKETS, dates=["2026-01-02"])
+    assert s3["skipped"] == N_BUCKETS and s3["processed"] == 0
 
     # a changed input on one date invalidates only that date's buckets
-    day1 = [r for r in rows if str(r[1])[:10] == "2026-01-01"]
-    spark.createDataFrame(day1, schema=DOCUMENTS_SCHEMA).createOrReplaceTempView("d1")
     write_bucketed_input(
-        spark.table("d1"), inp + "/crawl_date=2026-01-01", N_BUCKETS
+        spark.createDataFrame(_fixture_rows("2026-01-01"), schema=DOCUMENTS_SCHEMA),
+        inp + "/crawl_date=2026-01-01", N_BUCKETS,
     )
-    s4 = run_extraction_job_by_date(spark, inp, out, led, N_BUCKETS)
-    assert s4["2026-01-02"]["skipped"] == N_BUCKETS
-    assert s4["2026-01-01"]["processed"] > 0
+    s4 = run_extraction_job(spark, inp, out, led, N_BUCKETS)
+    assert s4["processed"] == s4["relineaged"] > 0
+    assert s4["processed"] + s4["skipped"] == 2 * N_BUCKETS
+    attempts = {r["partition_id"]: r["attempt"] for r in Ledger(led).rows()}
+    assert all(
+        attempts[f"crawl_date=2026-01-02/bucket={k}"] == 1 for k in range(N_BUCKETS)
+    )
+    redone = {u for u, a in attempts.items() if a == 2}
+    assert len(redone) == s4["processed"]
+    assert all(u.startswith("crawl_date=2026-01-01/") for u in redone)
+    assert _corpus_hash(load_done(spark, out, led, "words")) == _corpus_hash(reference)
+
+
+def test_new_crawl_date_is_extracted(spark, reference, tmp_path):
+    """A crawl date that lands in the table after a run is extracted by
+    the next run (its units are new, not skipped as done), and one
+    load_done call then sees every url of both dates."""
+    inp = str(tmp_path / "input")
+    write_bucketed_input(
+        spark.createDataFrame(_fixture_rows("2026-01-01"), schema=DOCUMENTS_SCHEMA),
+        inp, N_BUCKETS, date_col="warc_ts",
+    )
+    out = str(tmp_path / "out")
+    led = str(tmp_path / "ledger")
+    s1 = run_extraction_job(spark, inp, out, led, N_BUCKETS)
+    assert s1["processed"] == N_BUCKETS
+
+    write_bucketed_input(
+        spark.createDataFrame(_fixture_rows("2026-01-02"), schema=DOCUMENTS_SCHEMA),
+        inp + "/crawl_date=2026-01-02", N_BUCKETS,
+    )
+    s2 = run_extraction_job(spark, inp, out, led, N_BUCKETS)
+    assert s2["processed"] == N_BUCKETS and s2["skipped"] == N_BUCKETS
+
+    got = load_done(spark, out, led, "words")
+    urls = {r["url"] for r in got.select("url").distinct().collect()}
+    assert urls == {r["url"] for r in reference.select("url").distinct().collect()}
+    assert _corpus_hash(got) == _corpus_hash(reference)
+
+
+def test_per_date_ledger_is_redone_into_the_unit_layout(spark, dated_input, reference, tmp_path):
+    """Output of the older per-date runs: one flat job per date, with
+    ledger rows ``crawl_date=D/bucket=k.json`` naming only ``bucket=k``
+    and output under ``out/crawl_date=D/words``. load_done reads none
+    of it; the next run redoes every unit (counted relineaged) into
+    ``out/words/crawl_date=D/bucket=k``, which load_done then reads."""
+    from fusus_spark.sources.ledger import list_crawl_dates
+
+    out = str(tmp_path / "out")
+    led = str(tmp_path / "ledger")
+    dates = list_crawl_dates(dated_input)
+    for d in dates:
+        run_extraction_job(
+            spark, f"{dated_input}/crawl_date={d}", f"{out}/crawl_date={d}",
+            f"{led}/crawl_date={d}", N_BUCKETS,
+        )
+        assert Ledger(f"{led}/crawl_date={d}").get("bucket=0")["partition_id"] == "bucket=0"
+    with pytest.raises(ValueError, match="'words'"):
+        load_done(spark, out, led, "words")
+
+    summary = run_extraction_job(spark, dated_input, out, led, N_BUCKETS)
+    n_units = len(dates) * N_BUCKETS
+    assert summary["processed"] == summary["relineaged"] == n_units
+    assert summary["skipped"] == 0
+    got = load_done(spark, out, led, "words")
+    assert _buckets_read(got) == {
+        f"crawl_date={d}/bucket={k}" for d in dates for k in range(N_BUCKETS)
+    }
+    assert os.path.isdir(os.path.join(out, "words", f"crawl_date={dates[0]}", "bucket=0"))
+    assert _corpus_hash(got) == _corpus_hash(reference)
+
+
+def test_dates_must_match_the_input_layout(spark, bucketed_input, dated_input, tmp_path):
+    """``dates`` on an undated table, or naming a date the table lacks,
+    raises before any unit runs; a flat run retires the rows of a
+    crawl-date run in the same ledger, so one ledger holds one depth."""
+    out = str(tmp_path / "out")
+    led = str(tmp_path / "ledger")
+    with pytest.raises(ValueError, match="no crawl_date"):
+        run_extraction_job(spark, bucketed_input, out, led, N_BUCKETS, dates=["2026-01-01"])
+    with pytest.raises(ValueError, match="crawl_date=2026-01-09"):
+        run_extraction_job(
+            spark, dated_input, out, led, N_BUCKETS, dates=["2026-01-01", "2026-01-09"]
+        )
+    assert Ledger(led).rows() == [] and not os.path.exists(out)
+
+    s = run_extraction_job(spark, dated_input, out, led, 1, dates=["2026-01-02"])
+    assert s["buckets"] == 1 and s["processed"] == 1
+    assert Ledger(led).units() == ["crawl_date=2026-01-02/bucket=0"]
+    run_extraction_job(spark, bucketed_input, out, led, 1)
+    assert Ledger(led).units() == ["bucket=0"]
+
+
+def test_by_date_flag_is_warc_ingest_only():
+    """--by-date chooses the layout WARC ingest writes: without
+    --input-format warc it is rejected before any session starts."""
+    from fusus_spark.jobs.extract_job import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", "in", "--output", "out", "--ledger", "led",
+              "--buckets", "2", "--by-date"])
+    assert exc.value.code == 2
+
+
+def test_torn_ledger_row_is_redone(spark, bucketed_input, reference, tmp_path):
+    """A torn row file is not-done for every reader: load_done skips its
+    bucket instead of failing, and the next run redoes exactly that
+    bucket, converging to the uninterrupted output."""
+    out = str(tmp_path / "out")
+    led = str(tmp_path / "ledger")
+    run_extraction_job(spark, bucketed_input, out, led, N_BUCKETS)
+    with open(os.path.join(led, "bucket=1.json"), "w") as f:
+        f.write("{broken")
+    assert _buckets_read(load_done(spark, out, led, "words")) == {
+        f"bucket={k}" for k in range(N_BUCKETS) if k != 1
+    }
+    s = run_extraction_job(spark, bucketed_input, out, led, N_BUCKETS)
+    assert s["processed"] == 1 and s["skipped"] == N_BUCKETS - 1
+    assert _corpus_hash(load_done(spark, out, led, "words")) == _corpus_hash(reference)
 
 
 def test_crawl_date_is_session_timezone_independent(spark, tmp_path):
@@ -438,9 +563,9 @@ def test_bucket_lock_exception_release_and_reentrancy(spark, bucketed_input, tmp
     lk = BucketLock(ledger_path, stale_after_s=3600.0)
     # reentrancy: our own live leftover (the process-crash simulation a
     # finally cannot cover) does not block re-acquisition
-    assert lk.acquire(0) is True
-    assert lk.acquire(0) is True
-    lk.release(0)
+    assert lk.acquire("bucket=0") is True
+    assert lk.acquire("bucket=0") is True
+    lk.release("bucket=0")
 
     # age-based staleness: a foreign LIVE pid but ancient timestamp
     import json
@@ -449,14 +574,14 @@ def test_bucket_lock_exception_release_and_reentrancy(spark, bucketed_input, tmp
     lk0 = BucketLock(ledger_path, stale_after_s=0.0)
     with open(os.path.join(locks, "bucket=0.lock"), "w") as f:
         json.dump({"pid": 1, "host": socket.gethostname(), "ts": 0}, f)
-    assert lk0.acquire(0) is True
-    lk0.release(0)
+    assert lk0.acquire("bucket=0") is True
+    lk0.release("bucket=0")
 
     # a live foreign lock with an UNREADABLE payload younger than the
     # write-grace window is treated as held (mid-creation race), not junk
     with open(os.path.join(locks, "bucket=1.lock"), "w") as f:
         f.write("")  # empty: exactly what a mid-write lock looks like
-    assert BucketLock(ledger_path).acquire(1) is False
+    assert BucketLock(ledger_path).acquire("bucket=1") is False
     os.unlink(os.path.join(locks, "bucket=1.lock"))
 
 

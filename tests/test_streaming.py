@@ -40,6 +40,30 @@ def test_streaming_matches_batch(spark, tmp_path):
     assert words.where(F.col("word").isNull()).count() == 0
 
 
+def test_micro_batch_rerun_replaces_its_output(spark, tmp_path):
+    """foreachBatch is at-least-once: a micro-batch re-run after a crash
+    calls the sink again with the same batch id, and its output must be
+    replaced, not appended a second time."""
+    from fusus_spark.extraction.pipeline import extract_stage, words_from_stage
+    from fusus_spark.streaming.ingest import write_micro_batch
+
+    rows = [
+        (d["url"], d["warc_ts"], d["html"], d["text"], d["lang"])
+        for d in fixture_documents()
+        if len(d["html"] or b"") < 64 * 1024
+    ][:8]
+    docs = spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
+    out_dir = str(tmp_path / "out")
+    write_micro_batch(docs, 3, out_dir)
+    write_micro_batch(docs, 3, out_dir)
+
+    got = spark.read.parquet(out_dir + "/extracted")
+    assert got.count() == got.select("url").distinct().count() == len(rows)
+    assert {r["batch_id"] for r in got.select("batch_id").distinct().collect()} == {3}
+    words = spark.read.parquet(out_dir + "/words")
+    assert words.count() == words_from_stage(extract_stage(docs)).count() > 0
+
+
 def test_dedup_stream_keeps_one_per_hash(spark, tmp_path):
     """In-stream exact dedup (dropDuplicatesWithinWatermark) keeps
     exactly one survivor per content hash, agreeing with the batch

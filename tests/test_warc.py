@@ -176,6 +176,27 @@ def test_extract_job_warc_input(spark, tmp_path):
     assert load_done(spark, out, str(tmp_path / "ledger"), "words").count() == 10  # 5 words x 2 files
 
 
+def test_extract_job_warc_by_date(spark, tmp_path):
+    """--by-date makes WARC ingest write the crawl_date=D/bucket=k table;
+    the same job then restarts per (date, bucket), and one load_done
+    call reads every date."""
+    from fusus_spark.jobs.extract_job import run_job
+
+    (tmp_path / "segs").mkdir()
+    (tmp_path / "segs" / "seg-0.warc").write_bytes(_segment())
+    out, led = str(tmp_path / "words"), str(tmp_path / "ledger")
+    job = dict(input_path=str(tmp_path / "segs"), output_path=out, ledger_path=led,
+               n_buckets=2, input_format="warc", by_date=True)
+    summary = run_job(spark, **job)
+    assert summary["buckets"] == summary["processed"] == 4  # 2 dates x 2 buckets
+    assert run_job(spark, **job, dates=["2026-02-03"])["skipped"] == 2
+    words = load_done(spark, out, led, "words")
+    got = {(str(r["crawl_date"]), r["url"], r["word"]) for r in words.collect()}
+    assert len(got) == 5
+    assert ("2026-01-01", "http://ex.com/a", "alpha") in got
+    assert ("2026-02-03", "http://ex.com/b", "epsilon") in got
+
+
 def test_read_warc_to_extraction(spark, tmp_path):
     """End-to-end: segment files (.warc + .warc.gz) -> documents rows ->
     the fused extraction stage, boilerplate stripped."""
