@@ -1,9 +1,10 @@
-"""Fast regex-driven HTML -> Node tree (drop-in for domparse.parse_html).
+"""Fast regex-driven HTML -> Node tree: the engine's HTML parser.
 
 The stdlib ``html.parser`` costs ~60% of extraction CPU (its
 char-by-char ``goahead`` loop + per-tag regexes). This tokenizer walks
 the document with ``str.find``/one compiled tag regex instead, while
-producing the IDENTICAL tree semantics as domparse._TreeBuilder:
+producing the IDENTICAL tree semantics as a stdlib ``html.parser``
+builder (the test oracle, tests/stdlib_parser.py):
 
 * same Node type, same auto-close table, same void-element handling,
 * stray end tags ignored, unclosed elements closed at EOF,
@@ -128,7 +129,7 @@ def _parse_attrs(s: str) -> dict[str, str]:
 
 
 def parse_html_fast(payload: bytes | str, charset_hint: str | None = None) -> Node:
-    """Tokenize HTML into the same Node tree as domparse.parse_html."""
+    """Tokenize HTML bytes/str into a Node tree rooted at ``#root``."""
     text = (decode_html(payload, charset_hint)
             if isinstance(payload, (bytes, bytearray)) else payload)
     root = Node("#root")

@@ -9,9 +9,12 @@ def write_tier(df: DataFrame, path: str, **aggs: Column) -> tuple[DataFrame, dic
     """Overwrite ``path`` with ``df`` as parquet; return the table read back
     and the ``aggs`` observed on the exact frame written (no Spark action of
     their own; taken in the write's final stage, so a stage retry cannot
-    double count). A zero-row write observes counts as 0, sums as null."""
+    double count). A zero-row write observes counts as 0, sums as null.
+
+    The read-back is given ``df``'s schema, so it starts no schema-inference
+    job; Spark reads it back all-nullable, as inference would."""
     stats = Observation()
     if aggs:
         df = df.observe(stats, *(agg.alias(name) for name, agg in aggs.items()))
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path), (stats.get if aggs else {})
+    return df.sparkSession.read.schema(df.schema).parquet(path), (stats.get if aggs else {})

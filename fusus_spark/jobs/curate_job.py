@@ -47,7 +47,16 @@ Every tier writes an AUDIT table under ``<output>/audit/`` and its
 summary counts are observed on that write (``jobs.write_tier``), so no
 statistic costs a Spark action. Two driver actions remain: the
 ``n_input`` parquet count (no tier writes the input) and the
-``n_canonical_groups`` distinct count (no observation can express one).
+``n_canonical_groups`` distinct count (no observation can express one);
+a default run spends only the first. A tier's table is read back with
+the schema it was written with, so no read-back starts a
+schema-inference job; only the input, eval and option tables are read
+with inference. A default run with eval and report thus starts ~35
+one-task Spark jobs. A run generates ~136 classes; in a session built
+by ``session.get_spark`` (whose codegen cache holds them all) a
+repeated run compiles none of them again. ``main()`` runs one job per
+session, which compiles about 136 with or without that cache: the
+cache pays only where jobs repeat in one session.
 Text rewritten by line dedup is materialized to ``<output>/stage/``
 and read back, truncating lineage so the gate/decontam/PII tiers
 re-plan from columnar parquet instead of re-executing three shuffles

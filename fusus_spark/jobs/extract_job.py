@@ -7,8 +7,7 @@ North-rule launch shape:
         fusus_spark/jobs/extract_job.py \\
         --input  <bucketed documents table dir> \\
         --output <output root: one <kind> table per --emit kind> \\
-        --ledger <progress ledger dir> \\
-        --buckets 256
+        --ledger <progress ledger dir>
 
 The job is resumable: units already marked done in the ledger (with
 matching input lineage) are skipped; kill it at any point and re-submit
@@ -18,8 +17,9 @@ Read the output back with ``sources.ledger.load_done``.
 ``--input-format warc`` accepts raw crawl segment files instead: the
 segments are ingested (fusus_spark.sources.warc — one task per file,
 the Common-Crawl layout, nested segment dirs included) and laid out as
-the bucketed table first, then the same resumable per-bucket extraction
-runs. The ingest is gated on a fingerprint of the segment listing
+the bucketed table first (``--buckets`` sets its bucket count; a
+bucketed input brings its own), then the same resumable per-bucket
+extraction runs. The ingest is gated on a fingerprint of the segment listing
 (names + sizes + bucket count): an unchanged re-submit skips it so the
 table stays byte-identical and every bucket resumes; a changed listing
 re-ingests, and the lineage flip invalidates the affected buckets.
@@ -29,8 +29,8 @@ On a real cluster the input is an Iceberg table partitioned by
 parquet — ``bucket=k/`` directories, or the full
 ``crawl_date=D/bucket=k/`` grid (fusus_spark.sources.ledger.
 write_bucketed_input with date_col; ``--by-date`` makes WARC ingest
-write it). The job reads which layout it has from the table: each
-partition dir is one restart unit, and on a crawl-date table
+write it). The job reads its layout and bucket count from the table:
+each partition dir is one restart unit, and on a crawl-date table
 ``--dates`` limits a run to chosen crawl drops.
 """
 
@@ -49,7 +49,7 @@ def run_job(
     input_path: str,
     output_path: str,
     ledger_path: str,
-    n_buckets: int,
+    n_buckets: int | None = None,
     input_format: str = "bucketed-parquet",
     table_dir: str | None = None,
     emit: tuple[str, ...] = ("words",),
@@ -61,8 +61,11 @@ def run_job(
 ) -> dict:
     """The job body, session-agnostic (tests drive it directly).
 
-    ``by_date=True`` makes WARC ingest write the ``crawl_date=D/bucket=K``
-    layout; the extraction reads the layout from the table either way.
+    ``n_buckets`` is the bucket count WARC ingest writes the table with;
+    a bucketed-parquet input has its own (its ``bucket=k`` dirs), so
+    there it is not read. ``by_date=True`` makes WARC ingest write the
+    ``crawl_date=D/bucket=K`` layout; the extraction reads the layout
+    from the table either way.
     ``dates`` limits a crawl-date table's run to specific crawl dates
     (e.g. reprocessing one crawl drop).
     """
@@ -73,6 +76,9 @@ def run_job(
         import os
 
         from fusus_spark.sources.warc import read_warc
+
+        if n_buckets is None:
+            raise ValueError("warc ingest needs n_buckets")
 
         table_dir = table_dir or output_path.rstrip("/") + ".table"
         # idempotent ingest: re-writing the table would rename its
@@ -168,7 +174,6 @@ def run_job(
         input_path,
         output_path,
         ledger_path,
-        n_buckets,
         dates=dates,
         emit=emit,
         max_html_bytes=max_html_bytes,
@@ -182,7 +187,9 @@ def main(argv: list[str] | None = None) -> None:
                    help="bucketed documents dir, or a crawl segment dir with --input-format warc")
     p.add_argument("--output", required=True, help="root of the <output>/<kind> tables")
     p.add_argument("--ledger", required=True, help="progress ledger dir")
-    p.add_argument("--buckets", type=int, required=True)
+    p.add_argument("--buckets", type=int,
+                   help="bucket count of the table warc ingest writes (required "
+                        "with --input-format warc; a bucketed input has its own)")
     p.add_argument("--input-format", choices=("bucketed-parquet", "warc"),
                    default="bucketed-parquet")
     p.add_argument("--table-dir",
@@ -209,6 +216,8 @@ def main(argv: list[str] | None = None) -> None:
 
     if args.by_date and args.input_format != "warc":
         p.error("--by-date requires --input-format warc")
+    if args.buckets is None and args.input_format == "warc":
+        p.error("--input-format warc requires --buckets")
 
     # Under spark-submit, the session already exists; standalone, build one.
     spark = SparkSession.builder.appName("fusus-extract").getOrCreate()

@@ -306,6 +306,16 @@ def _normalize_edges(edges: DataFrame) -> DataFrame:
     )
 
 
+def _snapshot(df: DataFrame, checkpoint_dir: str | None, name: str) -> DataFrame:
+    """Cut ``df``'s lineage: a local checkpoint, or a parquet round-trip
+    through ``<checkpoint_dir>/<name>`` read back with the written schema."""
+    if checkpoint_dir is None:
+        return df.localCheckpoint()
+    path = f"{checkpoint_dir}/{name}"
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 def host_link_stats(
     docs: DataFrame,
     url_col: str = "url",
@@ -420,19 +430,13 @@ def host_pagerank(
             )
         edges = _normalize_edges(edges)
 
-    def _snapshot(df: DataFrame, name: str) -> DataFrame:
-        if checkpoint_dir is None:
-            return df.localCheckpoint()
-        path = f"{checkpoint_dir}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-
     outd = edges.groupBy("src_host").agg(F.count("*").alias("out_degree"))
-    edges = _snapshot(edges.join(outd, "src_host"), "edges")
+    edges = _snapshot(edges.join(outd, "src_host"), checkpoint_dir, "edges")
     nodes = _snapshot(
         edges.select(F.col("src_host").alias("host"))
         .unionByName(edges.select(F.col("dst_host").alias("host")))
         .distinct(),
+        checkpoint_dir,
         "nodes",
     )
     base = 10**9
@@ -474,7 +478,7 @@ def host_pagerank(
         elif it % checkpoint_every == 0 or it == iters:
             # alternate two snapshot slots: parquet overwrite of the
             # directory being read would race its own scan
-            ranks = _snapshot(ranks, f"ranks_{it % (2 * checkpoint_every)}")
+            ranks = _snapshot(ranks, checkpoint_dir, f"ranks_{it % (2 * checkpoint_every)}")
     return ranks
 
 
@@ -526,13 +530,6 @@ def resolve_redirects(
     """
     import math
 
-    def _snapshot(df: DataFrame, name: str) -> DataFrame:
-        if checkpoint_dir is None:
-            return df.localCheckpoint()
-        path = f"{checkpoint_dir}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-
     hops_cap = max(1, int(max_hops))
     rounds = max(1, math.ceil(math.log2(hops_cap)))
     redirects = records.where(
@@ -548,6 +545,7 @@ def resolve_redirects(
         .where(F.col("resolved").isNotNull())
         .groupBy(F.col("src_url").alias("src"))
         .agg(F.min("resolved").alias("dst")),
+        checkpoint_dir,
         "edges",
     )
     m = edges.select("src", "dst", F.lit(1).cast("bigint").alias("hops"))
@@ -563,6 +561,7 @@ def resolve_redirects(
                 F.coalesce("n_dst", "dst").alias("dst"),
                 (F.col("hops") + F.coalesce("n_hops", F.lit(0))).alias("hops"),
             ),
+            checkpoint_dir,
             f"m_{r % 2}",
         )
     srcs = edges.select(F.col("src").alias("dst"), F.lit(True).alias("__is_src__"))

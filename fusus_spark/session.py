@@ -60,6 +60,12 @@ def get_spark(
         # Deterministic session timezone for timestamp round-trips.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("FUSUS_DRIVER_MEM", _default_mem()))
+        # A curate job generates ~136 classes, more than the default
+        # cache of 100 holds, so each later job in the session would
+        # recompile most of them; at 1000 a repeated job compiles none.
+        # (A single job compiles about 136 either way.) A static conf:
+        # only the builder can set it.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

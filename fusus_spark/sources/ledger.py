@@ -375,23 +375,38 @@ def _content_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-def _units(
-    input_path: str, n_buckets: int, dates: list[str] | None
-) -> list[tuple[str, str, int]]:
-    """(partition id, dir to read, bucket) of every restart unit the
-    input layout names: ``bucket=k`` for a flat table, else
-    ``crawl_date=D/bucket=k`` for ``dates`` (default: every date)."""
+def _units(input_path: str, dates: list[str] | None) -> list[tuple[str, str, int]]:
+    """(partition id, dir to read, bucket) of every restart unit of the
+    input table: ``bucket=k`` for a flat table, else
+    ``crawl_date=D/bucket=k`` for ``dates`` (default: every date), for
+    each k below the table's bucket count: one past the largest
+    ``bucket=k`` dir it holds on any date. A bucket with no rows has
+    no dir and is an empty unit. Raises ``ValueError`` when the table
+    holds no bucket dir."""
     present = list_crawl_dates(input_path)
+    tables = {f"crawl_date={d}/": os.path.join(input_path, f"crawl_date={d}") for d in present}
     if not present:
         if dates is not None:
             raise ValueError(f"dates given, but {input_path} has no crawl_date=* partitions")
-        return [(f"bucket={k}", input_path, k) for k in range(n_buckets)]
+        tables = {"": input_path}
     for d in dates or ():
         if d not in present:
             raise ValueError(f"crawl_date={d} is not under {input_path}")
+    n_buckets = 1 + max(
+        (
+            int(name[len("bucket="):])
+            for table in tables.values()
+            for name in (os.listdir(table) if os.path.isdir(table) else ())
+            if re.fullmatch(r"bucket=\d+", name)
+        ),
+        default=-1,
+    )
+    if not n_buckets:
+        raise ValueError(f"no bucket=k dirs under {input_path} (see write_bucketed_input)")
     return [
-        (f"crawl_date={d}/bucket={k}", os.path.join(input_path, f"crawl_date={d}"), k)
-        for d in (present if dates is None else dates)
+        (f"{prefix}bucket={k}", table, k)
+        for prefix, table in tables.items()
+        if dates is None or prefix[len("crawl_date="):-1] in dates
         for k in range(n_buckets)
     ]
 
@@ -401,7 +416,6 @@ def run_extraction_job(
     input_path: str,
     output_path: str,
     ledger_path: str,
-    n_buckets: int,
     *,
     dates: list[str] | None = None,
     emit: tuple[str, ...] = ("words",),
@@ -412,8 +426,9 @@ def run_extraction_job(
 ) -> dict:
     """Resumable bucket-at-a-time extraction job.
 
-    The restart units are the input's partition dirs (``_units``); on
-    a crawl-date table ``dates`` limits them to those dates.
+    The restart units are the input's partition dirs (``_units``), for
+    the bucket count read from the table; on a crawl-date table
+    ``dates`` limits them to those dates.
 
     ``emit`` selects the output tables: the parse-derived kinds come
     from ONE fused parse per bucket (the stage is persisted across
@@ -451,16 +466,15 @@ def run_extraction_job(
     doc_splitters = _doc_splitters()
     stage_kinds = [k for k in emit if k in splitters]
 
-    units = _units(input_path, n_buckets, dates)
+    units = _units(input_path, dates)
     ledger = Ledger(ledger_path)
     lock = BucketLock(ledger_path)
-    # one ledger at one depth: retire rows of the other layout's shape
-    # and of an older, larger bucket count (other dates' rows stay)
-    dated = bool(list_crawl_dates(input_path))
-    shape = re.compile(r"crawl_date=[^/]+/bucket=(\d+)" if dated else r"bucket=(\d+)")
+    # one ledger row per unit of the table: retire the rest (rows of
+    # the other layout's shape, of buckets past its count, of dates it
+    # no longer holds); rows of dates left out of ``dates`` stay
+    held = {unit for unit, _, _ in _units(input_path, None)}
     for old in ledger.units():
-        m = shape.fullmatch(old)
-        if m is None or int(m.group(1)) >= n_buckets:
+        if old not in held:
             os.unlink(ledger._file(old))
     done_now = 0
     skipped = 0

@@ -30,6 +30,27 @@ def driver_actions(monkeypatch):
 
 
 @pytest.fixture
+def spark_jobs(spark):
+    """``count(run)``: the Spark jobs ``run()`` starts, counted through
+    the status tracker under a job group of their own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(run) -> int:
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture
 def registry_parity(spark, tmp_path):
     """``check(name, rows, schema)``: write ``rows`` as
     ``tmp_path/documents.parquet``, run registry query ``name`` on it in

@@ -79,12 +79,9 @@ def test_curate_job_end_to_end(spark, tmp_path):
     assert [r["doc_id"] for r in contam] == [7]
 
 
-def test_curate_job_action_budget(spark, tmp_path, driver_actions):
-    """The summary rides the tier writes: a default run with eval and
-    report spends one driver action (the n_input count), and a run with
-    every optional tier on adds only the canonical distinct count."""
-    import json
-
+def _html_inputs(spark, tmp_path) -> tuple[str, str]:
+    """ROWS with an html column (every optional tier can run), and the
+    eval set: (input path, eval path)."""
     inp = str(tmp_path / "docs_b")
     ev = str(tmp_path / "eval_b")
     spark.createDataFrame(
@@ -93,7 +90,16 @@ def test_curate_job_action_budget(spark, tmp_path, driver_actions):
         "doc_id long, url string, html binary, text string, lang string",
     ).write.parquet(inp)
     spark.createDataFrame(EVAL_ROWS, "eval_id long, text string").write.parquet(ev)
+    return inp, ev
 
+
+def test_curate_job_action_budget(spark, tmp_path, driver_actions):
+    """The summary rides the tier writes: a default run with eval and
+    report spends one driver action (the n_input count), and a run with
+    every optional tier on adds only the canonical distinct count."""
+    import json
+
+    inp, ev = _html_inputs(spark, tmp_path)
     before = len(driver_actions)
     summary = run_job(spark, input_path=inp, output_path=str(tmp_path / "out_b"),
                       eval_path=ev, decontam_n=3, write_report=True)
@@ -487,3 +493,88 @@ def test_curate_job_report_without_lang_and_with_mixture(spark, tmp_path):
     total2, _ = _read_report(spark, f"{out2}/report")
     assert total2["n_docs"] == summary2["n_sampled"]  # the shipped data
     assert total2["n_docs"] < summary2["n_final"]
+
+
+def test_curate_job_spark_job_budget(spark, tmp_path, spark_jobs):
+    """A default run with eval and report starts at most 35 Spark jobs:
+    no tier read-back starts a schema-inference job of its own."""
+    inp, ev = _html_inputs(spark, tmp_path)
+    jobs = spark_jobs(lambda: run_job(
+        spark, input_path=inp, output_path=str(tmp_path / "out_j"),
+        eval_path=ev, decontam_n=3, write_report=True,
+    ))
+    assert jobs <= 35, jobs
+
+
+def test_curate_job_warm_run_compiles_nothing(spark, tmp_path):
+    """The session's codegen cache holds a whole curate job: a second
+    identical run compiles no class."""
+    inp, ev = _html_inputs(spark, tmp_path)
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    counts = []
+    for i in range(2):
+        before = compiled.METRIC_COMPILATION_TIME().getCount()
+        run_job(spark, input_path=inp, output_path=str(tmp_path / f"out_w{i}"),
+                eval_path=ev, decontam_n=3, write_report=True)
+        counts.append(compiled.METRIC_COMPILATION_TIME().getCount() - before)
+    assert counts[1] == 0, counts
+
+
+def test_write_tier_read_back_schema(spark, tmp_path, monkeypatch):
+    """Every tier read-back of the curate and frontier jobs, a zero-row
+    one included, carries the schema that inference reads from the
+    written files: same columns, order, types and nullability."""
+    import fusus_spark.jobs
+
+    written = []
+
+    def recording(df, path, **aggs):
+        frame, seen = write_tier(df, path, **aggs)
+        written.append((path, frame))
+        return frame, seen
+
+    write_tier = fusus_spark.jobs.write_tier
+    monkeypatch.setattr(fusus_spark.jobs, "write_tier", recording)
+    inp, ev = _html_inputs(spark, tmp_path)
+    rb = str(tmp_path / "robots_s")
+    spark.createDataFrame(
+        [("ex.com", "User-agent: *\nDisallow: /g\n")], "host string, robots_txt string"
+    ).write.parquet(rb)
+    run_job(
+        spark, input_path=inp, output_path=str(tmp_path / "out_s"), eval_path=ev,
+        respect_robots=True, canonical_scope="domain", robots_txt_path=rb,
+        cap_per_host=100, host_prior_min_rank_e9=0, passage_n=4, decontam_n=3,
+        pack_target=25, mixture_budget=4, write_report=True,
+    )
+    # the frontier job's four tiers: fold-back delta, failure and feed
+    # audits, schedule
+    from fusus_spark.jobs import frontier_job
+
+    fr = str(tmp_path / "frontier")
+    spark.createDataFrame(
+        [("http://a.com/x", "h0", "2026-01-01"), ("http://a.com/x", "h1", "2026-01-08")],
+        "url string, content_hash string, crawl_date string",
+    ).write.parquet(f"{fr}/store")
+    spark.createDataFrame(
+        [("http://a.com/x", 200, "h2")], "url string, http_status int, content_hash string"
+    ).write.parquet(f"{fr}/fetches")
+    spark.createDataFrame(
+        [("http://a.com/x", "2026-01-09", 503)], "url string, crawl_date string, http_status int"
+    ).write.parquet(f"{fr}/log")
+    spark.createDataFrame(
+        [("http://a.com/feed", "<rss><channel><item><link>http://a.com/y</link></item>"
+          "</channel></rss>")], "feed_url string, xml string",
+    ).write.parquet(f"{fr}/feeds")
+    before = len(written)
+    frontier_job.run_job(
+        spark, snapshots_path=f"{fr}/store", output_path=f"{fr}/out",
+        as_of_date="2026-01-20", fetch_results_path=f"{fr}/fetches",
+        fetch_log_path=f"{fr}/log", feeds_path=f"{fr}/feeds",
+    )
+    assert len(written) - before == 4
+    # zero rows, and columns that are not nullable before the write
+    empty = spark.range(0).selectExpr("id AS doc_id", "array(id) AS ids")
+    assert recording(empty, str(tmp_path / "empty"))[0].count() == 0
+    assert len(written) >= 19
+    for path, frame in written:
+        assert frame.schema == spark.read.parquet(path).schema, path

@@ -7,9 +7,55 @@ from __future__ import annotations
 import duckdb
 from pyspark.sql import functions as F
 
-from fusus_spark.functions.mime import sniff_mime, sniff_mime_sql
+from fusus_spark.functions.mime import (
+    _BMP_HEX,
+    _HTML_HEX,
+    _SVG_HEX,
+    _XML_HEX,
+    sniff_mime,
+)
 from fusus_spark.operators.multimodal import sniff_media_type
 from tools.parity import value_hash
+
+
+def sniff_mime_sql(hex_expr: str) -> str:
+    """The DuckDB mirror of :func:`sniff_mime` as a SQL CASE over an
+    uppercase-hex prefix expression (e.g. ``substr(hex(payload), 1,
+    80)``) — generated from the SAME pattern constants so the two can
+    never drift. Null blob handling is the caller's (hex(NULL) is
+    NULL, and every branch of this CASE is NULL-safe to that)."""
+    h = hex_expr
+
+    def pre(p: str) -> str:
+        return f"starts_with({h}, '{p}')"
+
+    riff_sub = f"substr({h}, 17, 8)"
+    long_enough = f"length({h}) >= 24"
+    return f"""CASE
+  WHEN {h} IS NULL THEN NULL
+  WHEN {pre('52494646')} AND {long_enough} AND {riff_sub} = '57454250' THEN 'image/webp'
+  WHEN {pre('52494646')} AND {long_enough} AND {riff_sub} = '57415645' THEN 'audio/wav'
+  WHEN {pre('52494646')} AND {long_enough} AND {riff_sub} = '41564920' THEN 'video/avi'
+  WHEN {long_enough} AND substr({h}, 9, 8) = '66747970'
+    THEN CASE WHEN substr({h}, 17, 6) = '4D3441' THEN 'audio/mp4' ELSE 'video/mp4' END
+  WHEN length({h}) >= 52 AND regexp_matches({h}, '{_BMP_HEX}') THEN 'image/bmp'
+  WHEN {pre('89504E47')} THEN 'image/png'
+  WHEN {pre('FFD8FF')} THEN 'image/jpeg'
+  WHEN {pre('47494638')} THEN 'image/gif'
+  WHEN {pre('49492A00')} OR {pre('4D4D002A')} THEN 'image/tiff'
+  WHEN {pre('52494646')} THEN 'audio/wav-or-avi'
+  WHEN {pre('494433')} THEN 'audio/mpeg'
+  WHEN {pre('664C6143')} THEN 'audio/flac'
+  WHEN {pre('4F676753')} THEN 'audio/ogg'
+  WHEN {pre('1A45DFA3')} THEN 'video/webm'
+  WHEN {pre('255044462D')} THEN 'application/pdf'
+  WHEN {pre('1F8B')} THEN 'application/gzip'
+  WHEN {pre('504B0304')} OR {pre('504B0506')} OR {pre('504B0708')} THEN 'application/zip'
+  WHEN regexp_matches({h}, '{_HTML_HEX}') THEN 'text/html'
+  WHEN regexp_matches({h}, '{_XML_HEX}') THEN 'text/xml'
+  WHEN regexp_matches({h}, '{_SVG_HEX}') THEN 'image/svg+xml'
+  ELSE 'application/octet-stream'
+END"""
 
 
 def _media_payloads() -> list[tuple[str, bytes]]:

@@ -32,7 +32,6 @@ from fusus_spark.extraction.boilerplate import (
     _match_rule,
     strip_boilerplate,
 )
-from fusus_spark.extraction.domparse import parse_html
 from fusus_spark.extraction.domparse_fast import (
     _TAGEND_RE,
     _tag_end_resolver,
@@ -40,6 +39,7 @@ from fusus_spark.extraction.domparse_fast import (
 )
 from fusus_spark.extraction.segment import assemble, segment_blocks
 from tests.fixtures import fixture_documents
+from tests.stdlib_parser import parse_html
 
 
 def _extract_via(parser, payload):

@@ -44,7 +44,7 @@ def reference(spark, bucketed_input, tmp_path_factory):
     """The words table of one uninterrupted run."""
     base = tmp_path_factory.mktemp("ref")
     out, ledger_path = str(base / "out"), str(base / "ledger")
-    summary = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    summary = run_extraction_job(spark, bucketed_input, out, ledger_path)
     assert summary["processed"] == N_BUCKETS
     return load_done(spark, out, ledger_path, "words")
 
@@ -71,14 +71,14 @@ def test_kill_and_resume_identical(spark, bucketed_input, reference, tmp_path):
     ledger_path = str(tmp_path / "ledger")
     with pytest.raises(RuntimeError, match="injected failure"):
         run_extraction_job(
-            spark, bucketed_input, out, ledger_path, N_BUCKETS, fail_after=2
+            spark, bucketed_input, out, ledger_path, fail_after=2
         )
     ledger = Ledger(ledger_path)
     done_after_crash = [r["partition_id"] for r in ledger.rows()]
     assert len(done_after_crash) == 2
 
     # Resume: must process exactly the remaining buckets.
-    summary2 = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    summary2 = run_extraction_job(spark, bucketed_input, out, ledger_path)
     assert summary2["skipped"] == 2
     assert summary2["processed"] == N_BUCKETS - 2
 
@@ -97,7 +97,7 @@ def test_kill_and_resume_identical(spark, bucketed_input, reference, tmp_path):
         assert set(r["outputs"]) == {"words"}
 
     # Idempotence: immediate re-run skips everything.
-    summary3 = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    summary3 = run_extraction_job(spark, bucketed_input, out, ledger_path)
     assert summary3["processed"] == 0
     assert summary3["skipped"] == N_BUCKETS
 
@@ -114,7 +114,7 @@ def test_kill_between_write_and_rename(spark, bucketed_input, reference, tmp_pat
     ledger_path = str(tmp_path / "ledger")
     with pytest.raises(RuntimeError, match="between write and rename"):
         run_extraction_job(
-            spark, bucketed_input, out, ledger_path, N_BUCKETS,
+            spark, bucketed_input, out, ledger_path,
             fail_before_commit=1,
         )
     ledger = Ledger(ledger_path)
@@ -131,7 +131,7 @@ def test_kill_between_write_and_rename(spark, bucketed_input, reference, tmp_pat
     visible = spark.read.parquet(words).count()
     assert visible > 0
 
-    summary = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    summary = run_extraction_job(spark, bucketed_input, out, ledger_path)
     assert summary["skipped"] == 1
     assert summary["processed"] == N_BUCKETS - 1
     assert _corpus_hash(load_done(spark, out, ledger_path, "words")) == ref_hash
@@ -163,14 +163,14 @@ def test_load_done_reads_only_committed_buckets(spark, bucketed_input, reference
         load_done(spark, out, ledger_path, "words")  # nothing committed yet
     with pytest.raises(RuntimeError, match="injected failure"):
         run_extraction_job(
-            spark, bucketed_input, out, ledger_path, N_BUCKETS, fail_after=2
+            spark, bucketed_input, out, ledger_path, fail_after=2
         )
     assert loaded() == want({0, 1})
 
     # staged for bucket 2 but never renamed: invisible
     with pytest.raises(RuntimeError, match="between write and rename"):
         run_extraction_job(
-            spark, bucketed_input, out, ledger_path, N_BUCKETS, fail_before_commit=0
+            spark, bucketed_input, out, ledger_path, fail_before_commit=0
         )
     assert len(os.listdir(words + ".staging")) == 1
     assert loaded() == want({0, 1})
@@ -192,7 +192,7 @@ def test_load_done_reads_only_committed_buckets(spark, bucketed_input, reference
     })
     assert loaded()[0] == {1, N_BUCKETS}
 
-    summary = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    summary = run_extraction_job(spark, bucketed_input, out, ledger_path)
     assert summary["processed"] == N_BUCKETS - 1 and summary["skipped"] == 1
     assert loaded() == want(set(range(N_BUCKETS)))
 
@@ -225,7 +225,7 @@ def test_flat_layout_ledger_is_redone_into_the_kind_layout(spark, tmp_path):
             input_snapshot_id=input_lineage(inp, f"bucket={bucket}") + suffix, wall_ms=0,
         )
 
-    summary = run_extraction_job(spark, inp, out, led, 2)
+    summary = run_extraction_job(spark, inp, out, led)
     assert summary["processed"] == 2 and summary["skipped"] == 0
     assert summary["relineaged"] == 2
     got = load_done(spark, out, led, "words").drop("bucket")
@@ -252,11 +252,11 @@ def test_multi_emit_one_parse_three_tables(spark, bucketed_input, tmp_path):
     emit = ("words", "extracted", "removals")
     with pytest.raises(RuntimeError, match="injected failure"):
         run_extraction_job(
-            spark, bucketed_input, out, ledger_path, N_BUCKETS,
+            spark, bucketed_input, out, ledger_path,
             emit=emit, fail_after=2,
         )
     summary = run_extraction_job(
-        spark, bucketed_input, out, ledger_path, N_BUCKETS, emit=emit
+        spark, bucketed_input, out, ledger_path, emit=emit
     )
     assert summary["processed"] == N_BUCKETS - 2 and summary["skipped"] == 2
 
@@ -282,7 +282,7 @@ def test_multi_emit_one_parse_three_tables(spark, bucketed_input, tmp_path):
 def test_lineage_invalidation(spark, bucketed_input, tmp_path):
     out = str(tmp_path / "out2")
     ledger_path = str(tmp_path / "ledger2")
-    run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    run_extraction_job(spark, bucketed_input, out, ledger_path)
     ledger = Ledger(ledger_path)
     # the stored key is the input lineage; the emit set is the row's outputs
     lineage0 = input_lineage(bucketed_input, "bucket=0")
@@ -337,12 +337,12 @@ def test_by_date_grid_resume_and_reprocess(spark, reference, tmp_path):
 
     out = str(tmp_path / "dated_out")
     led = str(tmp_path / "dated_ledger")
-    s1 = run_extraction_job(spark, inp, out, led, N_BUCKETS)
+    s1 = run_extraction_job(spark, inp, out, led)
     assert s1["processed"] == 2 * N_BUCKETS
     assert s1["skipped"] == 0
 
     # resume: everything skips, on both date grids
-    s2 = run_extraction_job(spark, inp, out, led, N_BUCKETS)
+    s2 = run_extraction_job(spark, inp, out, led)
     assert s2["processed"] == 0
     assert s2["skipped"] == 2 * N_BUCKETS
 
@@ -352,7 +352,7 @@ def test_by_date_grid_resume_and_reprocess(spark, reference, tmp_path):
     assert _corpus_hash(dated.drop("crawl_date")) == _corpus_hash(reference)
 
     # reprocess ONE date: only that date's grid runs
-    s3 = run_extraction_job(spark, inp, out, led, N_BUCKETS, dates=["2026-01-02"])
+    s3 = run_extraction_job(spark, inp, out, led, dates=["2026-01-02"])
     assert s3["skipped"] == N_BUCKETS and s3["processed"] == 0
 
     # a changed input on one date invalidates only that date's buckets
@@ -360,7 +360,7 @@ def test_by_date_grid_resume_and_reprocess(spark, reference, tmp_path):
         spark.createDataFrame(_fixture_rows("2026-01-01"), schema=DOCUMENTS_SCHEMA),
         inp + "/crawl_date=2026-01-01", N_BUCKETS,
     )
-    s4 = run_extraction_job(spark, inp, out, led, N_BUCKETS)
+    s4 = run_extraction_job(spark, inp, out, led)
     assert s4["processed"] == s4["relineaged"] > 0
     assert s4["processed"] + s4["skipped"] == 2 * N_BUCKETS
     attempts = {r["partition_id"]: r["attempt"] for r in Ledger(led).rows()}
@@ -384,14 +384,14 @@ def test_new_crawl_date_is_extracted(spark, reference, tmp_path):
     )
     out = str(tmp_path / "out")
     led = str(tmp_path / "ledger")
-    s1 = run_extraction_job(spark, inp, out, led, N_BUCKETS)
+    s1 = run_extraction_job(spark, inp, out, led)
     assert s1["processed"] == N_BUCKETS
 
     write_bucketed_input(
         spark.createDataFrame(_fixture_rows("2026-01-02"), schema=DOCUMENTS_SCHEMA),
         inp + "/crawl_date=2026-01-02", N_BUCKETS,
     )
-    s2 = run_extraction_job(spark, inp, out, led, N_BUCKETS)
+    s2 = run_extraction_job(spark, inp, out, led)
     assert s2["processed"] == N_BUCKETS and s2["skipped"] == N_BUCKETS
 
     got = load_done(spark, out, led, "words")
@@ -414,13 +414,13 @@ def test_per_date_ledger_is_redone_into_the_unit_layout(spark, dated_input, refe
     for d in dates:
         run_extraction_job(
             spark, f"{dated_input}/crawl_date={d}", f"{out}/crawl_date={d}",
-            f"{led}/crawl_date={d}", N_BUCKETS,
+            f"{led}/crawl_date={d}",
         )
         assert Ledger(f"{led}/crawl_date={d}").get("bucket=0")["partition_id"] == "bucket=0"
     with pytest.raises(ValueError, match="'words'"):
         load_done(spark, out, led, "words")
 
-    summary = run_extraction_job(spark, dated_input, out, led, N_BUCKETS)
+    summary = run_extraction_job(spark, dated_input, out, led)
     n_units = len(dates) * N_BUCKETS
     assert summary["processed"] == summary["relineaged"] == n_units
     assert summary["skipped"] == 0
@@ -439,18 +439,54 @@ def test_dates_must_match_the_input_layout(spark, bucketed_input, dated_input, t
     out = str(tmp_path / "out")
     led = str(tmp_path / "ledger")
     with pytest.raises(ValueError, match="no crawl_date"):
-        run_extraction_job(spark, bucketed_input, out, led, N_BUCKETS, dates=["2026-01-01"])
+        run_extraction_job(spark, bucketed_input, out, led, dates=["2026-01-01"])
     with pytest.raises(ValueError, match="crawl_date=2026-01-09"):
         run_extraction_job(
-            spark, dated_input, out, led, N_BUCKETS, dates=["2026-01-01", "2026-01-09"]
+            spark, dated_input, out, led, dates=["2026-01-01", "2026-01-09"]
         )
     assert Ledger(led).rows() == [] and not os.path.exists(out)
 
-    s = run_extraction_job(spark, dated_input, out, led, 1, dates=["2026-01-02"])
-    assert s["buckets"] == 1 and s["processed"] == 1
-    assert Ledger(led).units() == ["crawl_date=2026-01-02/bucket=0"]
-    run_extraction_job(spark, bucketed_input, out, led, 1)
-    assert Ledger(led).units() == ["bucket=0"]
+    s = run_extraction_job(spark, dated_input, out, led, dates=["2026-01-02"])
+    assert s["buckets"] == N_BUCKETS and s["processed"] == N_BUCKETS
+    assert Ledger(led).units() == [
+        f"crawl_date=2026-01-02/bucket={k}" for k in range(N_BUCKETS)
+    ]
+    run_extraction_job(spark, bucketed_input, out, led)
+    assert Ledger(led).units() == [f"bucket={k}" for k in range(N_BUCKETS)]
+
+
+def test_bucket_count_is_read_from_the_input(spark, tmp_path):
+    """The run's bucket count is the table's: a table written with 8
+    buckets runs 8 units and loads every url; rewritten with 4, the
+    next run retires the rows of buckets 4-7, so load_done reads each
+    url once. A table with no bucket dir raises before any unit runs."""
+    rows = [
+        (f"http://ex.com/{i}", None, f"<p>body {i} of the page</p>".encode(), None, "en")
+        for i in range(40)
+    ]
+    docs = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+    inp = str(tmp_path / "input")
+    out = str(tmp_path / "out")
+    led = str(tmp_path / "ledger")
+
+    def urls() -> list[str]:
+        words = load_done(spark, out, led, "words")
+        return sorted(r["url"] for r in words.select("url", "bucket").distinct().collect())
+
+    want = sorted(r[0] for r in rows)
+    for n in (8, 4):
+        write_bucketed_input(docs, inp, n)
+        s = run_extraction_job(spark, inp, out, led)
+        assert s["buckets"] == s["processed"] == n
+        assert Ledger(led).units() == [f"bucket={k}" for k in range(n)]
+        assert urls() == want
+
+    docs.write.parquet(str(tmp_path / "flat"))
+    with pytest.raises(ValueError, match="no bucket=k dirs"):
+        run_extraction_job(spark, str(tmp_path / "flat"), str(tmp_path / "o2"), str(tmp_path / "l2"))
+    assert Ledger(str(tmp_path / "l2")).rows() == [] and not os.path.exists(tmp_path / "o2")
 
 
 def test_by_date_flag_is_warc_ingest_only():
@@ -470,13 +506,13 @@ def test_torn_ledger_row_is_redone(spark, bucketed_input, reference, tmp_path):
     bucket, converging to the uninterrupted output."""
     out = str(tmp_path / "out")
     led = str(tmp_path / "ledger")
-    run_extraction_job(spark, bucketed_input, out, led, N_BUCKETS)
+    run_extraction_job(spark, bucketed_input, out, led)
     with open(os.path.join(led, "bucket=1.json"), "w") as f:
         f.write("{broken")
     assert _buckets_read(load_done(spark, out, led, "words")) == {
         f"bucket={k}" for k in range(N_BUCKETS) if k != 1
     }
-    s = run_extraction_job(spark, bucketed_input, out, led, N_BUCKETS)
+    s = run_extraction_job(spark, bucketed_input, out, led)
     assert s["processed"] == 1 and s["skipped"] == N_BUCKETS - 1
     assert _corpus_hash(load_done(spark, out, led, "words")) == _corpus_hash(reference)
 
@@ -527,7 +563,7 @@ def test_bucket_lock_concurrent_writer_semantics(spark, bucketed_input, tmp_path
         json.dump({"pid": 2**22 + 12345, "host": socket.gethostname(),
                    "ts": _time.time()}, f)
 
-    s1 = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    s1 = run_extraction_job(spark, bucketed_input, out, ledger_path)
     assert s1["locked"] == 1 and s1["processed"] == N_BUCKETS - 1
     done = {r["partition_id"] for r in Ledger(ledger_path).rows()}
     assert "bucket=1" not in done and "bucket=2" in done
@@ -535,7 +571,7 @@ def test_bucket_lock_concurrent_writer_semantics(spark, bucketed_input, tmp_path
     # the foreign writer "finishes" (lock released): a second run takes
     # the remaining bucket and the output converges to all buckets done
     os.unlink(os.path.join(locks, "bucket=1.lock"))
-    s2 = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    s2 = run_extraction_job(spark, bucketed_input, out, ledger_path)
     assert s2["processed"] == 1 and s2["skipped"] == N_BUCKETS - 1
     assert s2["locked"] == 0
     assert not os.listdir(locks)  # no locks left behind
@@ -550,13 +586,13 @@ def test_bucket_lock_exception_release_and_reentrancy(spark, bucketed_input, tmp
     ledger_path = str(tmp_path / "re_ledger")
     with pytest.raises(RuntimeError, match="between write and rename"):
         run_extraction_job(
-            spark, bucketed_input, out, ledger_path, N_BUCKETS,
+            spark, bucketed_input, out, ledger_path,
             fail_before_commit=1,
         )
     locks = os.path.join(ledger_path, "locks")
     # the failed attempt RELEASED its lock on the way out
     assert os.listdir(locks) == []
-    s = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    s = run_extraction_job(spark, bucketed_input, out, ledger_path)
     assert s["locked"] == 0 and s["processed"] + s["skipped"] == N_BUCKETS
     assert not os.listdir(locks)
 
@@ -602,7 +638,7 @@ def test_extraction_job_respect_robots(spark, tmp_path):
 
     out = str(tmp_path / "rb_out")
     summary = run_extraction_job(
-        spark, inp, out, str(tmp_path / "rb_ledger"), 2, respect_robots=True
+        spark, inp, out, str(tmp_path / "rb_ledger"), respect_robots=True
     )
     assert summary["processed"] == 2
     opted = {r[0] for i, r in enumerate(rows) if i % 3 == 0}
@@ -618,13 +654,13 @@ def test_respect_robots_is_part_of_the_resume_key(spark, bucketed_input, tmp_pat
     under a different consent policy reprocesses, never skips."""
     out = str(tmp_path / "rk_out")
     ledger_path = str(tmp_path / "rk_ledger")
-    s1 = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS)
+    s1 = run_extraction_job(spark, bucketed_input, out, ledger_path)
     assert s1["processed"] == N_BUCKETS
-    s2 = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS,
+    s2 = run_extraction_job(spark, bucketed_input, out, ledger_path,
                             respect_robots=True)
     assert s2["processed"] == N_BUCKETS and s2["skipped"] == 0
     # and the robots-mode run is itself resumable
-    s3 = run_extraction_job(spark, bucketed_input, out, ledger_path, N_BUCKETS,
+    s3 = run_extraction_job(spark, bucketed_input, out, ledger_path,
                             respect_robots=True)
     assert s3["skipped"] == N_BUCKETS
 
@@ -660,10 +696,10 @@ def test_doc_level_emit_kinds_side_tables(spark, tmp_path):
     emit = ("words", "image_pairs", "pagemeta", "jsonld", "media_refs")
     with pytest.raises(RuntimeError, match="injected failure"):
         run_extraction_job(
-            spark, inp, out, ledger_path, N_BUCKETS, emit=emit, fail_after=2
+            spark, inp, out, ledger_path, emit=emit, fail_after=2
         )
     summary = run_extraction_job(
-        spark, inp, out, ledger_path, N_BUCKETS, emit=emit
+        spark, inp, out, ledger_path, emit=emit
     )
     assert summary["processed"] == N_BUCKETS - 2 and summary["skipped"] == 2
 
@@ -707,7 +743,7 @@ def test_doc_level_emit_only_skips_parse(spark, tmp_path):
 
     out = str(tmp_path / "out")
     summary = run_extraction_job(
-        spark, inp, out, str(tmp_path / "ledger"), 2, emit=("jsonld",)
+        spark, inp, out, str(tmp_path / "ledger"), emit=("jsonld",)
     )
     assert summary["processed"] == 2
     got = load_done(spark, out, str(tmp_path / "ledger"), "jsonld").drop("bucket")
@@ -736,32 +772,17 @@ def test_emit_set_is_part_of_the_resume_key(spark, tmp_path):
     out = str(tmp_path / "out")
     led = str(tmp_path / "ledger")
 
-    s1 = run_extraction_job(spark, inp, out, led, 2, emit=("words",))
+    s1 = run_extraction_job(spark, inp, out, led, emit=("words",))
     assert s1["processed"] == 2 and s1["relineaged"] == 0
-    s2 = run_extraction_job(spark, inp, out, led, 2, emit=("words", "jsonld"))
+    s2 = run_extraction_job(spark, inp, out, led, emit=("words", "jsonld"))
     assert s2["processed"] == 2 and s2["skipped"] == 0   # invalidated
     # ...and the summary says why: every done bucket was relineaged
     assert s2["relineaged"] == 2
     assert load_done(spark, out, led, "jsonld").count() == 12
     # identical emit resumes as before
-    s3 = run_extraction_job(spark, inp, out, led, 2, emit=("words", "jsonld"))
+    s3 = run_extraction_job(spark, inp, out, led, emit=("words", "jsonld"))
     assert s3["skipped"] == 2 and s3["processed"] == 0
     assert s3["relineaged"] == 0
-
-
-def _spark_jobs(spark, run) -> int:
-    """Spark jobs started by ``run()``, counted through statusTracker."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _input_stats(frame, n_buckets: int) -> dict[str, tuple[int, int]]:
@@ -786,17 +807,16 @@ def _ledger_stats(ledger_path: str) -> dict[str, tuple[int, int]]:
     }
 
 
-def test_ledger_stats_ride_the_first_write(spark, bucketed_input, tmp_path):
+def test_ledger_stats_ride_the_first_write(spark, spark_jobs, bucketed_input, tmp_path):
     """rows_in/bytes_in come from the bucket's first write, not from a
     separate aggregate: three stage tables cost at most 4 Spark jobs per
     bucket, and the ledger still equals an independent agg of the input."""
     out = str(tmp_path / "out")
     ledger_path = str(tmp_path / "ledger")
     emit = ("words", "extracted", "removals")
-    jobs = _spark_jobs(
-        spark,
+    jobs = spark_jobs(
         lambda: run_extraction_job(
-            spark, bucketed_input, out, ledger_path, N_BUCKETS, emit=emit
+            spark, bucketed_input, out, ledger_path, emit=emit
         ),
     )
     assert jobs <= 4 * N_BUCKETS, f"{jobs} Spark jobs for {N_BUCKETS} buckets"
@@ -806,16 +826,24 @@ def test_ledger_stats_ride_the_first_write(spark, bucketed_input, tmp_path):
 
 
 def test_ledger_stats_empty_bucket_and_doc_level_emit(spark, bucketed_input, tmp_path):
-    """Buckets past the populated range record 0/0; a doc-level-only
-    emit (no parse stage) records the same stats as a stage emit."""
+    """Empty buckets record 0/0: with an empty ``bucket=N+1`` dir the
+    table has N+2 buckets, ``bucket=N`` (no dir) among them; a
+    doc-level-only emit (no parse stage) records the same stats as a
+    stage emit."""
+    import shutil
+
+    inp = str(tmp_path / "input")
+    shutil.copytree(bucketed_input, inp)
     n = N_BUCKETS + 2  # buckets N_BUCKETS.. have no input rows
-    want = _input_stats(spark.read.parquet(bucketed_input), n)
-    assert want[f"bucket={N_BUCKETS}"] == (0, 0)
+    spark.read.parquet(bucketed_input).drop("bucket").limit(0).write.parquet(
+        f"{inp}/bucket={n - 1}"
+    )
+    want = _input_stats(spark.read.parquet(inp), n)
+    assert want[f"bucket={N_BUCKETS}"] == want[f"bucket={n - 1}"] == (0, 0)
     for emit in (("words", "extracted"), ("pagemeta",)):
         ledger_path = str(tmp_path / ("ledger-" + "-".join(emit)))
         run_extraction_job(
-            spark, bucketed_input, str(tmp_path / ("out-" + "-".join(emit))),
-            ledger_path, n, emit=emit,
+            spark, inp, str(tmp_path / ("out-" + "-".join(emit))), ledger_path, emit=emit,
         )
         assert _ledger_stats(ledger_path) == want, emit
 
@@ -835,7 +863,7 @@ def test_ledger_stats_count_robots_filtered_rows(spark, tmp_path):
     write_bucketed_input(spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA), inp, 2)
     ledger_path = str(tmp_path / "ledger")
     run_extraction_job(
-        spark, inp, str(tmp_path / "out"), ledger_path, 2,
+        spark, inp, str(tmp_path / "out"), ledger_path,
         emit=("words", "removals"), respect_robots=True,
     )
     want = _input_stats(apply_robots_optout(spark.read.parquet(inp)), 2)

@@ -374,6 +374,8 @@ def test_host_pagerank_checkpoint_dir_fault_tolerant_path(spark, tmp_path):
     assert [s for s in snaps if s.startswith("ranks_")] == [
         "ranks_0", "ranks_1", "ranks_3"
     ]
+    # the final snapshot is read back with the schema it was written with
+    assert out.schema == spark.read.parquet(f"{ck}/ranks_1").schema
 
 
 def test_host_pagerank_from_docs(spark):
