@@ -79,6 +79,8 @@ import sys
 
 from pyspark.sql import SparkSession, functions as F
 
+from fusus_spark.session import configure
+
 
 def run_job(
     spark: SparkSession,
@@ -420,7 +422,7 @@ def main(argv: list[str] | None = None) -> None:
                    help="stratum column for the mixture (e.g. lang)")
     args = p.parse_args(argv)
 
-    spark = SparkSession.builder.appName("fusus-curate").getOrCreate()
+    spark = configure(SparkSession.builder.appName("fusus-curate")).getOrCreate()
     summary = run_job(
         spark,
         input_path=args.input,

@@ -12,7 +12,11 @@ North-rule launch shape:
 The job is resumable: units already marked done in the ledger (with
 matching input lineage) are skipped; kill it at any point and re-submit
 with the same arguments to resume exactly (tests/test_resume.py).
-Read the output back with ``sources.ledger.load_done``.
+The units left run ``sources.ledger.UNITS_IN_FLIGHT`` at a time, each
+from its own driver thread and with its Spark jobs described
+``extract:<unit>``; that many persisted stages can be in memory at
+once, each bounded by bucket sizing. Read the output back with
+``sources.ledger.load_done``.
 
 ``--input-format warc`` accepts raw crawl segment files instead: the
 segments are ingested (fusus_spark.sources.warc — one task per file,
@@ -41,6 +45,8 @@ import json
 import sys
 
 from pyspark.sql import SparkSession
+
+from fusus_spark.session import configure
 
 
 def run_job(
@@ -219,16 +225,7 @@ def main(argv: list[str] | None = None) -> None:
     if args.buckets is None and args.input_format == "warc":
         p.error("--input-format warc requires --buckets")
 
-    # Under spark-submit, the session already exists; standalone, build one.
-    spark = SparkSession.builder.appName("fusus-extract").getOrCreate()
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    from fusus_spark.session import ARROW_MAX_BYTES_PER_BATCH
-
-    # the Arrow batch byte cap session.get_spark sets (giant pages)
-    spark.conf.set("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES_PER_BATCH))
-    # determinism parity with session.get_spark (crawl-date derivation is
-    # already tz-free arithmetic; this pins everything else, e.g. logs)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = configure(SparkSession.builder.appName("fusus-extract")).getOrCreate()
 
     summary = run_job(
         spark,

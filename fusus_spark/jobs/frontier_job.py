@@ -61,6 +61,8 @@ import sys
 
 from pyspark.sql import SparkSession, functions as F
 
+from fusus_spark.session import configure
+
 _SITEMAP_SCHEMA = (
     "sitemap_url string, kind string, loc string, "
     "lastmod string, changefreq string, priority_e6 bigint"
@@ -272,7 +274,7 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--k-per-host", type=int, default=100)
     a = p.parse_args(argv)
 
-    spark = SparkSession.builder.appName("fusus-frontier").getOrCreate()
+    spark = configure(SparkSession.builder.appName("fusus-frontier")).getOrCreate()
     summary = run_job(
         spark,
         snapshots_path=a.snapshots,

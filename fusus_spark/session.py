@@ -1,7 +1,8 @@
 """SparkSession factory with the engine's standard knobs.
 
-Sandbox runs are ``local[N]`` single-JVM; the same config block is what
-a ``spark-submit --py-files`` cluster launch would carry (see
+Sandbox runs are ``local[N]`` single-JVM (``get_spark``); the same
+engine confs (``configure``) are what every job's ``main`` applies under
+a ``spark-submit --py-files`` cluster launch (see
 fusus_spark/jobs/extract_job.py for the packaged entry point).
 """
 
@@ -31,6 +32,33 @@ def _default_mem() -> str:
     return "16g" if total >= 64 * 1024**3 else "8g"
 
 
+def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
+    """Apply the engine's session confs to ``builder``: what every job
+    needs, in any launch. ``get_spark`` adds the sizing a local session
+    takes; under spark-submit the launcher owns master and sizing, so a
+    job's ``main`` builds ``configure(SparkSession.builder...)`` alone."""
+    return (
+        builder
+        # AQE coalesces small shuffle partitions.
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Arrow everywhere: the engine's only Python surface is
+        # pandas/Arrow UDFs (input_hint: no per-row Python).
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES_PER_BATCH))
+        # Deterministic session timezone for timestamp round-trips.
+        .config("spark.sql.session.timeZone", "UTC")
+        # A curate job generates ~136 classes, more than the default
+        # cache of 100 holds, so each later job in the session would
+        # recompile most of them; at 1000 a repeated job compiles none.
+        # (A single job compiles about 136 either way.) A static conf:
+        # only the builder can set it.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+    )
+
+
 def get_spark(
     app_name: str = "fusus_spark",
     *,
@@ -44,28 +72,12 @@ def get_spark(
         os.environ.get("FUSUS_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
     b = (
-        SparkSession.builder.appName(app_name)
+        configure(SparkSession.builder.appName(app_name))
         .master(master)
         # Sized so a shuffle partition of html payloads fits in memory
-        # at the target SF (SURVEY.md §4.3); AQE coalesces small ones.
+        # at the target SF (SURVEY.md §4.3).
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow everywhere: the engine's only Python surface is
-        # pandas/Arrow UDFs (input_hint: no per-row Python).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES_PER_BATCH))
-        # Deterministic session timezone for timestamp round-trips.
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("FUSUS_DRIVER_MEM", _default_mem()))
-        # A curate job generates ~136 classes, more than the default
-        # cache of 100 holds, so each later job in the session would
-        # recompile most of them; at 1000 a repeated job compiles none.
-        # (A single job compiles about 136 either way.) A static conf:
-        # only the builder can set it.
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

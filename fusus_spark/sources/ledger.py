@@ -9,17 +9,20 @@ input layout, ``bucket=k`` or ``crawl_date=D/bucket=k``:
 * input is laid out partitioned by ``bucket = pmod(xxhash64(url, salt), N)``
   (at real scale: Iceberg ``days(warc_ts) + bucket(N, url)`` — reading
   one unit prunes to one partition directory, never a full scan);
-* each unit is processed independently and committed atomically IN
-  TWO STAGES: each kind's parquet is written to a staging dir under
-  ``out/<kind>.staging`` — a SIBLING of the table ``out/<kind>``, never
-  inside it (Spark 4's partition inference trips even on ``_``-prefixed
-  dirs in a table root) — then renamed to ``out/<kind>/<partition_id>``
-  (POSIX-atomic on one filesystem — the Iceberg snapshot-commit
-  analog), THEN the ledger row ``<partition_id>.json``, whose
-  ``outputs`` names the kinds committed, is written via tmp-file +
-  rename. A crash at any point leaves either the old complete unit or
-  no unit, never a partial one, and an un-marked unit is simply redone
-  — idempotent because the rename replaces the whole unit;
+* each unit is processed independently — up to ``UNITS_IN_FLIGHT``
+  at once, each from its own driver thread, so up to that many
+  persisted stages are held at once (each still bounded by bucket
+  sizing) — and committed atomically IN TWO STAGES: each kind's
+  parquet is written to a staging dir under ``out/<kind>.staging`` —
+  a SIBLING of the table ``out/<kind>``, never inside it (Spark 4's
+  partition inference trips even on ``_``-prefixed dirs in a table
+  root) — then renamed to ``out/<kind>/<partition_id>`` (POSIX-atomic
+  on one filesystem — the Iceberg snapshot-commit analog), THEN the
+  ledger row ``<partition_id>.json``, whose ``outputs`` names the
+  kinds committed, is written via tmp-file + rename. A crash at any
+  point leaves either the old complete unit or no unit, never a
+  partial one, and an un-marked unit is simply redone — idempotent
+  because the rename replaces the whole unit;
 * resume = skip units whose ledger row says done for that unit AND
   whose recorded input lineage and ``outputs`` kinds still match;
 * concurrent writers: each unit is guarded by a ``BucketLock``
@@ -43,12 +46,19 @@ import os
 import re
 import time
 import uuid
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from fusus_spark.extraction.pipeline import extract_stage, words_from_stage
 
 BUCKET_SALT = 42
+# Restart units a job runs at once, each from its own driver thread.
+# One unit leaves cores idle between its jobs (planning, the footer
+# reads, renames and ledger row, a straggling last task); a second
+# unit's tasks fill them.
+UNITS_IN_FLIGHT = 2
 
 
 def with_bucket(docs: DataFrame, n_buckets: int) -> DataFrame:
@@ -424,11 +434,16 @@ def run_extraction_job(
     max_html_bytes: int = 4 * 1024 * 1024,
     respect_robots: bool = False,
 ) -> dict:
-    """Resumable bucket-at-a-time extraction job.
+    """Resumable extraction job, up to ``UNITS_IN_FLIGHT`` units at once.
 
     The restart units are the input's partition dirs (``_units``), for
     the bucket count read from the table; on a crawl-date table
-    ``dates`` limits them to those dates.
+    ``dates`` limits them to those dates. A serial pre-pass skips the
+    done units; the rest are dispatched in order to a driver thread
+    pool, each under its ``BucketLock`` (taken before dispatch) and
+    with its Spark jobs described ``extract:<unit>``. A failed unit
+    stops dispatch: the units in flight drain and commit, then the
+    first error is re-raised.
 
     ``emit`` selects the output tables: the parse-derived kinds come
     from ONE fused parse per bucket (the stage is persisted across
@@ -442,10 +457,12 @@ def run_extraction_job(
     the ledger row's ``outputs``, written after every rename, is the
     record of what a bucket committed (``load_done`` reads through it).
 
-    ``fail_after=k`` injects a crash after k units; ``fail_before_
-    commit=k`` injects it on the k-th processed unit AFTER the staging
-    writes but BEFORE the atomic renames (for the kill-mid-write
-    acceptance test). Returns summary metrics.
+    Crash injection counts STARTED units (those given to the pool):
+    ``fail_after=k`` starts k units, drains them and raises, leaving
+    exactly k done; ``fail_before_commit=k`` starts at most k+1 units
+    and the unit of index k raises AFTER its staging writes but BEFORE
+    its atomic renames (for the kill-mid-write acceptance test), so k
+    units commit and one is left staged. Returns summary metrics.
     """
     from fusus_spark.extraction.pipeline import (
         extracted_from_stage,
@@ -476,10 +493,9 @@ def run_extraction_job(
     for old in ledger.units():
         if old not in held:
             os.unlink(ledger._file(old))
-    done_now = 0
     skipped = 0
-    locked = 0
     relineaged = 0
+    todo = []
     for unit, unit_input, bucket in units:
         # a unit's identity: its input files, the consent filter and
         # (as the row's ``outputs`` kinds) the emit set — a resume that
@@ -495,18 +511,19 @@ def run_extraction_job(
             # row with no ``outputs``, or a per-date row naming only
             # its bucket): redone, and counted
             relineaged += 1
-        if fail_after is not None and done_now >= fail_after:
-            raise RuntimeError(f"injected failure after {done_now} buckets")
-        if not lock.acquire(unit):
-            # a LIVE concurrent writer owns this bucket: leave it to
-            # them — concurrent job instances partition the bucket set
-            locked += 1
-            continue
-        # release in a finally: a transient in-process failure (executor
-        # OOM, write error) must not leave the bucket blocked for other
-        # instances until the staleness timeout; a process CRASH still
-        # leaves the lock for the stale-takeover path
+        todo.append((unit, unit_input, bucket, lineage))
+
+    sc = spark.sparkContext
+
+    def run_unit(unit: str, unit_input: str, bucket: int, lineage: str, fail: bool) -> None:
+        """One unit, read to ledger row, on a pool thread; its lock was
+        taken by the dispatcher and is released here in a finally: a
+        transient in-process failure (executor OOM, write error) must
+        not leave the bucket blocked for other instances until the
+        staleness timeout; a process CRASH still leaves the lock for
+        the stale-takeover path."""
         try:
+            sc.setJobDescription(f"extract:{unit}")
             t0 = time.time()
             # Partition-pruned read: only this bucket's files are scanned.
             docs = spark.read.parquet(unit_input).where(F.col("bucket") == bucket)
@@ -575,7 +592,7 @@ def run_extraction_job(
                 if persisted:
                     stage.unpersist()  # a failed write must not leak the cache
             observed = stats.get  # filled by the first write above
-            if fail_before_commit is not None and done_now >= fail_before_commit:
+            if fail:
                 raise RuntimeError(
                     f"injected failure between write and rename on {unit}"
                 )
@@ -594,10 +611,54 @@ def run_extraction_job(
             )
         finally:
             lock.release(unit)
-        done_now += 1
+
+    started = 0
+    locked = 0
+    injected = False
+    errors: list[BaseException] = []
+    running: set = set()
+
+    def reap(block: bool) -> None:
+        """Collect finished units (waiting for one when ``block``)."""
+        nonlocal running
+        finished, running = wait(
+            running, timeout=None if block else 0, return_when=FIRST_COMPLETED
+        )
+        errors.extend(e for f in finished if (e := f.exception()) is not None)
+
+    with ThreadPoolExecutor(UNITS_IN_FLIGHT) as pool:
+        for unit, unit_input, bucket, lineage in todo:
+            reap(block=len(running) >= UNITS_IN_FLIGHT)
+            # a failure stops dispatch; so does an injected crash, which
+            # counts started units
+            if errors or (fail_before_commit is not None and started > fail_before_commit):
+                break
+            if started == fail_after:
+                injected = True
+                break
+            if not lock.acquire(unit):
+                # a LIVE concurrent writer owns this bucket: leave it to
+                # them — concurrent job instances partition the bucket set
+                locked += 1
+                continue
+            # a fresh clone of the caller's local properties (job group,
+            # description, benchmark tags) per unit: one clone shared by
+            # two pool threads would carry one unit's description into
+            # the other's jobs
+            run = inheritable_thread_target(spark)(run_unit)
+            running.add(pool.submit(
+                run, unit, unit_input, bucket, lineage, started == fail_before_commit
+            ))
+            started += 1
+        while running:  # drain: in-flight units still commit
+            reap(block=True)
+    if errors:
+        raise errors[0]
+    if injected:
+        raise RuntimeError(f"injected failure after {started} buckets")
     return {
         "buckets": len(units),
-        "processed": done_now,
+        "processed": started,
         "skipped": skipped,
         "locked": locked,
         "relineaged": relineaged,

@@ -140,6 +140,108 @@ def test_kill_between_write_and_rename(spark, bucketed_input, reference, tmp_pat
     assert os.listdir(words + ".staging") == []
 
 
+# The job process of the kill test: its own session, one "started" line
+# once that session is up, then one run_extraction_job(input, out, ledger).
+_KILLED_JOB = """
+import sys
+from fusus_spark.session import get_spark
+from fusus_spark.sources.ledger import run_extraction_job
+spark = get_spark("killed-job", master="local[2]", shuffle_partitions=4)
+print("started", flush=True)
+run_extraction_job(spark, *sys.argv[1:])
+"""
+
+
+def test_kill_with_units_in_flight_resumes_exactly(spark, bucketed_input, reference, tmp_path):
+    """SIGKILL the job's whole process group at a seeded random delay
+    after its session is up, for three seeds; at least one kill lands
+    while two units are in flight (their two lock files outlive the
+    process). After each kill the words table holds only bucket dirs;
+    an in-process resume converges to the uninterrupted output with the
+    staging tree and the locks drained, and a second resume processes
+    no unit."""
+    import random
+    import re
+    import select
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    ref_hash = _corpus_hash(reference)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # a killed JVM cannot clean up its temp dirs: keep them in tmp_path
+    spark_tmp = tmp_path / "spark_tmp"
+    spark_tmp.mkdir()
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(p for p in (repo, os.environ.get("PYTHONPATH")) if p),
+        "FUSUS_DRIVER_MEM": "2g",
+        "SPARK_LOCAL_DIRS": str(spark_tmp),
+        "TMPDIR": str(spark_tmp),
+    }
+    in_flight = []
+    for seed in range(3):
+        out, led = str(tmp_path / f"out{seed}"), str(tmp_path / f"ledger{seed}")
+        with open(tmp_path / f"job{seed}.log", "w") as log:
+            proc = subprocess.Popen(
+                [sys.executable, "-c", _KILLED_JOB, bucketed_input, out, led],
+                stdout=subprocess.PIPE, stderr=log, text=True, env=env,
+                start_new_session=True,
+            )
+        try:
+            ready, _, _ = select.select([proc.stdout], [], [], 300)
+            assert ready and proc.stdout.readline() == "started\n"
+            time.sleep(random.Random(seed).uniform(0.5, 4.0))
+        finally:
+            try:
+                os.killpg(proc.pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass  # the job had already ended
+            proc.wait()
+        locks = os.path.join(led, "locks")
+        in_flight.append(len(os.listdir(locks)) if os.path.isdir(locks) else 0)
+        words = os.path.join(out, "words")
+        if os.path.isdir(words):
+            assert all(re.fullmatch(r"bucket=\d", d) for d in os.listdir(words))
+
+        s1 = run_extraction_job(spark, bucketed_input, out, led)
+        assert s1["processed"] + s1["skipped"] == N_BUCKETS and s1["locked"] == 0
+        assert os.listdir(words + ".staging") == [] and os.listdir(locks) == []
+        assert sorted(os.listdir(words)) == [f"bucket={k}" for k in range(N_BUCKETS)]
+        assert _corpus_hash(load_done(spark, out, led, "words")) == ref_hash
+        s2 = run_extraction_job(spark, bucketed_input, out, led)
+        assert s2["processed"] == 0 and s2["skipped"] == N_BUCKETS
+    assert max(in_flight) == 2, in_flight
+
+
+def test_failed_unit_stops_dispatch_and_drains(spark, bucketed_input, monkeypatch, tmp_path):
+    """A unit that fails stops dispatch: the unit in flight beside it
+    still commits, no later unit starts, every lock is released, and
+    the first error is re-raised."""
+    import threading
+
+    from fusus_spark.sources import ledger as ledger_mod
+
+    failed = threading.Event()
+    sweep = ledger_mod._sweep_staging
+
+    def fail_bucket_1(staging_root, unit):
+        if unit == "bucket=1":
+            failed.set()
+            raise OSError("no space left on device")
+        assert failed.wait(120)  # bucket 0 finishes only after bucket 1 failed
+        return sweep(staging_root, unit)
+
+    monkeypatch.setattr(ledger_mod, "_sweep_staging", fail_bucket_1)
+    out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
+    with pytest.raises(OSError, match="no space left"):
+        run_extraction_job(spark, bucketed_input, out, led)
+    assert [r["partition_id"] for r in Ledger(led).rows()] == ["bucket=0"]
+    assert os.listdir(os.path.join(out, "words")) == ["bucket=0"]
+    assert os.listdir(os.path.join(led, "locks")) == []
+
+
 def test_load_done_reads_only_committed_buckets(spark, bucketed_input, reference, tmp_path):
     """load_done reads exactly the buckets whose ledger row is done:
     after a kill between buckets, after a kill between the staging
@@ -810,7 +912,10 @@ def _ledger_stats(ledger_path: str) -> dict[str, tuple[int, int]]:
 def test_ledger_stats_ride_the_first_write(spark, spark_jobs, bucketed_input, tmp_path):
     """rows_in/bytes_in come from the bucket's first write, not from a
     separate aggregate: three stage tables cost at most 4 Spark jobs per
-    bucket, and the ledger still equals an independent agg of the input."""
+    bucket, and the ledger still equals an independent agg of the input.
+    Each of the three kinds is one write per bucket, so at least 3 jobs
+    per bucket carry the caller's job group, from whichever thread runs
+    the bucket."""
     out = str(tmp_path / "out")
     ledger_path = str(tmp_path / "ledger")
     emit = ("words", "extracted", "removals")
@@ -819,7 +924,7 @@ def test_ledger_stats_ride_the_first_write(spark, spark_jobs, bucketed_input, tm
             spark, bucketed_input, out, ledger_path, emit=emit
         ),
     )
-    assert jobs <= 4 * N_BUCKETS, f"{jobs} Spark jobs for {N_BUCKETS} buckets"
+    assert 3 * N_BUCKETS <= jobs <= 4 * N_BUCKETS, f"{jobs} Spark jobs for {N_BUCKETS} buckets"
     want = _input_stats(spark.read.parquet(bucketed_input), N_BUCKETS)
     assert all(rows > 0 for rows, _ in want.values())
     assert _ledger_stats(ledger_path) == want
@@ -869,3 +974,63 @@ def test_ledger_stats_count_robots_filtered_rows(spark, tmp_path):
     want = _input_stats(apply_robots_optout(spark.read.parquet(inp)), 2)
     assert sum(r for r, _ in want.values()) == 8
     assert _ledger_stats(ledger_path) == want
+
+
+def test_units_in_flight_carry_their_own_job_names(spark, monkeypatch, tmp_path):
+    """Two units run at once, each on its own pool thread: every job of
+    a unit carries its own ``extract:<unit>`` description plus the
+    caller's job group, job tag and local property, and the caller's
+    description is unchanged afterwards. Both units meet at a barrier
+    after setting their description and before their first job, so
+    local properties shared by the two threads would show."""
+    import threading
+    import uuid
+
+    from fusus_spark.sources import ledger as ledger_mod
+
+    rows = [
+        (f"http://ex.com/{i}", None, f"<p>body {i} of the page</p>".encode(), None, "en")
+        for i in range(12)
+    ]
+    inp = str(tmp_path / "input")
+    write_bucketed_input(
+        spark.createDataFrame(
+            rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+        ),
+        inp, 2,
+    )
+    sc = spark.sparkContext
+    barrier = threading.Barrier(2, timeout=120)
+    seen = {}
+    sweep = ledger_mod._sweep_staging
+
+    def meet(staging_root, unit):
+        barrier.wait()
+        seen[unit] = (
+            sc.getLocalProperty("spark.job.description"),
+            sc.getLocalProperty("fusus.test.caller"),
+        )
+        return sweep(staging_root, unit)
+
+    monkeypatch.setattr(ledger_mod, "_sweep_staging", meet)
+    group, tag = f"caller-{uuid.uuid4().hex}", f"tag-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "the caller's job")
+    sc.setLocalProperty("fusus.test.caller", "yes")
+    sc.addJobTag(tag)
+    try:
+        s = run_extraction_job(spark, inp, str(tmp_path / "out"), str(tmp_path / "ledger"))
+        assert sc.getLocalProperty("spark.job.description") == "the caller's job"
+    finally:
+        sc.removeJobTag(tag)
+        for key in ("spark.jobGroup.id", "spark.job.description", "fusus.test.caller"):
+            sc.setLocalProperty(key, None)
+    assert s["processed"] == 2
+    assert seen == {f"bucket={k}": (f"extract:bucket={k}", "yes") for k in range(2)}
+
+    store = sc._jsc.sc().statusStore()
+    described = set()
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        info = store.job(job)
+        assert tag in info.jobTags().mkString("\n").split("\n")
+        described.add(info.description().get())
+    assert described == {"extract:bucket=0", "extract:bucket=1"}

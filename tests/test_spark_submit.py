@@ -83,6 +83,8 @@ def test_spark_submit_frontier_job(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(store)
 
     out = str(tmp_path / "cycle")
+    events = tmp_path / "events"
+    events.mkdir()
     env = {**os.environ, "SPARK_SUBMIT_OPTS": "-Dderby.system.home=" + str(tmp_path)}
     proc = subprocess.run(
         [
@@ -90,6 +92,10 @@ def test_spark_submit_frontier_job(spark, tmp_path):
             "--master", "local-cluster[2,2,1536]",
             "--conf", "spark.executor.memory=1536m",
             "--conf", "spark.sql.shuffle.partitions=4",
+            "--conf", "spark.eventLog.enabled=true",
+            "--conf", f"spark.eventLog.dir={events}",
+            "--conf", "spark.eventLog.compress=false",
+            "--conf", "spark.eventLog.rolling.enabled=false",
             "--py-files", str(REPO / "dist" / "fusus_spark.zip"),
             str(REPO / "fusus_spark" / "jobs" / "frontier_job.py"),
             "--snapshots", store,
@@ -111,3 +117,14 @@ def test_spark_submit_frontier_job(spark, tmp_path):
     assert summary["n_scheduled"] == 2
     sched = {r["url"] for r in spark.read.parquet(f"{out}/schedule").collect()}
     assert sched == {"http://churn.com/a", "http://static.com/b"}
+
+    # the main built its session with the engine confs (session.configure):
+    # the application's environment, as its event log records it
+    (log,) = list(events.iterdir())
+    env_update = next(
+        e for e in map(json.loads, log.read_text().splitlines())
+        if e["Event"] == "SparkListenerEnvironmentUpdate"
+    )
+    props = dict(env_update["Spark Properties"])
+    assert props["spark.sql.session.timeZone"] == "UTC"
+    assert props["spark.sql.shuffle.partitions"] == "4"  # the launcher's sizing stands
