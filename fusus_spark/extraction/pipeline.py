@@ -12,8 +12,13 @@ Physical design (SURVEY.md §2.10, §4.3):
   costs ~20% of stage wall at full width, so the stage is Arrow-native);
 * one stage row per document (EXTRACTION_STAGE_SCHEMA): the envelope
   plus nested ``words``/``removals`` arrays, so a child row never
-  repeats its url; the words and removals tables are a JVM ``inline``
-  of those arrays;
+  repeats its url; on the query path the words and removals tables
+  are a JVM ``inline`` of those arrays;
+* one batch builder, two consumers: ``extract_stage`` hands the stage
+  batches to the JVM, and ``write_stage_tables`` (the extraction
+  job's sink) flattens the same batches in pyarrow and writes the
+  tables from the Python worker, so the job's words never cross into
+  the JVM;
 * skew defense is explicit: ``repartition_salted`` hashes url+salt so
   one host's pages spread over all tasks; giant pages share the one
   lane because the session's Arrow byte cap
@@ -22,7 +27,9 @@ Physical design (SURVEY.md §2.10, §4.3):
 * per-task fixed cost is kept off the stage: ``run`` starts with
   ``session.drop_zip_finders`` so the worker's per-task
   ``importlib.invalidate_caches()`` finds no zip finder to re-read
-  (~0.3 CPU-s per task otherwise, paid before the first batch);
+  (~0.3 CPU-s per task otherwise, paid before the first batch), and
+  the batch builder drops the finders a fresh worker's first batch
+  rebuilt (32-79 ms for its next task otherwise);
 * empty/error/capped urls still get their stage row (with empty
   arrays), unlike the reference which writes nothing for empty pages
   (fusus/page.py:640-647) — at 10^12 documents silent drops are
@@ -31,18 +38,34 @@ Physical design (SURVEY.md §2.10, §4.3):
 
 from __future__ import annotations
 
+import os
+import uuid
 from collections.abc import Iterator
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark import TaskContext
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from fusus_spark.extraction.extract import DEFAULT_MAX_HTML_BYTES, extract_document
-from fusus_spark.schema import EXTRACTED_SCHEMA, EXTRACTION_STAGE_SCHEMA
+from fusus_spark.schema import (
+    EXTRACTED_SCHEMA,
+    EXTRACTION_STAGE_SCHEMA,
+    REMOVALS_SCHEMA,
+    WORDS_SCHEMA,
+)
 from fusus_spark.session import drop_zip_finders
 
 _ARROW_STAGE = to_arrow_schema(EXTRACTION_STAGE_SCHEMA)
+# the tables of the stage kinds, as the sink writes them
+STAGE_TABLES = {
+    "words": to_arrow_schema(WORDS_SCHEMA),
+    "extracted": to_arrow_schema(EXTRACTED_SCHEMA),
+    "removals": to_arrow_schema(REMOVALS_SCHEMA),
+}
 *_ENV_FIELDS, _WORDS_FIELD, _REMOVALS_FIELD = _ARROW_STAGE
 # envelope columns taken from the extract_document result (url and lang
 # come from the input batch)
@@ -132,28 +155,38 @@ def extract_stage(
     accumulator + Arrow cost, and a removals query that built them only
     to drop them would pay the whole bill at 100 TB.
     """
-    has_charset = "charset" in docs.columns
-    pruned = docs.select(
-        "url", "html", "lang", *(["charset"] if has_charset else [])
-    )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_zip_finders()
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {name: i for i, name in enumerate(rb.schema.names)}
-            urls = rb.column(cols["url"]).to_pylist()
-            htmls = rb.column(cols["html"]).to_pylist()
-            langs = rb.column(cols["lang"]).to_pylist()
-            charsets = (
-                rb.column(cols["charset"]).to_pylist() if has_charset else None
-            )
-            yield _extract_batches_arrow(
-                urls, htmls, langs, max_html_bytes, emit_words, charsets
-            )
+        yield from _stage_batches(batches, max_html_bytes, emit_words)
 
-    return pruned.mapInArrow(run, schema=EXTRACTION_STAGE_SCHEMA)
+    return _pruned(docs).mapInArrow(run, schema=EXTRACTION_STAGE_SCHEMA)
+
+
+def _pruned(docs: DataFrame) -> DataFrame:
+    """The columns the stage reads: (url, html, lang[, charset])."""
+    has_charset = "charset" in docs.columns
+    return docs.select("url", "html", "lang", *(["charset"] if has_charset else []))
+
+
+def _stage_batches(
+    batches: Iterator[pa.RecordBatch], max_html_bytes: int, emit_words: bool
+) -> Iterator[pa.RecordBatch]:
+    """Input batches of ``_pruned`` columns -> stage RecordBatches: the
+    one batch builder behind both consumers."""
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        cols = rb.to_pydict()
+        yield _extract_batches_arrow(
+            cols["url"], cols["html"], cols["lang"], max_html_bytes,
+            emit_words, cols.get("charset"),
+        )
+    # a fresh worker's first batch imports lazily loaded modules (pandas
+    # through pyarrow, the consumer's parquet writer or Arrow output),
+    # which rebuilds zip finders: drop them again, or the worker's next
+    # task re-reads their archives
+    drop_zip_finders()
 
 
 def words_from_stage(stage: DataFrame) -> DataFrame:
@@ -171,6 +204,125 @@ def removals_from_stage(stage: DataFrame) -> DataFrame:
     """Stage rows -> removal diagnostics (markData analog,
     REMOVALS_SCHEMA), one row per record of the fused pass."""
     return stage.select("url", F.inline("removals"))
+
+
+def _table_batch(stage: pa.RecordBatch, kind: str) -> pa.RecordBatch:
+    """A stage batch -> one stage kind's table rows: the envelope
+    columns, or a nested column flattened with its document's url taken
+    once per element (the Arrow twin of ``inline``)."""
+    schema = STAGE_TABLES[kind]
+    if kind == "extracted":
+        return stage.select(schema.names)
+    lists = stage.column(kind)
+    url = stage.column("url").take(pc.list_parent_indices(lists))
+    return pa.RecordBatch.from_arrays([url, *lists.flatten().flatten()], schema=schema)
+
+
+# Spark's parquet codec names that pyarrow writes as the same codec
+_PARQUET_CODECS = {
+    "none": "none", "uncompressed": "none", "snappy": "snappy", "gzip": "gzip", "zstd": "zstd",
+}
+
+
+def parquet_codec(spark: SparkSession) -> str:
+    """The session's ``spark.sql.parquet.compression.codec`` as a
+    pyarrow codec name; ``ValueError`` for a codec the sink cannot
+    write as Spark would (lz4's Hadoop framing, lzo, brotli)."""
+    name = spark.conf.get("spark.sql.parquet.compression.codec", "snappy").lower()
+    if name not in _PARQUET_CODECS:
+        raise ValueError(
+            f"spark.sql.parquet.compression.codec={name!r}: the extraction "
+            f"sink writes only {sorted(_PARQUET_CODECS)}"
+        )
+    return _PARQUET_CODECS[name]
+
+
+class PartFile:
+    """One task's part file of one table, ``<root>/part-<partition>.parquet``.
+
+    Rows stream into a hidden temp file (``.part-...tmp``, which Spark's
+    file listing skips), and ``commit`` renames it over the part name
+    with ``os.replace``: a later attempt of the same partition replaces
+    an earlier attempt's file whole, and a killed attempt leaves only a
+    hidden temp file, swept before the unit commits. No row, no file,
+    unless ``commit(empty=True)`` asks for a schema-only part.
+    """
+
+    def __init__(self, root: str, partition: int, schema: pa.Schema, codec: str):
+        self.path = os.path.join(root, f"part-{partition:05d}.parquet")
+        self.tmp = os.path.join(root, f".part-{partition:05d}-{uuid.uuid4().hex}.tmp")
+        self.schema = schema
+        self.codec = codec
+        self.writer: pq.ParquetWriter | None = None
+        self.rows = 0
+
+    def write(self, batch: pa.RecordBatch) -> None:
+        if batch.num_rows:
+            self._writer().write_batch(batch)
+            self.rows += batch.num_rows
+
+    def commit(self, empty: bool = False) -> int:
+        """Publish the part; returns its row count."""
+        if self.writer is None and not empty:
+            return 0
+        self._writer().close()
+        os.replace(self.tmp, self.path)
+        return self.rows
+
+    def _writer(self) -> pq.ParquetWriter:
+        if self.writer is None:
+            self.writer = pq.ParquetWriter(self.tmp, self.schema, compression=self.codec)
+        return self.writer
+
+
+def write_parts(
+    batches: Iterator[pa.RecordBatch],
+    dirs: dict[str, str],
+    partition: int,
+    *,
+    max_html_bytes: int,
+    codec: str,
+) -> dict[str, int]:
+    """A task's input batches -> one part file per stage kind in
+    ``dirs`` (kind -> dir); returns the rows written per kind. Each
+    stage batch is built once and split per kind; without ``words``
+    in ``dirs`` no word is built."""
+    parts = {
+        kind: PartFile(d, partition, STAGE_TABLES[kind], codec)
+        for kind, d in dirs.items()
+    }
+    for stage in _stage_batches(batches, max_html_bytes, "words" in dirs):
+        for kind, part in parts.items():
+            part.write(_table_batch(stage, kind))
+    return {kind: part.commit() for kind, part in parts.items()}
+
+
+def write_stage_tables(
+    docs: DataFrame,
+    dirs: dict[str, str],
+    *,
+    max_html_bytes: int = DEFAULT_MAX_HTML_BYTES,
+    codec: str = "snappy",
+) -> DataFrame:
+    """documents -> the stage kinds' tables, written by the stage's own
+    Python worker: each task writes ``part-<partition>.parquet`` per
+    kind into ``dirs`` (kind -> an existing dir every executor sees)
+    and returns only a ``(kind, rows)`` row per kind. Collecting the
+    frame is the whole job: the tables never cross into the JVM.
+    A kind with no row in a task gets no part from it."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_finders()
+        rows = write_parts(
+            batches, dirs, TaskContext.get().partitionId(),
+            max_html_bytes=max_html_bytes, codec=codec,
+        )
+        yield pa.RecordBatch.from_pydict(
+            {"kind": list(rows), "rows": list(rows.values())},
+            schema=pa.schema([("kind", pa.string()), ("rows", pa.int64())]),
+        )
+
+    return _pruned(docs).mapInArrow(run, "kind string, rows long")
 
 
 def extract_removals(docs: DataFrame, *, max_html_bytes: int = DEFAULT_MAX_HTML_BYTES) -> DataFrame:

@@ -14,9 +14,11 @@ matching input lineage) are skipped; kill it at any point and re-submit
 with the same arguments to resume exactly (tests/test_resume.py).
 The units left run ``sources.ledger.UNITS_IN_FLIGHT`` at a time, each
 from its own driver thread and with its Spark jobs described
-``extract:<unit>``; that many persisted stages can be in memory at
-once, each bounded by bucket sizing. Read the output back with
-``sources.ledger.load_done``.
+``extract:<unit>``. The words/extracted/removals tables of a unit are
+ONE Spark job: the fused stage's Python workers write them straight
+to the unit's staging dirs (so the executors must see ``--output``),
+nothing is persisted, and a task holds one Arrow batch of pages at a
+time. Read the output back with ``sources.ledger.load_done``.
 
 ``--input-format warc`` accepts raw crawl segment files instead: the
 segments are ingested (fusus_spark.sources.warc — one task per file,

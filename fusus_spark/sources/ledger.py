@@ -10,10 +10,14 @@ input layout, ``bucket=k`` or ``crawl_date=D/bucket=k``:
   (at real scale: Iceberg ``days(warc_ts) + bucket(N, url)`` — reading
   one unit prunes to one partition directory, never a full scan);
 * each unit is processed independently — up to ``UNITS_IN_FLIGHT``
-  at once, each from its own driver thread, so up to that many
-  persisted stages are held at once (each still bounded by bucket
-  sizing) — and committed atomically IN TWO STAGES: each kind's
-  parquet is written to a staging dir under ``out/<kind>.staging`` —
+  at once, each from its own driver thread. The parse-derived kinds
+  (words, extracted, removals) take ONE Spark job per unit: the fused
+  stage's Python worker writes each task's part file of every kind
+  itself (``pipeline.write_stage_tables``) and returns only row
+  counts, so nothing is persisted and a task holds one stage batch at
+  a time; each doc-level kind is one Spark write. The unit commits
+  atomically IN TWO STAGES: each kind's parquet is written to a
+  staging dir under ``out/<kind>.staging`` —
   a SIBLING of the table ``out/<kind>``, never inside it (Spark 4's
   partition inference trips even on ``_``-prefixed dirs in a table
   root) — then renamed to ``out/<kind>/<partition_id>`` (POSIX-atomic
@@ -51,7 +55,12 @@ from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
-from fusus_spark.extraction.pipeline import extract_stage, words_from_stage
+from fusus_spark.extraction.pipeline import (
+    STAGE_TABLES,
+    PartFile,
+    parquet_codec,
+    write_stage_tables,
+)
 
 BUCKET_SALT = 42
 # Restart units a job runs at once, each from its own driver thread.
@@ -351,6 +360,19 @@ def _footer_metrics(tmp_dir: str) -> tuple[int, int]:
     return rows, size
 
 
+def _seal_parts(tmp_dir: str, kind: str, rows: int, codec: str) -> int:
+    """Ready a stage kind's staged dir for ``_commit_bucket``: sweep the
+    hidden temp files of killed task attempts, and give a kind no task
+    wrote a row of one schema-only part (as Spark's writer does), so the
+    unit holds exactly its ``part-*.parquet`` files. Returns their bytes."""
+    for f in os.listdir(tmp_dir):
+        if f.startswith("."):
+            os.unlink(os.path.join(tmp_dir, f))
+    if not rows:
+        PartFile(tmp_dir, 0, STAGE_TABLES[kind], codec).commit(empty=True)
+    return sum(os.path.getsize(os.path.join(tmp_dir, f)) for f in os.listdir(tmp_dir))
+
+
 def _commit_bucket(tmp_dir: str, root: str, unit: str) -> None:
     """Atomically move a staged bucket dir to ``root/<unit>``.
 
@@ -439,23 +461,29 @@ def run_extraction_job(
     The restart units are the input's partition dirs (``_units``), for
     the bucket count read from the table; on a crawl-date table
     ``dates`` limits them to those dates. A serial pre-pass skips the
-    done units; the rest are dispatched in order to a driver thread
-    pool, each under its ``BucketLock`` (taken before dispatch) and
-    with its Spark jobs described ``extract:<unit>``. A failed unit
-    stops dispatch: the units in flight drain and commit, then the
-    first error is re-raised.
+    done units and reads each table dir once (one listing and schema
+    inference per run; a unit prunes it to its bucket); the rest are
+    dispatched in order to a driver thread pool, each under its
+    ``BucketLock`` (taken before dispatch) and with its Spark jobs
+    described ``extract:<unit>``. A failed unit stops dispatch: the
+    units in flight drain and commit, then the first error is re-raised.
 
-    ``emit`` selects the output tables: the parse-derived kinds come
-    from ONE fused parse per bucket (the stage is persisted across
-    their writes when more than one is requested — bounded by bucket
-    sizing): ``words`` (the default), plus ``extracted`` (per-url
-    envelopes) and ``removals`` (boilerplate diagnostics). The
+    ``emit`` selects the output tables. The parse-derived kinds —
+    ``words`` (the default), ``extracted`` (per-url envelopes) and
+    ``removals`` (boilerplate diagnostics) — come from ONE fused parse
+    per unit in ONE Spark job: the stage's Python worker writes their
+    part files (``pipeline.write_stage_tables``, codec from the
+    session's ``spark.sql.parquet.compression.codec``); nothing is
+    persisted, and a task holds one stage batch at a time. The
     doc-level side-table kinds — ``pagemeta``, ``image_pairs``,
     ``media_refs``, ``jsonld`` — are map-side harvests over the
-    bucket's raw html (see _doc_splitters) riding the same staged
-    commit and ledger grid. Each kind lands in ``out/<kind>/<unit>``;
-    the ledger row's ``outputs``, written after every rename, is the
-    record of what a bucket committed (``load_done`` reads through it).
+    bucket's raw html (see _doc_splitters), one Spark write each,
+    riding the same staged commit and ledger grid. Each kind lands in
+    ``out/<kind>/<unit>``; the ledger row's ``outputs``, written after
+    every rename, is the record of what a bucket committed
+    (``load_done`` reads through it). The executors write into
+    ``output_path`` directly, so it must be a filesystem path they see
+    (as the commit's renames already need on the driver).
 
     Crash injection counts STARTED units (those given to the pool):
     ``fail_after=k`` starts k units, drains them and raises, leaving
@@ -464,24 +492,16 @@ def run_extraction_job(
     its atomic renames (for the kill-mid-write acceptance test), so k
     units commit and one is left staged. Returns summary metrics.
     """
-    from fusus_spark.extraction.pipeline import (
-        extracted_from_stage,
-        removals_from_stage,
-    )
-
     unknown = set(emit) - set(_EMIT_KINDS)
     if not emit or unknown or len(set(emit)) != len(emit):
         raise ValueError(
             f"emit must be a non-empty, duplicate-free subset of {_EMIT_KINDS}: "
             f"got {emit}"
         )
-    splitters = {
-        "words": words_from_stage,
-        "extracted": extracted_from_stage,
-        "removals": removals_from_stage,
-    }
     doc_splitters = _doc_splitters()
-    stage_kinds = [k for k in emit if k in splitters]
+    stage_kinds = [k for k in emit if k in STAGE_TABLES]
+    doc_kinds = [k for k in emit if k not in STAGE_TABLES]
+    codec = parquet_codec(spark) if stage_kinds else None
 
     units = _units(input_path, dates)
     ledger = Ledger(ledger_path)
@@ -496,6 +516,7 @@ def run_extraction_job(
     skipped = 0
     relineaged = 0
     todo = []
+    tables: dict[str, DataFrame] = {}
     for unit, unit_input, bucket in units:
         # a unit's identity: its input files, the consent filter and
         # (as the row's ``outputs`` kinds) the emit set — a resume that
@@ -511,11 +532,13 @@ def run_extraction_job(
             # row with no ``outputs``, or a per-date row naming only
             # its bucket): redone, and counted
             relineaged += 1
-        todo.append((unit, unit_input, bucket, lineage))
+        if unit_input not in tables:
+            tables[unit_input] = spark.read.parquet(unit_input)
+        todo.append((unit, tables[unit_input], bucket, lineage))
 
     sc = spark.sparkContext
 
-    def run_unit(unit: str, unit_input: str, bucket: int, lineage: str, fail: bool) -> None:
+    def run_unit(unit: str, table: DataFrame, bucket: int, lineage: str, fail: bool) -> None:
         """One unit, read to ledger row, on a pool thread; its lock was
         taken by the dispatcher and is released here in a finally: a
         transient in-process failure (executor OOM, write error) must
@@ -525,9 +548,8 @@ def run_extraction_job(
         try:
             sc.setJobDescription(f"extract:{unit}")
             t0 = time.time()
-            # Partition-pruned read: only this bucket's files are scanned.
-            docs = spark.read.parquet(unit_input).where(F.col("bucket") == bucket)
-            docs = _content_rows(docs)
+            # Partition-pruned: only this bucket's files are scanned.
+            docs = _content_rows(table.where(F.col("bucket") == bucket))
             if respect_robots:
                 # consent filter BEFORE the parse: a meta-noindex page
                 # must not pay for extraction (map-side regexp; rows_in
@@ -535,7 +557,7 @@ def run_extraction_job(
                 from fusus_spark.operators.robots import apply_robots_optout
 
                 docs = apply_robots_optout(docs)
-            # rows_in/bytes_in ride the bucket's first write (no extra
+            # rows_in/bytes_in ride the bucket's first job (no extra
             # scan or job); read only after every write has succeeded
             stats = Observation()
             docs = docs.observe(
@@ -543,55 +565,39 @@ def run_extraction_job(
                 F.count(F.lit(1)).alias("rows_in"),
                 F.coalesce(F.sum(F.octet_length("html")), F.lit(0)).alias("bytes_in"),
             )
-            stage = None
-            persisted = False
-            if stage_kinds:
-                stage = extract_stage(
-                    docs,
-                    max_html_bytes=max_html_bytes,
-                    emit_words=("words" in emit),
-                )
-                if len(stage_kinds) > 1:
-                    # one parse feeds every stage-derived table; a bucket
-                    # is sized to fit executor memory, so the persisted
-                    # stage is bounded (doc-level kinds re-scan the
-                    # pruned bucket parquet instead — cheaper than
-                    # forcing them through the parse channel)
-                    from pyspark import StorageLevel
-
-                    stage = stage.persist(StorageLevel.MEMORY_AND_DISK)
-                    persisted = True
             staged: dict[str, str] = {}  # kind -> tmp dir under out/<kind>.staging
+            for kind in emit:
+                staging_root = os.path.join(output_path, kind) + ".staging"
+                _sweep_staging(staging_root, unit)
+                staged[kind] = os.path.join(staging_root, f"{_flat(unit)}-{uuid.uuid4().hex}")
             per_kind: dict[str, dict[str, int]] = {}
-            try:
-                for kind in emit:
-                    staging_root = os.path.join(output_path, kind) + ".staging"
-                    _sweep_staging(staging_root, unit)
-                    tmp_dir = os.path.join(staging_root, f"{_flat(unit)}-{uuid.uuid4().hex}")
-                    if kind in splitters:
-                        frame = splitters[kind](stage)
-                    else:
-                        # same max_html_bytes truncation the parse
-                        # channel applies (extraction/extract.py):
-                        # side tables and parse tables must agree on
-                        # which content exists, and an unbounded page
-                        # must not pay 4 full-document regex scans
-                        frame = doc_splitters[kind](
-                            docs.withColumn(
-                                "html",
-                                F.substring(
-                                    F.col("html"), 1, int(max_html_bytes)
-                                ),
-                            )
-                        )
-                    frame.write.mode("overwrite").parquet(tmp_dir)
-                    rows, size = _footer_metrics(tmp_dir)
+            if stage_kinds:
+                for kind in stage_kinds:
+                    os.makedirs(staged[kind])
+                counts = write_stage_tables(
+                    docs,
+                    {kind: staged[kind] for kind in stage_kinds},
+                    max_html_bytes=max_html_bytes,
+                    codec=codec,
+                ).collect()
+                for kind in stage_kinds:
+                    rows = sum(r["rows"] for r in counts if r["kind"] == kind)
+                    size = _seal_parts(staged[kind], kind, rows, codec)
                     per_kind[kind] = {"rows": rows, "bytes": size}
-                    staged[kind] = tmp_dir
-            finally:
-                if persisted:
-                    stage.unpersist()  # a failed write must not leak the cache
-            observed = stats.get  # filled by the first write above
+            for kind in doc_kinds:
+                # same max_html_bytes truncation the parse channel
+                # applies (extraction/extract.py): side tables and
+                # parse tables must agree on which content exists, and
+                # an unbounded page must not pay 4 full-document regex
+                # scans
+                doc_splitters[kind](
+                    docs.withColumn(
+                        "html", F.substring(F.col("html"), 1, int(max_html_bytes))
+                    )
+                ).write.mode("overwrite").parquet(staged[kind])
+                rows, size = _footer_metrics(staged[kind])
+                per_kind[kind] = {"rows": rows, "bytes": size}
+            observed = stats.get  # filled by the first job above
             if fail:
                 raise RuntimeError(
                     f"injected failure between write and rename on {unit}"
@@ -607,7 +613,7 @@ def run_extraction_job(
                 bytes_out=primary["bytes"],
                 input_snapshot_id=lineage,
                 wall_ms=int((time.time() - t0) * 1000),
-                outputs=per_kind,
+                outputs={kind: per_kind[kind] for kind in emit},
             )
         finally:
             lock.release(unit)
@@ -627,7 +633,7 @@ def run_extraction_job(
         errors.extend(e for f in finished if (e := f.exception()) is not None)
 
     with ThreadPoolExecutor(UNITS_IN_FLIGHT) as pool:
-        for unit, unit_input, bucket, lineage in todo:
+        for unit, table, bucket, lineage in todo:
             reap(block=len(running) >= UNITS_IN_FLIGHT)
             # a failure stops dispatch; so does an injected crash, which
             # counts started units
@@ -647,7 +653,7 @@ def run_extraction_job(
             # the other's jobs
             run = inheritable_thread_target(spark)(run_unit)
             running.add(pool.submit(
-                run, unit, unit_input, bucket, lineage, started == fail_before_commit
+                run, unit, table, bucket, lineage, started == fail_before_commit
             ))
             started += 1
         while running:  # drain: in-flight units still commit

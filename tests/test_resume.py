@@ -910,12 +910,12 @@ def _ledger_stats(ledger_path: str) -> dict[str, tuple[int, int]]:
 
 
 def test_ledger_stats_ride_the_first_write(spark, spark_jobs, bucketed_input, tmp_path):
-    """rows_in/bytes_in come from the bucket's first write, not from a
-    separate aggregate: three stage tables cost at most 4 Spark jobs per
-    bucket, and the ledger still equals an independent agg of the input.
-    Each of the three kinds is one write per bucket, so at least 3 jobs
-    per bucket carry the caller's job group, from whichever thread runs
-    the bucket."""
+    """rows_in/bytes_in ride the bucket's one job, not a separate
+    aggregate, and the ledger still equals an independent agg of the
+    input. A run reads the table once (one schema-inference job), then
+    each bucket is ONE Spark job that writes all three stage tables;
+    every job carries the caller's job group, from whichever thread
+    runs the bucket."""
     out = str(tmp_path / "out")
     ledger_path = str(tmp_path / "ledger")
     emit = ("words", "extracted", "removals")
@@ -924,10 +924,31 @@ def test_ledger_stats_ride_the_first_write(spark, spark_jobs, bucketed_input, tm
             spark, bucketed_input, out, ledger_path, emit=emit
         ),
     )
-    assert 3 * N_BUCKETS <= jobs <= 4 * N_BUCKETS, f"{jobs} Spark jobs for {N_BUCKETS} buckets"
+    assert jobs == 1 + N_BUCKETS, f"{jobs} Spark jobs for {N_BUCKETS} buckets"
     want = _input_stats(spark.read.parquet(bucketed_input), N_BUCKETS)
     assert all(rows > 0 for rows, _ in want.values())
     assert _ledger_stats(ledger_path) == want
+
+
+def test_one_read_of_each_table_dir_per_run(spark, spark_jobs, dated_input, tmp_path):
+    """A crawl-date table is read once per date dir, not once per unit:
+    D reads plus one job per (date, bucket) unit for the stage kinds,
+    and one more write per unit for each doc-level kind. A resumed run
+    that skips every unit reads nothing."""
+    from fusus_spark.sources.ledger import list_crawl_dates
+
+    n_dates = len(list_crawl_dates(dated_input))
+    n_units = n_dates * N_BUCKETS
+    for emit, per_unit in ((("words", "removals"), 1), (("extracted", "pagemeta"), 2)):
+        out = str(tmp_path / ("out-" + "-".join(emit)))
+        ledger_path = str(tmp_path / ("ledger-" + "-".join(emit)))
+
+        def run():
+            run_extraction_job(spark, dated_input, out, ledger_path, emit=emit)
+
+        assert spark_jobs(run) == n_dates + per_unit * n_units, emit
+        assert len(Ledger(ledger_path).rows()) == n_units
+        assert spark_jobs(run) == 0, emit
 
 
 def test_ledger_stats_empty_bucket_and_doc_level_emit(spark, bucketed_input, tmp_path):
@@ -1028,9 +1049,10 @@ def test_units_in_flight_carry_their_own_job_names(spark, monkeypatch, tmp_path)
     assert seen == {f"bucket={k}": (f"extract:bucket={k}", "yes") for k in range(2)}
 
     store = sc._jsc.sc().statusStore()
-    described = set()
+    described = []
     for job in sc.statusTracker().getJobIdsForGroup(group):
         info = store.job(job)
         assert tag in info.jobTags().mkString("\n").split("\n")
-        described.add(info.description().get())
-    assert described == {"extract:bucket=0", "extract:bucket=1"}
+        described.append(info.description().get())
+    # the table's one read runs on the caller's thread, before dispatch
+    assert sorted(described) == ["extract:bucket=0", "extract:bucket=1", "the caller's job"]
